@@ -1651,7 +1651,6 @@ def q_ols_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = apply_per_series(
         ev, kernel, "conv_id string, step int, yhat double",
         order_col=["ts", "event_id"],
-        batch_buckets=64,
     )
     return out.select(
         F.col("conv_id").cast("bigint").alias("user_id"), "step", "yhat"
@@ -1887,6 +1886,15 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         break
     if mx is None:  # stats-less files: fall back to the Spark aggregation
         mx = ev_ntz.agg(F.max("ts")).collect()[0][0]
+    if mx is None:  # no events: no window to close, nothing to emit
+        shutil.rmtree(tmp, ignore_errors=True)
+        uid, val = (ev_ntz.schema[c].dataType.simpleString() for c in ("user_id", "value"))
+        return spark.createDataFrame(
+            [],
+            f"user_id {uid}, bucket_start timestamp_ntz, n_events bigint, "
+            f"value_sum double, value_min {val}, value_max {val}, "
+            f"first_value {val}, last_value {val}, value_avg double",
+        )
     # Sentinel keeps the FILE schema (ts TIMESTAMP_NTZ); the instant math is
     # identical under the UTC-pinned session. Written via pyarrow directly —
     # one row, no Spark job.

@@ -247,7 +247,6 @@ def tune_per_series(
     patience: int = 2,
     metric_specs: Sequence[MetricSpec] | None = None,
     fold_choice: str = "best",
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Grid/ladder hyperparameter search per series over expanding CV folds.
 
@@ -336,7 +335,6 @@ def tune_per_series(
         TUNE_SCHEMA,
         key=key,
         order_col=order_cols,
-        batch_buckets=batch_buckets,
     )
 
 
@@ -391,7 +389,6 @@ def tune_grid_per_series(
     key: str = "conv_id",
     order_col: str = "turn_idx",
     value_col: str = "value",
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Multi-parameter exhaustive grid search per series (reference
     ``ParameterGridHyperparameterTuning``, ``hyperparameter_tuning.py:
@@ -447,7 +444,6 @@ def tune_grid_per_series(
         TUNE_PARAMS_SCHEMA,
         key=key,
         order_col=order_cols,
-        batch_buckets=batch_buckets,
     )
 
 
@@ -466,7 +462,6 @@ def tune_ladder_per_series(
     key: str = "conv_id",
     order_col: str = "turn_idx",
     value_col: str = "value",
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Per-parameter heuristic ladders with the OTHERS FIXED — the
     reference's coordinate-descent tuner (``hyperparameter_tuning.py:
@@ -539,7 +534,6 @@ def tune_ladder_per_series(
         TUNE_PARAMS_SCHEMA,
         key=key,
         order_col=order_cols,
-        batch_buckets=batch_buckets,
     )
 
 
@@ -560,7 +554,6 @@ def cv_fit_predict(
     order_col: str = "turn_idx",
     value_col: str = "value",
     with_debug: bool = False,
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Fold replay (reference ``fit_predictCV``): per fold, fit on the train
     prefix and emit (fold, step, y, yhat) rows — the union-with-fold-column
@@ -601,5 +594,4 @@ def cv_fit_predict(
         CV_PRED_SCHEMA + ", param double, cutoff int" if with_debug else CV_PRED_SCHEMA,
         key=key,
         order_col=order_cols,
-        batch_buckets=batch_buckets,
     )

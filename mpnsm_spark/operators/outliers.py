@@ -219,7 +219,6 @@ def changepoints(
     min_distance: int = 3,
     smooth_window: int = 3,
     value_col: str = "value_avg",
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Top-k changepoints per series with a minimum bucket distance.
 
@@ -233,13 +232,6 @@ def changepoints(
     half-up-rounded to 6dp via ``floor(x·1e6 + 0.5)/1e6`` (identical float
     ops both sides), and candidate order is (score desc, position asc).
     Only the default ``smooth_window=3`` has the SQL twin.
-
-    Changepoint inputs are MANY SMALL series (one tier row per bucket), so by
-    default the kernel is bucket-batched (``batch_buckets="auto"`` →
-    2 × defaultParallelism buckets, resolved at call time): Spark pays
-    one Arrow/Python round-trip per bucket instead of per series, with
-    identical per-series results. Pass ``batch_buckets=None`` for the
-    one-group-per-series plan.
     """
     if smooth_window != 3:  # pragma: no cover - SQL twin pins the default
         raise ValueError("changepoints: only smooth_window=3 is supported")
@@ -270,5 +262,4 @@ def changepoints(
         kernel,
         CHANGEPOINT_SCHEMA,
         order_col="bucket_start",
-        batch_buckets=batch_buckets,
     )

@@ -1,4 +1,4 @@
-"""Explicit skew handling for per-conversation grouped work.
+"""Explicit skew handling and the engine's one grouped-map kernel runner.
 
 The reference load-balances only via "many series × n_jobs workers"
 (``/root/reference/mpnsm/time_series/manager.py:308-313``); one giant series
@@ -15,9 +15,13 @@ stalls a worker — the same pathology as a hot ``conv_id`` in a
    ≤ threshold rows. Results are re-merged by an associative combine
    (e.g. ``rollup.merge_partials``) — safe for all tier columns by design.
 
-Everything here is declarative Spark SQL; the only custom piece is the
-``apply_per_series`` wrapper, the engine's analog of mpnsm's per-series
-parallel fitting loop (SURVEY.md §2.10 F1).
+:func:`apply_per_series` is the engine's analog of mpnsm's per-series
+parallel fitting loop (SURVEY.md §2.10 F1) and the only place a per-series
+pandas kernel is run: the public operators and the pipeline's kernel stages
+all go through it. It owns the grouped-map policy — the sort, the null-key
+and dtype rules, error isolation by marker rows, and the choice between
+its two plan shapes: batched for unsplit input, per ``(key, sub_id)`` group
+for split input.
 """
 
 from __future__ import annotations
@@ -27,6 +31,9 @@ from collections.abc import Callable
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
 
 
 def with_salt(df: DataFrame, num_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -54,22 +61,37 @@ def fan_out(df: DataFrame, key: str, min_partitions: int | None = None) -> DataF
     shuffle is added.
 
     Laziness note: the partition-count probe uses ``df.rdd``, which under
-    AQE EXECUTES any exchange already in the plan at build time (a real
-    Spark job, re-run again at action time). So a frame whose optimized
-    plan already contains a repartition — e.g. the output of an operator
-    that fanned out internally — is returned unchanged WITHOUT probing:
-    composition stays lazy and the double-execution cannot happen. The
-    probe only runs for exchange-free plans (scans/projections), where
-    ``.rdd`` is planning-only.
+    AQE EXECUTES any exchange in the plan at build time (a real Spark job,
+    re-run again at action time). So a frame whose optimized logical plan
+    has a node that plans an exchange — a repartition, join, aggregate,
+    window or global sort — is returned unchanged WITHOUT probing:
+    composition stays lazy and the double execution cannot happen. Such a
+    frame's partitioning is already decided by that exchange. The probe only
+    runs for exchange-free plans (scans/projections), where ``.rdd`` is
+    planning-only.
     """
-    sc = df.sparkSession.sparkContext
-    n = min_partitions or sc.defaultParallelism
-    plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-    if "Repartition" in plan or "Exchange" in plan:
+    if _plans_exchange(df._jdf.queryExecution().optimizedPlan()):  # noqa: SLF001
         return df
+    n = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, F.col(key))
+
+
+def _plans_exchange(plan) -> bool:
+    """Whether a (JVM) logical plan has a node that plans a shuffle."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.startswith(("Repartition", "RebalancePartitions", "Join",
+                            "Aggregate", "Window")):
+            return True
+        if name == "Sort" and getattr(node, "global")():
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
 
 
 def conv_sizes(df: DataFrame, key: str = "conv_id") -> DataFrame:
@@ -127,15 +149,13 @@ def with_sub_splits(
     return cold.unionByName(hot_rows).drop("_is_hot")
 
 
-def _schema_column_names(output_schema) -> list[str]:
+def _as_struct(output_schema) -> StructType:
     # Parse DDL strings with the real parser: naive comma-splitting breaks on
     # types that contain commas — decimal(20,6), map<string,int>, struct<...>
     # (ADVICE r3).
     if isinstance(output_schema, str):
-        from pyspark.sql.types import StructType
-
-        return StructType.fromDDL(output_schema).fieldNames()
-    return [f.name for f in output_schema.fields]
+        return StructType.fromDDL(output_schema)
+    return output_schema
 
 
 def apply_per_series(
@@ -146,107 +166,82 @@ def apply_per_series(
     key: str = "conv_id",
     order_col: str = "turn_idx",
     on_error: str = "raise",
-    error_acc=None,
-    batch_buckets: int | str | None = None,
 ) -> DataFrame:
-    """Run a pandas kernel once per conversation — mpnsm's flagship operator
-    (per-series joblib loop → ``groupBy(conv_id).applyInPandas``).
+    """Run a pandas kernel once per series — mpnsm's flagship operator (the
+    per-series joblib loop, ``manager.py:308-313``) and the engine's ONLY
+    grouped-map runner.
 
-    ``fn`` receives the group's rows sorted by ``order_col`` and must return a
-    DataFrame matching ``output_schema`` **plus carry the key column through**.
-    With ``split_threshold``, hot conversations are sub-split and ``fn`` runs
-    per (conv, sub-range) — only safe when the caller's downstream re-merge is
-    associative (tier rollups are; arbitrary kernels may not be).
+    ``fn`` receives one series' rows sorted by ``order_col`` (a column name
+    or a list of them) and must return a frame matching ``output_schema``
+    that carries the key column through. Null keys form a series of their
+    own. Zero-row results are dropped before the batch concat, so an empty
+    series never upcasts the dtypes of the others.
 
-    Per-series error isolation (reference: a failed series returns an empty
-    frame instead of failing the job, ``/root/reference/mpnsm/time_series/
-    deprecated/ts_model.py:1258-1260``): with ``on_error="skip"`` a kernel
-    exception yields an empty result for that series only; pass an
-    ``error_acc`` (``spark.sparkContext.accumulator(0)``) to count poisoned
-    series so the driver can emit ``status='error'`` lineage rows.
+    Two plan shapes, chosen by the input:
 
-    ``batch_buckets`` amortizes the per-group Arrow/Python round-trip for
-    workloads of MANY SMALL series (applyInPandas pays one Arrow transfer and
-    one Python invocation per group — pure overhead when groups are tiny):
-    the shuffle key becomes ``pmod(xxhash64(key), batch_buckets)`` and the
-    kernel wrapper loops series inside one batch with a pandas groupby, so
-    per-series semantics (sort by ``order_col``, per-series error isolation,
-    null-key groups) are preserved exactly while Python is invoked
-    ~#series/batch_buckets times less. Pass the string ``"auto"`` (the public
-    operators' default) to derive ``2 × defaultParallelism`` at call time —
-    a hardcoded count would cap grouped-map parallelism on large clusters
-    (ADVICE r4); 2× leaves headroom for the ~1/e empty-partition rate hash
-    collisions produce at B≈#tasks. Mutually exclusive with
-    ``split_threshold`` (hot-series splitting implies groups are big, the
-    opposite regime).
+    - **batched** (no ``split_threshold``): rows are hash-spread over
+      ``2 × defaultParallelism`` batches, ``pmod(xxhash64(key), n)``, and the
+      wrapper loops the series of one batch with a pandas groupby. Python is
+      invoked once per batch instead of once per series (the
+      invocation-amortising argument of *Accelerating Python UDFs in
+      Vectorized Query Execution*, CIDR 2022). The explicit
+      ``repartition(n)`` is exempt from AQE coalescing, which would otherwise
+      squeeze the byte-small shuffle onto 1-2 tasks; 2× the cores leaves
+      headroom for the ~1/e empty buckets hash collisions produce. The helper
+      ``_batch_id`` column never reaches ``fn``.
+    - **split** (``split_threshold`` set): hot series are sub-split by
+      :func:`with_sub_splits` and ``fn`` runs once per ``(key, sub_id)``
+      group, so no group exceeds the threshold. Only safe when the caller
+      re-merges the kernel's output associatively (tier rollups do).
+
+    Per-series error isolation (reference: a failed series must not fail
+    the job, ``deprecated/ts_model.py:1258-1260``): ``on_error="raise"``
+    propagates the kernel's exception; ``on_error="mark"`` appends
+    ``_status``/``_error`` columns to ``output_schema`` and turns a failing
+    series into ONE marker row — the key, nulls elsewhere,
+    ``_status='error'`` and the exception class in ``_error`` — while good
+    rows carry ``_status='ok'``. The marker rows are part of the result, so
+    counts stay exact however often Spark evaluates or retries the plan.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    empty_cols = _schema_column_names(output_schema)
+    if on_error not in ("raise", "mark"):
+        raise ValueError(f"on_error must be 'raise' or 'mark', got {on_error!r}")
+    schema = _as_struct(output_schema)
+    if on_error == "mark":
+        schema = StructType(
+            [*schema.fields, StructField("_status", StringType()),
+             StructField("_error", StringType())]
+        )
+    cols = schema.fieldNames()
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
-
+    def run_series(g: pd.DataFrame) -> pd.DataFrame:
         tame_arrow_threads()
         try:
-            return fn(pdf.sort_values(order_col).reset_index(drop=True))
-        except Exception:
+            out = fn(g.sort_values(order_col).reset_index(drop=True))
+            return out.assign(_status="ok", _error=None) if on_error == "mark" else out
+        except Exception as e:  # noqa: BLE001 — the isolation contract
             if on_error == "raise":
                 raise
-            if error_acc is not None:
-                error_acc.add(1)
-            return pd.DataFrame(columns=empty_cols)
+            marker = {c: [None] for c in cols}
+            marker[key] = [g[key].iloc[0]]
+            marker["_status"] = ["error"]
+            marker["_error"] = [type(e).__name__]
+            return pd.DataFrame(marker)
 
-    if batch_buckets == "auto":
-        batch_buckets = 2 * df.sparkSession.sparkContext.defaultParallelism
-    if batch_buckets is not None:
-        if split_threshold is not None:
-            raise ValueError("batch_buckets and split_threshold are exclusive")
+    def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        outs = []
+        for _, g in pdf.drop(columns=["_batch_id"]).groupby(key, sort=False, dropna=False):
+            r = run_series(g)
+            if len(r):
+                outs.append(r)
+        return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(columns=cols)
 
-        def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
-
-            tame_arrow_threads()
-            # dropna=False: pandas groupby silently drops null-key groups by
-            # default, but the non-batched Spark groupBy(key) path DOES run
-            # the kernel on the null group — keep the two paths semantically
-            # identical (ADVICE r4). The helper _batch_id column is dropped
-            # before the kernel sees the group, so fn receives exactly the
-            # columns the non-batched path would pass.
-            pdf = pdf.drop(columns=["_batch_id"])
-            outs = []
-            for _, g in pdf.groupby(key, sort=False, dropna=False):
-                try:
-                    r = fn(g.sort_values(order_col).reset_index(drop=True))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    if error_acc is not None:
-                        error_acc.add(1)
-                    continue
-                if len(r):  # zero-row frames would upcast dtypes in concat
-                    outs.append(r)
-            if not outs:
-                return pd.DataFrame(columns=empty_cols)
-            return pd.concat(outs, ignore_index=True)
-
-        batched = df.withColumn(
-            "_batch_id",
-            F.pmod(F.xxhash64(F.col(key)), F.lit(batch_buckets)).cast("int"),
-        )
-        # Explicit repartition(batch_buckets): the grouped-map stage's input
-        # is usually SMALL in bytes but expensive per row in Python, and AQE
-        # coalesces small shuffles down to 1-2 partitions — serializing every
-        # kernel call. A user-specified partition count is exempt from AQE
-        # coalescing, and groupBy reuses the hash distribution (no second
-        # exchange).
-        return (
-            batched.repartition(batch_buckets, "_batch_id")
-            .groupBy("_batch_id")
-            .applyInPandas(run_batch, output_schema)
-        )
-
-    if split_threshold is None:
-        return df.groupBy(key).applyInPandas(run, output_schema)
-    sub = with_sub_splits(df, split_threshold, key=key, order_col=order_col)
-    return sub.groupBy(key, "sub_id").applyInPandas(run, output_schema).drop("sub_id")
+    if split_threshold is not None:
+        sub = with_sub_splits(df, split_threshold, key=key, order_col=order_col)
+        return sub.groupBy(key, "sub_id").applyInPandas(run_series, schema).drop("sub_id")
+    n = 2 * df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.withColumn("_batch_id", F.pmod(F.xxhash64(F.col(key)), F.lit(n)).cast("int"))
+        .repartition(n, "_batch_id")
+        .groupBy("_batch_id")
+        .applyInPandas(run_batch, schema)
+    )

@@ -69,7 +69,7 @@ from mpnsm_spark.generator import with_value
 from mpnsm_spark.operators.gapfill import gapfill_anchored
 from mpnsm_spark.operators.gorilla import encode_tier_chunks
 from mpnsm_spark.operators.rollup import cascade, rollup_encoded, rollup_raw
-from mpnsm_spark.operators.skew import with_salt
+from mpnsm_spark.operators.skew import apply_per_series, with_salt
 from mpnsm_spark.sources.tableio import TableIO
 
 LINEAGE_TABLE = "lineage"
@@ -621,11 +621,11 @@ def run_kernel_stage(
 
     Resume reprocesses ONLY buckets without an ok row — i.e. exactly the
     errored (or never-run) buckets; clean buckets keep their committed
-    snapshots. Everything is one distributed applyInPandas pass; the error
-    channel rides in two extra columns, no accumulator races, no second job.
+    snapshots. Everything is one distributed pass of
+    :func:`~mpnsm_spark.operators.skew.apply_per_series` with
+    ``on_error="mark"``; the error channel rides in its two marker columns,
+    no accumulator races, no second job.
     """
-    import pandas as pd
-
     cfg = cfg or PipelineConfig()
     t0 = time.time()
     spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
@@ -649,81 +649,15 @@ def run_kernel_stage(
     salted = src if "bucket_id" in src.columns else with_salt(src, cfg.num_buckets, key=key)
     if len(remaining) < cfg.num_buckets:
         salted = salted.filter(F.col("bucket_id").isin([int(b) for b in remaining]))
-    # Real DDL parse — comma-splitting breaks on decimal(20,6)/map/struct
-    # types and then the error-isolation marker frame itself mismatches the
-    # schema (ADVICE r3).
-    from mpnsm_spark.operators.skew import _schema_column_names
-
-    out_cols = _schema_column_names(stage.output_schema)
-    aug_schema = stage.output_schema + ", _status string, _error string"
-    fn, order_col = stage.fn, stage.order_col
-    if stage.split_threshold is not None:
-        from mpnsm_spark.operators.skew import with_sub_splits
-
-        salted = with_sub_splits(
-            salted.drop("bucket_id"),
-            stage.split_threshold,
-            key=key,
-            order_col=order_col,
-        )
-        salted = with_salt(salted, cfg.num_buckets, key=key)
-
-    def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
-
-        tame_arrow_threads()
-        k = pdf[key].iloc[0]
-        try:
-            out = fn(pdf.sort_values(order_col).reset_index(drop=True))
-            out = out.copy()
-            out["_status"] = "ok"
-            out["_error"] = None
-            return out
-        except Exception as e:  # noqa: BLE001 — the isolation contract
-            marker = {c: [None] for c in out_cols}
-            marker[key] = [k]
-            marker["_status"] = ["error"]
-            marker["_error"] = [type(e).__name__]
-            return pd.DataFrame(marker)
-
-    if stage.split_threshold is None:
-        # Batch-bucketed grouped map (skew.apply_per_series pattern): a plain
-        # groupBy(key).applyInPandas shuffle is small in BYTES, so AQE
-        # coalesces it to 1-2 partitions and every per-series kernel call
-        # serializes on one task while paying a per-group Arrow round-trip
-        # (measured 5-7x the batched plan on many-small-series inputs). The
-        # explicit repartition is exempt from AQE coalescing; the wrapper
-        # loops series inside each batch with identical per-series semantics
-        # (sort by order_col, per-series error markers, null-key groups).
-        n_batches = 2 * spark.sparkContext.defaultParallelism
-
-        def wrapped_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.drop(columns=["_batch_id"])
-            outs = []
-            for _, g in pdf.groupby(key, sort=False, dropna=False):
-                r = wrapped(g)
-                if len(r):  # zero-row frames would upcast dtypes in concat
-                    outs.append(r)
-            if not outs:
-                return pd.DataFrame(columns=[*out_cols, "_status", "_error"])
-            return pd.concat(outs, ignore_index=True)
-
-        out = (
-            salted.drop("bucket_id")
-            .withColumn(
-                "_batch_id",
-                F.pmod(F.xxhash64(F.col(key)), F.lit(n_batches)).cast("int"),
-            )
-            .repartition(n_batches, "_batch_id")
-            .groupBy("_batch_id")
-            .applyInPandas(wrapped_batch, aug_schema)
-        )
-    else:
-        out = (
-            salted.drop("bucket_id")
-            .groupBy(key, "sub_id")
-            .applyInPandas(wrapped, aug_schema)
-        )
+    out = apply_per_series(
+        salted.drop("bucket_id"),
+        stage.fn,
+        stage.output_schema,
+        split_threshold=stage.split_threshold,
+        key=key,
+        order_col=stage.order_col,
+        on_error="mark",
+    )
     if cfg.ephemeral:
         # One-shot mode: same kernel, same per-series error isolation (error
         # marker rows drop out), but the output frame goes straight back to

@@ -49,7 +49,7 @@ def test_fit_persist_reload_bitwise(spark, series_df, tmp_path):
     """fit → persist → reload → predictions are BIT-identical to both the
     in-memory fitted state and an independent local refit."""
     tio = TableIO(str(tmp_path / "wh"))
-    states = fit_model_states(series_df, MODEL_KWARGS, batch_buckets=2)
+    states = fit_model_states(series_df, MODEL_KWARGS)
     v = save_model_states(tio, states, "models")
     assert v == 1
 

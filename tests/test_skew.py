@@ -1,12 +1,16 @@
 """Skew machinery: salt buckets, hot-key sub-splitting, per-series kernel."""
 
+from collections import Counter
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from mpnsm_spark.operators.rollup import merge_partials, rollup_raw
 from mpnsm_spark.operators.skew import (
     apply_per_series,
     conv_sizes,
+    fan_out,
     with_salt,
     with_sub_splits,
 )
@@ -50,13 +54,13 @@ def test_sub_splits_timestamp_order_col(transcripts):
 
 def test_schema_column_names_commas_in_types(spark):
     """DDL parsing must survive comma-bearing types (ADVICE r3)."""
-    from mpnsm_spark.operators.skew import _schema_column_names
+    from mpnsm_spark.operators.skew import _as_struct
 
     ddl = (
         "conv_id string, amt decimal(20,6), props map<string,int>, "
         "s struct<a:int,b:string>"
     )
-    assert _schema_column_names(ddl) == ["conv_id", "amt", "props", "s"]
+    assert _as_struct(ddl).fieldNames() == ["conv_id", "amt", "props", "s"]
 
 
 def test_per_series_kernel_with_split_matches_unsplit(spark, transcripts):
@@ -97,12 +101,25 @@ def test_split_rollup_remerge(transcripts):
     compare_frames(merged, full, ["conv_id", "bucket_start"], float_cols=FLOATS)
 
 
+def _pandas_reference(df, kern, key="conv_id", order_col="turn_idx"):
+    """Driver-side per-series reference: the kernel over each series of the
+    collected frame, null keys included."""
+    outs = [
+        kern(g.sort_values(order_col).reset_index(drop=True))
+        for _, g in df.toPandas().groupby(key, dropna=False)
+    ]
+    return pd.concat(outs, ignore_index=True)
+
+
+def _rows(pdf: pd.DataFrame) -> Counter:
+    """Row multiset, nulls as None."""
+    return Counter(
+        tuple(None if pd.isna(v) else v for v in r) for r in pdf.itertuples(index=False)
+    )
+
+
 def test_batch_buckets_matches_per_series(spark, transcripts):
-    """Bucket-batched kernels must emit exactly the per-series results."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """The batched runner emits exactly the per-series results."""
     df = transcripts.select("conv_id", "turn_idx", "value")
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -115,52 +132,122 @@ def test_batch_buckets_matches_per_series(spark, transcripts):
         )
 
     schema = "conv_id string, n bigint, first_v double"
-    plain = apply_per_series(df, kern, schema).orderBy("conv_id").collect()
-    batched = (
-        apply_per_series(df, kern, schema, batch_buckets=4)
-        .orderBy("conv_id")
-        .collect()
-    )
-    assert plain == batched
+    got = apply_per_series(df, kern, schema).toPandas()
+    want = _pandas_reference(df, kern)
+    assert len(want) == df.select("conv_id").distinct().count()
+    assert _rows(got) == _rows(want)
 
 
 def test_batch_buckets_error_isolation(spark, transcripts):
-    """on_error='skip' must poison only the failing series inside a batch."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """on_error='mark' turns only the failing series inside a batch into ONE
+    marker row naming the key and the exception class; 'raise' propagates."""
     df = transcripts.select("conv_id", "turn_idx", "value")
     poison = df.select("conv_id").distinct().orderBy("conv_id").first()[0]
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["conv_id"].iloc[0] == poison:
-            raise RuntimeError("boom")
+            raise RuntimeError("poison series")
+        return pd.DataFrame({"conv_id": [pdf["conv_id"].iloc[0]], "n": [len(pdf)]})
+
+    out = apply_per_series(df, kern, "conv_id string, n bigint", on_error="mark")
+    assert out.columns == ["conv_id", "n", "_status", "_error"]
+    rows = out.collect()
+    errors = [r for r in rows if r["_status"] == "error"]
+    assert [(r["conv_id"], r["n"], r["_error"]) for r in errors] == [
+        (poison, None, "RuntimeError")
+    ]
+    ok = [r["conv_id"] for r in rows if r["_status"] == "ok"]
+    everyone = {r[0] for r in df.select("conv_id").distinct().collect()}
+    assert sorted(ok) == sorted(everyone - {poison})
+    assert all(r["_error"] is None for r in rows if r["_status"] == "ok")
+
+    with pytest.raises(Exception, match="poison"):
+        apply_per_series(df, kern, "conv_id string, n bigint").count()
+    with pytest.raises(ValueError, match="on_error"):
+        apply_per_series(df, kern, "conv_id string, n bigint", on_error="skip")
+
+
+def test_mark_counts_exact_under_reexecution(spark, transcripts):
+    """Marker rows are data, not a side channel: evaluating the same plan
+    twice reads exactly one error both times (an accumulator updated inside
+    the transformation would read 2 after the second action)."""
+    df = transcripts.select("conv_id", "turn_idx", "value")
+    poison = df.select("conv_id").distinct().orderBy("conv_id").first()[0]
+
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        if pdf["conv_id"].iloc[0] == poison:
+            raise RuntimeError("poison series")
         return pd.DataFrame({"conv_id": [pdf["conv_id"].iloc[0]]})
 
-    acc = spark.sparkContext.accumulator(0)
-    out = apply_per_series(
-        df,
-        kern,
-        "conv_id string",
-        batch_buckets=4,
-        on_error="skip",
-        error_acc=acc,
-    ).collect()
-    got = {r[0] for r in out}
-    everyone = {r[0] for r in df.select("conv_id").distinct().collect()}
-    assert got == everyone - {poison}
-    assert acc.value == 1
+    out = apply_per_series(df, kern, "conv_id string", on_error="mark")
+    errors = out.filter(F.col("_status") == "error")
+    assert errors.count() == 1
+    assert [r["conv_id"] for r in errors.collect()] == [poison]
+
+
+RETRY_SCRIPT = """
+import os
+import sys
+
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from mpnsm_spark.operators.skew import apply_per_series
+
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    .getOrCreate()
+)
+df = spark.createDataFrame(
+    [(f"s{i:02d}", t, float(t)) for i in range(20) for t in range(5)],
+    "conv_id string, turn_idx int, value double",
+)
+
+
+def kern(pdf):
+    if pdf["conv_id"].iloc[0] == "s07":
+        if TaskContext.get().attemptNumber() == 0:
+            os._exit(1)  # the Python worker dies; Spark retries the task
+        raise RuntimeError("poison series")
+    return pd.DataFrame({"conv_id": [pdf["conv_id"].iloc[0]], "n": [len(pdf)]})
+
+
+out = apply_per_series(df, kern, "conv_id string, n long", on_error="mark")
+counts = {r[0]: r[1] for r in out.groupBy("_status").count().collect()}
+print("COUNTS", counts.get("ok", 0), counts.get("error", 0))
+spark.stop()
+"""
+
+
+def test_mark_counts_exact_after_worker_crash_retry(tmp_path):
+    """A Python worker killed mid-task on its first attempt is retried
+    (local[2,2] allows one retry); the retried task's marker and ok rows are
+    counted exactly once."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_DRIVER_MEMORY": "1g"}
+    script = tmp_path / "retry.py"
+    script.write_text(RETRY_SCRIPT)
+    proc = subprocess.run(
+        [sys.executable, str(script)], env=env, cwd=root,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "COUNTS 19 1" in proc.stdout, proc.stdout[-2000:]
 
 
 def test_batch_buckets_null_key_and_clean_columns(spark):
-    """ADVICE r4: the batched path must (a) run the kernel on null-key groups
-    exactly like the non-batched Spark groupBy path does, and (b) never leak
-    the _batch_id helper column into the kernel's input frame."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """ADVICE r4: the batched runner must (a) run the kernel on null-key
+    groups, like a Spark groupBy(key) does, and (b) never leak the _batch_id
+    helper column into the kernel's input frame."""
     df = spark.createDataFrame(
         [("a", 0, 1.0), ("a", 1, 2.0), (None, 0, 5.0), (None, 1, 7.0)],
         "conv_id string, turn_idx int, value double",
@@ -176,32 +263,47 @@ def test_batch_buckets_null_key_and_clean_columns(spark):
         )
 
     schema = "conv_id string, vsum double"
-    plain = {
-        (r["conv_id"], r["vsum"])
-        for r in apply_per_series(df, kern, schema).collect()
-    }
-    batched = {
-        (r["conv_id"], r["vsum"])
-        for r in apply_per_series(df, kern, schema, batch_buckets=4).collect()
-    }
-    assert plain == batched == {("a", 3.0), (None, 12.0)}
+    batched = _rows(apply_per_series(df, kern, schema).toPandas())
+    reference = _rows(_pandas_reference(df, kern))
+    assert batched == reference == Counter({("a", 3.0): 1, (None, 12.0): 1})
 
 
 def test_batch_buckets_auto_resolves(spark, transcripts):
-    """batch_buckets='auto' derives 2×defaultParallelism at call time and
-    produces per-series-identical results."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """The unsplit runner always plans 2×defaultParallelism batches, resolved
+    at call time, and produces per-series-identical results."""
     df = transcripts.select("conv_id", "turn_idx", "value")
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({"conv_id": [pdf["conv_id"].iloc[0]], "n": [len(pdf)]})
 
     schema = "conv_id string, n bigint"
-    auto = apply_per_series(df, kern, schema, batch_buckets="auto")
-    # the resolved bucket count shows up as the shuffle partition count
-    assert auto.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
-    plain = apply_per_series(df, kern, schema).orderBy("conv_id").collect()
-    assert auto.orderBy("conv_id").collect() == plain
+    out = apply_per_series(df, kern, schema)
+    # the bucket count shows up as the shuffle partition count
+    assert out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
+    assert _rows(out.toPandas()) == _rows(_pandas_reference(df, kern))
+
+
+def test_fan_out_keeps_exchange_plans_lazy(spark):
+    """fan_out must not run a job at build time: a joined, aggregated,
+    windowed or globally sorted frame already plans an exchange, so it is returned unchanged without the
+    ``df.rdd`` partition probe (ADVICE r6: the old probe matched the
+    logical-plan STRING for "Exchange", which logical plans never contain,
+    and executed the join/aggregate exchanges at build time)."""
+    from pyspark.sql import Window
+
+    rows = spark.range(1000).selectExpr("cast(id % 37 as string) AS conv_id", "id")
+    aggregated = conv_sizes(rows)
+    joined = rows.join(aggregated, "conv_id")
+    ranked = rows.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("conv_id").orderBy("id"))
+    )
+    sc = spark.sparkContext
+    for i, frame in enumerate((joined, aggregated, ranked, rows.orderBy("id"))):
+        group = f"fan_out_probe_{i}"
+        sc.setJobGroup(group, "fan_out build-time probe")
+        try:
+            out = fan_out(frame, key=frame.columns[0])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert out is frame

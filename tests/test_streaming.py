@@ -402,3 +402,44 @@ def test_streaming_cascade_requires_vocab(spark):
         streaming_cascade(None, to_tier="1d", tool_vocab=None)
     with pytest.raises(ValueError, match="to_tier"):
         streaming_cascade(None, to_tier="1w", tool_vocab=["a"])
+
+
+def test_streaming_row_empty_events(spark, tmp_path):
+    """The ``__spark_entry__`` streaming row on an EMPTY events table returns
+    an empty frame with the row's schema (ADVICE r6: ``mx`` was None and the
+    sentinel timestamp math raised TypeError)."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+
+    events = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([dt.datetime(2024, 1, 1, 0, 5)] * 2, pa.timestamp("us")),
+            "user_id": pa.array([7, 7], pa.int64()),
+            "event_type": ["a", "b"],
+            "value": [1.0, 2.0],
+            "props": [None, None],
+        }
+    )
+    for name, table in (("full", events), ("empty", events.slice(0, 0))):
+        (tmp_path / name).mkdir()
+        pq.write_table(table, tmp_path / name / "events.parquet")
+    got = entrymod.q_streaming_rollup_1h(spark, str(tmp_path / "empty"))
+    assert got.count() == 0
+    full = entrymod.q_streaming_rollup_1h(spark, str(tmp_path / "full"))
+    assert full.count() == 1
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'empty' / 'events.parquet'}')"
+    )
+    want = con.sql(entrymod.oracle_sql()["streaming_rollup_1h"]).df()
+    assert len(want) == 0 and list(want.columns) == got.columns

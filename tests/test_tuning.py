@@ -102,12 +102,10 @@ def test_cv_fit_predict_fold_replay(spark, series_df):
 
 
 def test_per_series_error_isolation(spark, series_df):
-    """A poison series fails alone: on_error='skip' completes the job, the
-    accumulator counts the failure, healthy series are untouched
-    (reference deprecated/ts_model.py:1258-1260)."""
+    """A poison series fails alone: on_error='mark' completes the job with
+    ONE error marker row naming the series and exception class; healthy
+    series are untouched (reference deprecated/ts_model.py:1258-1260)."""
     from mpnsm_spark.operators.skew import apply_per_series
-
-    acc = spark.sparkContext.accumulator(0)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["conv_id"].iloc[0] == "s007":
@@ -120,12 +118,13 @@ def test_per_series_error_isolation(spark, series_df):
         series_df,
         kernel,
         "conv_id string, n long",
-        on_error="skip",
-        error_acc=acc,
+        on_error="mark",
     ).toPandas()
-    assert acc.value == 1
-    assert "s007" not in set(out["conv_id"])
-    assert len(out) == 59
+    err = out[out["_status"] == "error"]
+    assert err[["conv_id", "_error"]].values.tolist() == [["s007", "RuntimeError"]]
+    ok = out[out["_status"] == "ok"]
+    assert "s007" not in set(ok["conv_id"])
+    assert len(ok) == ok["conv_id"].nunique() == 59
 
     with pytest.raises(Exception, match="poison"):
         apply_per_series(series_df, kernel, "conv_id string, n long").count()
