@@ -1834,6 +1834,8 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from mpnsm_spark.session import local_frame
+
     cols = ["user_id", "ts", "event_id", "event_type", "value"]
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     tmp = tempfile.mkdtemp(prefix="stream_row_", dir=shm)
@@ -1889,7 +1891,8 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     if mx is None:  # no events: no window to close, nothing to emit
         shutil.rmtree(tmp, ignore_errors=True)
         uid, val = (ev_ntz.schema[c].dataType.simpleString() for c in ("user_id", "value"))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"user_id {uid}, bucket_start timestamp_ntz, n_events bigint, "
             f"value_sum double, value_min {val}, value_max {val}, "

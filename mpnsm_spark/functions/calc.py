@@ -17,10 +17,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mpnsm_spark.functions.arrowcfg import init_python_worker
+
 
 def calc_column_udf(fn: Callable[[pd.Series], pd.Series], return_type: str = "double"):
     """Wrap a pandas Series→Series function as an Arrow-vectorized UDF."""
-    return F.pandas_udf(fn, return_type)
+
+    def run(s: pd.Series) -> pd.Series:
+        init_python_worker()
+        return fn(s)
+
+    return F.pandas_udf(run, return_type)
 
 
 def with_calc_columns(

@@ -202,9 +202,9 @@ def predict_from_states(states: DataFrame, horizon: int) -> DataFrame:
     cols = ["conv_id", "target", "step", "yhat"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
         for pdf in batches:
             outs = []
             for rec in pdf.to_dict("records"):

@@ -406,9 +406,9 @@ def simhash_buckets(
     id_type = dict(df.dtypes)[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
         shifts = np.arange(64, dtype=np.uint64)
         cache: dict[str, int] = {}
         for pdf in batches:

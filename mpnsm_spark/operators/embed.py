@@ -79,9 +79,9 @@ def embed_text(
         raise ValueError("the hashing stub derives slots from one hex nibble; dim <= 16")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
         for pdf in batches:
             if strict:
                 raise NotImplementedError(

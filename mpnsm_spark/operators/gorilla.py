@@ -540,9 +540,9 @@ def encode_tier_chunks(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
 
         def secs(b: "pa.RecordBatch") -> np.ndarray:
             # timestamp[us] → int64 epoch seconds
@@ -652,9 +652,9 @@ def decode_chunks(chunk_df: DataFrame) -> DataFrame:
     no shuffle, runs wherever the chunks are."""
 
     def expand(batches):
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mpnsm_spark.session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -54,7 +56,7 @@ def synthesize_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
                 h * 4,
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_decode(payload: bytes, out_len: int) -> np.ndarray:
@@ -79,9 +81,9 @@ def extract_features(df: DataFrame, strict: bool = False) -> DataFrame:
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
         for pdf in batches:
             if strict:
                 raise NotImplementedError(
@@ -108,9 +110,9 @@ def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     expansion; frame payloads stubbed as digests of (payload, offset))."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+        from mpnsm_spark.functions.arrowcfg import init_python_worker
 
-        tame_arrow_threads()
+        init_python_worker()
         for pdf in batches:
             out = {"media_id": [], "frame_ms": [], "frame_digest": []}
             vids = pdf[pdf["kind"] == "video"]

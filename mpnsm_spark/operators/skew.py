@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
+from mpnsm_spark.functions.arrowcfg import init_python_worker
 
 
 def with_salt(df: DataFrame, num_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -214,7 +214,7 @@ def apply_per_series(
     cols = schema.fieldNames()
 
     def run_series(g: pd.DataFrame) -> pd.DataFrame:
-        tame_arrow_threads()
+        init_python_worker()
         try:
             out = fn(g.sort_values(order_col).reset_index(drop=True))
             return out.assign(_status="ok", _error=None) if on_error == "mark" else out

@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 
 from mpnsm_spark.operators.config import resolve_config, semi_join_units
 from mpnsm_spark.plans.pipeline import KernelStage, PipelineConfig, run_kernel_stage
+from mpnsm_spark.session import local_frame
 from mpnsm_spark.sources.tableio import TableIO
 
 __all__ = ["run_manager", "load_config", "resolve_unit_configs"]
@@ -139,7 +140,7 @@ def resolve_unit_configs(
             )
         schema = ", ".join(f"`{k}` string" for k in keys)
         schema = (schema + ", " if schema else "") + "targets_json string, horizon int"
-        lvl = spark.createDataFrame(rows, schema).withColumn(_ROOT, F.lit(1))
+        lvl = local_frame(spark, rows, schema).withColumn(_ROOT, F.lit(1))
         level_tables.append(([*keys, _ROOT], lvl))
     # Coverage is asserted on targets only: horizon is allowed to stay null
     # (run_manager defaults it), so resolve_config's all-fields check would
@@ -344,11 +345,14 @@ def run_manager(
         g_df = semi_join_units(df, g_units, group_columns).withColumn(
             "_unit_id", unit_id
         )
+        g_ids = g_units.select(unit_id.alias("_unit_id"))
         horizon_default = int(horizon) if horizon is not None else 10
         for spec in targets:
-            tasks.append((gi, g_df, horizon_default, spec))
+            tasks.append((gi, g_df, g_ids, horizon_default, spec))
 
-    def run_target(gi: int, g_df: DataFrame, horizon_default: int, spec: dict):
+    def run_target(
+        gi: int, g_df: DataFrame, g_ids: DataFrame, horizon_default: int, spec: dict
+    ):
         """One (resolved-config group, target) flow — independent of every
         other task: distinct output tables, lineage appends serialized by
         TableIO's commit lock. Returns (kind, table, stage_result)."""
@@ -372,13 +376,15 @@ def run_manager(
                 predict_from_states,
             )
 
+            # The model table holds every group's units: serve only this
+            # group's, at this group's horizon.
             states = load_model_states(
                 spark, io, f"mgr_models_{target}", target=target,
                 key_col="_unit_id",
-            ).withColumnRenamed("_unit_id", "conv_id")
-            fcst = predict_from_states(states, horizon_default).withColumnRenamed(
-                "conv_id", "_unit_id"
-            )
+            ).join(g_ids, "_unit_id", "left_semi")
+            fcst = predict_from_states(
+                states.withColumnRenamed("_unit_id", "conv_id"), horizon_default
+            ).withColumnRenamed("conv_id", "_unit_id")
             if cfg.ephemeral:
                 return ("forecast_frame", fcst, None)
             table = f"mgr_fcst_{gi}_{target}"

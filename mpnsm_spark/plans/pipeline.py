@@ -70,6 +70,7 @@ from mpnsm_spark.operators.gapfill import gapfill_anchored
 from mpnsm_spark.operators.gorilla import encode_tier_chunks
 from mpnsm_spark.operators.rollup import cascade, rollup_encoded, rollup_raw
 from mpnsm_spark.operators.skew import apply_per_series, with_salt
+from mpnsm_spark.session import local_frame
 from mpnsm_spark.sources.tableio import TableIO
 
 LINEAGE_TABLE = "lineage"
@@ -724,7 +725,8 @@ def run_kernel_stage(
                 n_err,
             )
         )
-    lineage = spark.createDataFrame(
+    lineage = local_frame(
+        spark,
         lineage_rows,
         "run_id string, stage string, bucket_id int, input_rows long, "
         "output_rows long, encode_bytes long, wall_seconds double, "

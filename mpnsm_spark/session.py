@@ -1,4 +1,4 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and driver-side local frames.
 
 Local mode is single-JVM (driver-only); on a real cluster the same configs
 apply, plus ``spark-submit --py-files mpnsm_spark.zip``. UTC session timezone
@@ -8,8 +8,12 @@ is pinned so results compare bit-for-bit against DuckDB/pandas oracles.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -63,3 +67,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-side rows (tuples in ``schema`` order).
+
+    ``spark.createDataFrame(<python list>, schema)`` plans a ``LogicalRDD``
+    over a Python RDD, so every job reading it runs Python tasks that pay
+    the worker's per-task start-up (~0.2 s each) and run no engine code. An
+    Arrow table plans a ``LocalRelation`` instead: the rows live in the plan
+    and no Python task starts. Every driver-built frame in the engine goes
+    through here.
+    """
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)

@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mpnsm_spark import TIER_SECONDS
+from mpnsm_spark.functions.arrowcfg import init_python_worker
 
 GAPFILL_STREAM_SCHEMA = T.StructType(
     [
@@ -88,6 +89,7 @@ def streaming_gapfill_locf(
     def fill(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        init_python_worker()
         if state.hasTimedOut:
             state.remove()
             return

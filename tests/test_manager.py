@@ -329,6 +329,38 @@ def test_run_manager_fit_then_predict(spark, panel, tmp_path):
     assert (a["yhat"].to_numpy() == b["yhat"].to_numpy()).all()
 
 
+def test_run_manager_predict_serves_only_group_units(spark, panel, tmp_path):
+    """Predict with two resolved-config groups: the model table holds every
+    unit, but each group forecasts only its own units, at its own horizon —
+    every unit exactly once."""
+    io = TableIO(str(tmp_path / "wh"))
+    train = _train_only(panel)
+    root = {
+        "unit": {},
+        "horizon": 6,
+        "targets": [{"target_col": "sales", "model": {"n_changepoints": 2}}],
+    }
+    run_manager(
+        spark, train, io, [root], group_columns=["region", "store"],
+        run_mode="fit", cfg=PipelineConfig(num_buckets=4),
+    )
+    pred = run_manager(
+        spark, train, io, [root, {"unit": {"region": "B"}, "horizon": 3}],
+        group_columns=["region", "store"], run_mode="predict",
+        cfg=PipelineConfig(num_buckets=4),
+    )
+    assert len(pred.forecast_tables) == 2
+    got = pred.forecasts(spark, io).toPandas()
+    steps = got.groupby("_unit_id")["step"].apply(sorted).to_dict()
+    sep = "\x1f"
+    assert steps == {
+        f"A{sep}s1": list(range(1, 7)),
+        f"A{sep}s2": list(range(1, 7)),
+        f"B{sep}s3": list(range(1, 4)),
+        f"B{sep}s4": list(range(1, 4)),
+    }
+
+
 def test_manager_result_requires_tables(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         ManagerResult().forecasts(spark, TableIO(str(tmp_path / "whx")))
