@@ -39,7 +39,7 @@ def _dsum(col: str):
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: events → transcript shape → normalize → 1m rollup → 1h cascade."""
-    from mpnsm_spark.operators.rollup import cascade, rollup_raw
+    from mpnsm_spark.operators.rollup import cascade, distinct_tool_vocab, rollup_raw
     from mpnsm_spark.plans.pipeline import normalize
 
     ev = _t(spark, "/root/testdata/sf0.001", "events")
@@ -55,7 +55,8 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("ts"),
     )
     norm = normalize(transcripts, num_buckets=8)
-    return cascade(rollup_raw(norm, "1m"), "1h")
+    vocab = distinct_tool_vocab(norm)
+    return cascade(rollup_raw(norm, "1m", vocab), "1h", vocab)
 
 
 # --------------------------------------------------------------- query bodies

@@ -15,7 +15,7 @@ Two workloads:
 
 Certified-window protocol (VERDICT r4 "Next round" #1): this sandbox VM is
 burst-credit throttled and oscillates ±40% minute-to-minute
-(jobs/regime_probe.py); single-pass numbers whipsaw with the host regime, not
+(host-regime study, BASELINE.md); single-pass numbers whipsaw with the host regime, not
 the code (r4 shipped two rows at ~3× their same-day local twins on unchanged
 code). The battery therefore runs BEST-OF-N passes (default 3,
 ``SPARK_GRAFT_BENCH_REPS``), each pass gated by scaling_bench v4's absolute

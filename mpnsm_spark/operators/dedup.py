@@ -477,9 +477,7 @@ def resolve_duplicate_clusters(
 
     ``ids`` (optional, one column named like ``id_a``-less ``doc_id``…
     any single-column frame) adds isolated documents as singleton clusters.
-    When provided it must COVER every pair endpoint (always true for corpus
-    dedup — pairs are found within the corpus); the fixed-iters fast path
-    relies on it.
+    Pair endpoints missing from ``ids`` still get their clusters.
 
     Output: ``(doc_id, cluster_id, keep_flag)`` — cluster_id = min doc id of
     the component, keep_flag marks the representative. Labels only ever
@@ -493,44 +491,53 @@ def resolve_duplicate_clusters(
     # (the expensive in-bucket quadratic verify for LSH inputs) would execute
     # TWICE inside the edge materialization job. explode emits both
     # directions from one execution of the pair plan.
+    fast = bool(fixed_iters) and ids is not None
+    directions = [(id_a, id_b), (id_b, id_a)]
+    if fast:
+        # ...plus a self-loop per endpoint: each round then folds the node's
+        # own label in through the same join as its neighbours'.
+        directions += [(id_a, id_a), (id_b, id_b)]
     edges = pairs.select(
         F.explode(
             F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+                *[
+                    F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+                    for s, d in directions
+                ]
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
     # Materialize the edge list ONCE: every propagation round joins `edges`,
     # and the upstream pair-finding plan (LSH self-join over a Python embed
     # stage, say) would otherwise re-execute per round — measured 5x the
-    # whole chain's cost at sf0.1. Edge state is two rows per duplicate pair
-    # (tiny next to the corpus), and localCheckpoint also truncates lineage
+    # whole chain's cost at sf0.1. Edge state is two (fixed-round mode: four)
+    # rows per duplicate pair (tiny next to the corpus), and localCheckpoint also truncates lineage
     # so the loop's DAG stays flat at any scale.
-    if fixed_iters is not None and ids is not None:
-        # Fixed-round corpus mode (both driver rows): every pair endpoint is
-        # by construction a corpus id (pairs are FOUND within the corpus), so
-        # labels can start from the ids table directly and each round folds
-        # the node's own label in via a SELF-LOOP edge — one join + one
-        # min-aggregate per round instead of join + aggregate + left-join,
-        # no labels-init job, and no final singleton anti-join (isolated ids
-        # ride through the rounds labelled by their own loop). Identical
-        # labels: min({own} ∪ neighbor labels) per round, and isolated ids
-        # keep label=id — exactly the general path's output.
+    if fast:
+        # Fixed-round corpus mode (both driver rows): every node, pair
+        # endpoint or isolated id, has a SELF-LOOP edge, so a round is one
+        # join + one min-aggregate instead of join + aggregate + left-join,
+        # with no labels-init job and no final singleton anti-join (isolated
+        # ids ride through the rounds labelled by their own loop). Round one
+        # needs no join at all: every label still equals its node's id, so
+        # it is the min ``dst`` per ``src``. Identical labels: min({own} ∪
+        # neighbor labels) per round — exactly the general path's output.
         id_col = ids.columns[0]
         loops = ids.select(
             F.col(id_col).alias("src"), F.col(id_col).alias("dst")
         )
         edges = edges.unionByName(loops).localCheckpoint(eager=True)
-        labels = ids.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("label")
+        labels = (
+            edges.groupBy("src")
+            .agg(F.min("dst").alias("label"))
+            .withColumnRenamed("src", "id")
         )
         # Each round references `labels` exactly ONCE (one join, one
         # aggregate), so the whole fixed-round chain stays LAZY: no subtree
         # duplication, no per-round checkpoint job — the driver submits one
         # job for all rounds. Plan depth is fixed_iters joins over the
         # checkpointed edge list (flat lineage).
-        for _ in range(fixed_iters):
+        for _ in range(fixed_iters - 1):
             labels = (
                 edges.join(labels, edges.dst == labels.id)
                 .groupBy("src")

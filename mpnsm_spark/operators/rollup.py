@@ -28,14 +28,25 @@ Scale notes (100 TB):
   set buffer per group — measured 2-3× slower and GC-bound at 5M+ groups.
   The human-readable ``tools`` array is decoded from the mask by a pure
   projection.
+- **One tier row, one dictionary.** :func:`turn_aggregates` is the only
+  turn→tier aggregate (batch :func:`rollup_encoded` / :func:`rollup_raw` and
+  the streaming 1m window share it) and :func:`encode_role_tool` the only
+  place tool names become bit positions, and the only size check. Every
+  step after encoding REQUIRES the tool dictionary (``cascade``,
+  ``merge_partials``, the streaming rollups): masks encoded under two
+  dictionaries OR into a mask that names the wrong tools. Only
+  :func:`rollup_raw` computes one (one scan) when it is omitted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 from mpnsm_spark import TIER_PARENT, TIER_TRUNC
+from mpnsm_spark.schema import ROLES
 
 MAX_TOOL_VOCAB = 62  # bitmask bits in a signed long, minus sign-bit headroom
 
@@ -52,12 +63,34 @@ def distinct_tool_vocab(df: DataFrame, tool_col: str = "tool") -> list[str]:
     return sorted(r[0] for r in rows)
 
 
-def tool_mask_expr(tool: Column, tool_vocab: list[str]) -> Column:
-    """Per-row tool bit: ``1 << index_in_vocab`` (0 for null/unknown)."""
-    expr = F.when(tool.isNull(), F.lit(0).cast("long"))
-    for i, v in enumerate(tool_vocab):
-        expr = expr.when(tool == v, F.lit(1 << i).cast("long"))
-    return expr.otherwise(F.lit(0).cast("long"))
+def encode_role_tool(
+    df: DataFrame, role_vocab: Sequence[str], tool_vocab: list[str]
+) -> DataFrame:
+    """role/tool strings → int codes (-1 = null/unknown) so every downstream
+    aggregation buffer is fixed-width (pure codegen HashAggregate).
+
+    The ONLY place tool names become bit positions: ``tool_id`` is the tool's
+    index in ``tool_vocab``, and the tier aggregate sets bit ``tool_id`` of
+    ``tools_mask``. Spark's ``shiftleft`` wraps past bit 63, so a dictionary
+    larger than :data:`MAX_TOOL_VOCAB` fails here, before any row is
+    aggregated, instead of aliasing two tools onto one bit."""
+    if len(tool_vocab) > MAX_TOOL_VOCAB:
+        raise ValueError(
+            f"tool vocabulary {len(tool_vocab)} exceeds {MAX_TOOL_VOCAB} bitmask "
+            "slots — shard the mask into multiple longs or dictionary-page it"
+        )
+
+    def code(col: Column, vocab: Sequence[str]) -> Column:
+        expr = F.when(col.isNull(), F.lit(-1))
+        for i, v in enumerate(vocab):
+            expr = expr.when(col == v, F.lit(i))
+        return expr.otherwise(F.lit(-1)).cast("int")
+
+    return (
+        df.withColumn("role_id", code(F.col("role"), role_vocab))
+        .withColumn("tool_id", code(F.col("tool"), tool_vocab))
+        .drop("role", "tool")
+    )
 
 
 def tools_from_mask(mask: Column, tool_vocab: list[str]) -> Column:
@@ -114,77 +147,15 @@ def decode_tier(df: DataFrame, tool_vocab: list[str]) -> DataFrame:
     ).select(*TIER_COLUMNS, *[c for c in df.columns if c not in TIER_COLUMNS])
 
 
-def _finish_tier(
-    grouped: DataFrame, tool_vocab: list[str], decode_tools: bool = True
-) -> DataFrame:
-    out = grouped.withColumn(
-        "value_avg", F.col("value_sum") / F.col("turn_count")
-    )
-    if not decode_tools:
-        return out.select(*TIER_COLUMNS_STORED)
-    return (
-        out.withColumn("tools", tools_from_mask(F.col("tools_mask"), tool_vocab))
-        .withColumn("distinct_tools", F.bit_count("tools_mask").cast("int"))
-        .select(*TIER_COLUMNS)
-    )
+def turn_aggregates(role_vocab: Sequence[str]) -> list[Column]:
+    """The turn→tier aggregates over encoded turns (``role_id``/``tool_id``,
+    see :func:`encode_role_tool`) — the ONE definition of a tier row, grouped
+    by a ``date_trunc`` bucket in batch and by a tumbling window in streaming.
 
-
-def rollup_raw(
-    df: DataFrame, tier: str = "1m", tool_vocab: list[str] | None = None
-) -> DataFrame:
-    """Aggregate raw turns into a tier table.
-
-    ``df`` must have (conv_id, turn_idx, role, tool, ts, value). Ordering of
-    the input is irrelevant: first/last semantics bind to ``turn_idx`` (the
-    stable per-row order key, SURVEY.md O1) via min_by/max_by, not to row
-    arrival order — so the shuffled generator output aggregates identically.
-
-    ``tool_vocab``: bitmask dictionary (sorted distinct tools). Auto-computed
-    with one tiny job when omitted; pass it explicitly in pipelines so the
-    scan happens once.
-    """
-    if tool_vocab is None:
-        tool_vocab = distinct_tool_vocab(df)
-    if len(tool_vocab) > MAX_TOOL_VOCAB:
-        raise ValueError(
-            f"tool vocabulary {len(tool_vocab)} exceeds {MAX_TOOL_VOCAB} bitmask "
-            "slots — shard the mask into multiple longs or dictionary-page it"
-        )
-    bucket = F.date_trunc(TIER_TRUNC[tier], F.col("ts")).alias("bucket_start")
-
-    def role_count(role: str) -> Column:
-        return F.sum(F.when(F.col("role") == role, 1).otherwise(0)).alias(f"n_{role}")
-
-    grouped = df.groupBy(F.col("conv_id"), bucket).agg(
-        F.count(F.lit(1)).alias("turn_count"),
-        F.min("turn_idx").alias("first_turn_idx"),
-        F.max("turn_idx").alias("last_turn_idx"),
-        role_count("user"),
-        role_count("assistant"),
-        role_count("system"),
-        role_count("tool"),
-        F.bit_or(tool_mask_expr(F.col("tool"), tool_vocab)).alias("tools_mask"),
-        F.sum("value").alias("value_sum"),
-        F.min("value").alias("value_min"),
-        F.max("value").alias("value_max"),
-        F.min_by("value", "turn_idx").alias("first_value"),
-        F.max_by("value", "turn_idx").alias("last_value"),
-    )
-    return _finish_tier(grouped, tool_vocab)
-
-
-def rollup_encoded(
-    norm: DataFrame,
-    tier: str,
-    role_vocab: list[str],
-    tool_vocab: list[str],
-    decode_tools: bool = True,
-) -> DataFrame:
-    """rollup_raw twin over dictionary-encoded input (role_id/tool_id ints,
-    see ``pipeline.encode_role_tool``) — the pipeline's hot path: every
-    expression is int/long/double, so partial+final aggregation is pure
-    whole-stage-codegen HashAggregate with zero string comparisons per row."""
-    bucket = F.date_trunc(TIER_TRUNC[tier], F.col("ts")).alias("bucket_start")
+    Every expression is int/long/double, so partial+final aggregation is pure
+    whole-stage-codegen HashAggregate with zero string comparisons per row.
+    First/last bind to ``turn_idx`` (the stable per-row order key, SURVEY.md
+    O1) via min_by/max_by, never to arrival order."""
     ridx = {r: i for i, r in enumerate(role_vocab)}
 
     def role_count(role: str) -> Column:
@@ -196,7 +167,7 @@ def rollup_encoded(
         F.col("tool_id") >= 0,
         F.expr("shiftleft(CAST(1 AS BIGINT), tool_id)"),
     ).otherwise(F.lit(0).cast("long"))
-    grouped = norm.groupBy(F.col("conv_id"), bucket).agg(
+    return [
         F.count(F.lit(1)).alias("turn_count"),
         F.min("turn_idx").alias("first_turn_idx"),
         F.max("turn_idx").alias("last_turn_idx"),
@@ -210,28 +181,64 @@ def rollup_encoded(
         F.max("value").alias("value_max"),
         F.min_by("value", "turn_idx").alias("first_value"),
         F.max_by("value", "turn_idx").alias("last_value"),
+    ]
+
+
+def _finish_tier(
+    grouped: DataFrame, tool_vocab: list[str], decode_tools: bool = True
+) -> DataFrame:
+    """Aggregated tier rows (``conv_id``, ``bucket_start`` + aggregates) →
+    the tier table: ``value_avg``, plus the decoded tool columns unless
+    ``decode_tools=False`` (the stored, mask-only schema)."""
+    out = grouped.withColumn(
+        "value_avg", F.col("value_sum") / F.col("turn_count")
     )
+    if not decode_tools:
+        return out.select(*TIER_COLUMNS_STORED)
+    return decode_tier(out, tool_vocab)
+
+
+def rollup_raw(
+    df: DataFrame, tier: str = "1m", tool_vocab: list[str] | None = None
+) -> DataFrame:
+    """Aggregate raw turns into a tier table.
+
+    ``df`` must have (conv_id, turn_idx, role, tool, ts, value). Ordering of
+    the input is irrelevant: first/last semantics bind to ``turn_idx``, so
+    the shuffled generator output aggregates identically. Roles are encoded
+    against ``schema.ROLES``; a role outside it counts in no ``n_*`` column.
+
+    ``tool_vocab``: bitmask dictionary (sorted distinct tools). Computed
+    with one tiny job when omitted; pass it explicitly when several rollups
+    must share one dictionary (cascades, partial re-merges), so their masks
+    mean the same tools. A tool missing from it sets no bit.
+    """
+    if tool_vocab is None:
+        tool_vocab = distinct_tool_vocab(df)
+    encoded = encode_role_tool(df, ROLES, tool_vocab)
+    return rollup_encoded(encoded, tier, ROLES, tool_vocab)
+
+
+def rollup_encoded(
+    norm: DataFrame,
+    tier: str,
+    role_vocab: Sequence[str],
+    tool_vocab: list[str],
+    decode_tools: bool = True,
+) -> DataFrame:
+    """Tier rollup of dictionary-encoded turns (:func:`encode_role_tool`):
+    :func:`turn_aggregates` grouped by (conv_id, ``date_trunc`` bucket)."""
+    bucket = F.date_trunc(TIER_TRUNC[tier], F.col("ts")).alias("bucket_start")
+    grouped = norm.groupBy(F.col("conv_id"), bucket).agg(*turn_aggregates(role_vocab))
     return _finish_tier(grouped, tool_vocab, decode_tools)
 
 
-def _combine(grouped, tool_vocab: list[str] | None, tools_arrays: bool) -> DataFrame:
-    """Associative combine of tier rows — used by cascade AND skew re-merge.
-
-    The distinct-tool union is ``bit_or`` of masks (fixed-width). The name
-    array is decoded from the combined mask when ``tool_vocab`` is given;
-    otherwise (vocab-less small-data use) it falls back to flattening the
-    child arrays — the only object aggregate left, off the pipeline path.
-    """
-    extra = (
-        []
-        if tool_vocab is not None or not tools_arrays
-        else [
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("tools")))
-            ).alias("tools")
-        ]
-    )
-    out = grouped.agg(
+def _combine(grouped: GroupedData) -> DataFrame:
+    """Associative combine of tier rows — used by cascade, skew re-merge and
+    the streaming cascade. The distinct-tool union is ``bit_or`` of masks
+    (fixed-width); ``value_avg`` and the tool names are re-derived by
+    ``_finish_tier``."""
+    return grouped.agg(
         F.sum("turn_count").alias("turn_count"),
         F.min("first_turn_idx").alias("first_turn_idx"),
         F.max("last_turn_idx").alias("last_turn_idx"),
@@ -245,52 +252,42 @@ def _combine(grouped, tool_vocab: list[str] | None, tools_arrays: bool) -> DataF
         F.max("value_max").alias("value_max"),
         F.min_by("first_value", "first_turn_idx").alias("first_value"),
         F.max_by("last_value", "last_turn_idx").alias("last_value"),
-        *extra,
-    )
-    if tool_vocab is not None:
-        out = out.withColumn("tools", tools_from_mask(F.col("tools_mask"), tool_vocab))
-    elif not tools_arrays:
-        out = out.withColumn("tools", F.array_compact(F.array(F.lit(None).cast("string"))))
-    return (
-        out.withColumn("distinct_tools", F.bit_count("tools_mask").cast("int"))
-        .withColumn("value_avg", F.col("value_sum") / F.col("turn_count"))
     )
 
 
-def cascade(
-    tier_df: DataFrame, to_tier: str, tool_vocab: list[str] | None = None
-) -> DataFrame:
+def _recombine(tier_df: DataFrame, bucket: Column, tool_vocab: list[str]) -> DataFrame:
+    """Combine ``tier_df`` rows per (conv_id, ``bucket``), keeping its schema
+    (decoded tool columns only when the input carries them)."""
+    out = _combine(tier_df.groupBy(F.col("conv_id"), bucket))
+    return _finish_tier(out, tool_vocab, "tools" in tier_df.columns).select(
+        *tier_df.columns
+    )
+
+
+def cascade(tier_df: DataFrame, to_tier: str, tool_vocab: list[str]) -> DataFrame:
     """Re-aggregate a finer tier into ``to_tier`` (1m→1h, 1h→1d).
 
     Exactly consistent with aggregating raw data directly (tier-consistency
     invariant, FIXTURES.md §2) because every column is associative.
+    ``tool_vocab`` must be the dictionary ``tier_df``'s masks were encoded
+    under.
     """
     assert to_tier in TIER_PARENT, f"no cascade parent defined for {to_tier}"
     bucket = F.date_trunc(TIER_TRUNC[to_tier], F.col("bucket_start")).alias(
         "bucket_start"
     )
-    out = _combine(
-        tier_df.groupBy(F.col("conv_id"), bucket),
-        tool_vocab,
-        tools_arrays="tools" in tier_df.columns,
-    )
-    return out.select(*[c for c in tier_df.columns])
+    return _recombine(tier_df, bucket, tool_vocab)
 
 
-def merge_partials(
-    partial_df: DataFrame, tool_vocab: list[str] | None = None
-) -> DataFrame:
+def merge_partials(partial_df: DataFrame, tool_vocab: list[str]) -> DataFrame:
     """Re-merge partial tier rows for the same (conv_id, bucket_start).
 
     Used after hot-conversation time-range splitting: partial aggregates from
-    the sub-splits are combined with the same associative expressions.
+    the sub-splits are combined with the same associative expressions. Every
+    partial must have been rolled up under the one ``tool_vocab`` passed here
+    — masks from different dictionaries cannot be OR-ed.
     """
-    out = _combine(
-        partial_df.groupBy("conv_id", "bucket_start"),
-        tool_vocab,
-        tools_arrays="tools" in partial_df.columns,
-    )
-    return out.select(*[c for c in partial_df.columns])
+    return _recombine(partial_df, F.col("bucket_start"), tool_vocab)
 
 
 def rollup_tiers(raw_df: DataFrame) -> dict[str, DataFrame]:

@@ -61,6 +61,7 @@ regressors may instead forecast ``horizon`` steps when no future rows exist.
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -79,6 +80,8 @@ _SEP = "\x1f"
 _ROOT = "_root"
 _CONFIG_FIELDS = ("targets_json", "horizon")
 _INT_MODEL_KEYS = {"n_changepoints", "min_distance", "smooth_window"}
+# (group, target) flows whose jobs run_manager submits concurrently.
+PARALLEL_FLOWS = 4
 
 
 def load_config(path: str):
@@ -294,7 +297,6 @@ def run_manager(
     run_mode: str = "fit_predict",
     min_train: int = 8,
     cfg: PipelineConfig | None = None,
-    parallel_flows: int = 4,
 ) -> ManagerResult:
     """One declarative call: resolve per-unit configs, then per distinct
     config run regressor building → optional tuning → per-series fit/forecast
@@ -305,11 +307,11 @@ def run_manager(
     tables (no forecast); ``'predict'`` reloads persisted state and
     forecasts WITHOUT re-fitting (requires a prior ``'fit'`` run).
 
-    ``parallel_flows``: max (group, target) flows whose Spark jobs are
-    submitted concurrently from driver threads (1 = sequential). Flows are
-    independent by construction — distinct output/lineage tables, commit
-    lock in TableIO — so this only overlaps job submission, keeping
-    executors busy while another flow sits in a driver-side collect/commit.
+    Up to :data:`PARALLEL_FLOWS` (group, target) flows submit their Spark
+    jobs concurrently from driver threads. Flows are independent by
+    construction — distinct output/lineage tables, commit lock in TableIO —
+    so this only overlaps job submission, keeping executors busy while
+    another flow sits in a driver-side collect/commit.
     """
     if run_mode not in ("fit_predict", "fit", "predict"):
         raise ValueError(f"run_mode must be fit_predict|fit|predict, got {run_mode!r}")
@@ -425,13 +427,8 @@ def run_manager(
     # SUBMISSION from driver threads (fills the cluster while another flow is
     # in a driver-side collect or commit). Results land in task order so
     # output table lists stay deterministic.
-    if parallel_flows > 1 and len(tasks) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallel_flows) as pool:
-            outs = list(pool.map(lambda t: run_target(*t), tasks))
-    else:
-        outs = [run_target(*t) for t in tasks]
+    with ThreadPoolExecutor(max_workers=PARALLEL_FLOWS) as pool:
+        outs = list(pool.map(lambda t: run_target(*t), tasks))
     for kind, obj, res in outs:
         if res is not None:
             result.stages.append(res)

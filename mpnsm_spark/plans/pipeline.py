@@ -38,14 +38,11 @@ Execution model (why this scales):
   its cached output is handed directly to dependent stages — no storage
   read-back, no dedupe window. Storage reads (with keep-last dedupe) happen
   only on resume, where prior snapshots exist.
-- **Stage DAG, parallel by default**: the independent 1h/1d branches,
-  chunks and retention overlap from concurrent driver threads so the next
-  stage's tasks back-fill executors freed by the current stage's tail
-  (guide §2.6). Re-measured this round after the per-stage overhead cuts:
-  parallel 6.1s vs serial 14.0s at bench scale (an earlier serial default
-  dated from when heavier stages contended; ``MPNSM_SERIAL_DAG=1`` or
-  ``parallel_stages=False`` restores it). Lineage commits are always
-  async; TableIO commits are lock-serialized.
+- **Stage DAG, parallel**: the independent 1h/1d branches, chunks,
+  retention and every lineage commit run from a pool of driver threads, so
+  the next stage's tasks back-fill executors freed by the current stage's
+  tail (guide §2.6). Gated A/B at bench scale: parallel 6.1s vs serial
+  14.0s. TableIO commits are lock-serialized.
 - The wave loop is over salt buckets (a driver-side int list, not data); each
   wave is one declarative Spark job over ``bucket_id IN (...)``. The only
   full raw scans are tier-1m (fused with the dedupe) and the map-only
@@ -68,7 +65,7 @@ from mpnsm_spark import TIERS
 from mpnsm_spark.generator import with_value
 from mpnsm_spark.operators.gapfill import gapfill_anchored
 from mpnsm_spark.operators.gorilla import encode_tier_chunks
-from mpnsm_spark.operators.rollup import cascade, rollup_encoded, rollup_raw
+from mpnsm_spark.operators.rollup import cascade, encode_role_tool, rollup_encoded
 from mpnsm_spark.operators.skew import apply_per_series, with_salt
 from mpnsm_spark.session import local_frame
 from mpnsm_spark.sources.tableio import TableIO
@@ -87,25 +84,6 @@ def role_tool_vocabs(df: DataFrame) -> tuple[list[str], list[str]]:
     roles = sorted({r.role for r in rows if r.role is not None})
     tools = sorted({r.tool for r in rows if r.tool is not None})
     return roles, tools
-
-
-def encode_role_tool(
-    df: DataFrame, role_vocab: list[str], tool_vocab: list[str]
-) -> DataFrame:
-    """role/tool strings → int codes (-1 = null/unknown) so every downstream
-    aggregation buffer is fixed-width (pure codegen HashAggregate)."""
-
-    def code(col: F.Column, vocab: list[str]) -> F.Column:
-        expr = F.when(col.isNull(), F.lit(-1))
-        for i, v in enumerate(vocab):
-            expr = expr.when(col == v, F.lit(i))
-        return expr.otherwise(F.lit(-1)).cast("int")
-
-    return (
-        df.withColumn("role_id", code(F.col("role"), role_vocab))
-        .withColumn("tool_id", code(F.col("tool"), tool_vocab))
-        .drop("role", "tool")
-    )
 
 
 def dedupe_encoded(pre: DataFrame, strict_ties: bool = False) -> DataFrame:
@@ -276,15 +254,6 @@ class PipelineConfig:
     # count(), and the session timezone must be UTC. Set False to force the
     # row-level rewrite unconditionally.
     file_level_retention: bool = True
-    # Run independent stages from concurrent driver threads. Default ON
-    # (re-measured this round): the round-4 "2x worse" reading predated the
-    # batched kernel stages and leaner per-stage commits — the small 1h/1d
-    # branch stages are now overhead-bound (~0.7-0.9s each, write + stats
-    # jobs), and overlapping them back-fills executors freed by the big
-    # stages' tails (guide §2.6). Gated A/B at bench scale (2M turns,
-    # local[32]): serial 14.0s vs parallel 6.1s warmed, 21.6 vs 17.5 cold.
-    # MPNSM_SERIAL_DAG=1 forces serial regardless.
-    parallel_stages: bool = True
     # Per-series kernel stages run after the tier DAG with per-bucket error
     # lineage: a poisoned series yields a status="error" lineage row (stage,
     # bucket_id, error class) instead of failing the run, and only errored
@@ -398,42 +367,44 @@ def load_lineage_map(spark: SparkSession, io: TableIO) -> dict[str, set[int]]:
     return m
 
 
-def completed_buckets(spark: SparkSession, io: TableIO, stage: str) -> set[int]:
-    return load_lineage_map(spark, io).get(stage, set())
-
-
 def _lineage_df(
-    cfg: PipelineConfig,
+    run_id: str,
     stage: str,
     per_bucket_stats: DataFrame,
     wall_seconds: float,
     version: int,
     n_buckets: int = 1,
 ) -> DataFrame:
-    """Lineage rows as a LAZY select over the per-bucket stats frame, so the
-    lineage append is ONE Spark job (no driver collect / re-create).
+    """The one builder of lineage rows: a LAZY select over the per-bucket
+    stats frame, so the lineage append is ONE Spark job (no driver collect /
+    re-create), always in the same 11 columns.
 
-    ``n_buckets`` (the wave's bucket count, known driver-side) apportions the
-    stage wall across rows — previously a global count() window, which fired
-    WindowExec's no-partition warning through every stage and moved the
-    (tiny) stats frame to one partition for no reason."""
-    n_buckets = F.lit(max(int(n_buckets), 1))
+    ``per_bucket_stats`` carries ``bucket_id`` and ``output_rows``;
+    ``input_rows``, ``encode_bytes`` and ``n_errors`` default to 0 and
+    ``error_class`` to null when absent. ``status`` is ``"error"`` exactly
+    when ``n_errors > 0``. ``n_buckets`` (known driver-side) apportions the
+    stage wall across rows."""
+
+    def stat(name: str, default, dtype: str) -> F.Column:
+        if name in per_bucket_stats.columns:
+            return F.col(name).cast(dtype)
+        return F.lit(default).cast(dtype)
+
+    n_errors = stat("n_errors", 0, "long")
     return per_bucket_stats.select(
-        F.lit(cfg.run_id).alias("run_id"),
+        F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),
         F.col("bucket_id").cast("int").alias("bucket_id"),
-        F.col("input_rows").cast("long").alias("input_rows")
-        if "input_rows" in per_bucket_stats.columns
-        else F.lit(0).cast("long").alias("input_rows"),
+        stat("input_rows", 0, "long").alias("input_rows"),
         F.col("output_rows").cast("long").alias("output_rows"),
-        (
-            F.col("encode_bytes")
-            if "encode_bytes" in per_bucket_stats.columns
-            else F.lit(0)
-        ).cast("long").alias("encode_bytes"),
-        (F.lit(float(wall_seconds)) / n_buckets).alias("wall_seconds"),
-        F.lit("ok").alias("status"),
+        stat("encode_bytes", 0, "long").alias("encode_bytes"),
+        (F.lit(float(wall_seconds)) / F.lit(max(int(n_buckets), 1))).alias(
+            "wall_seconds"
+        ),
+        F.when(n_errors > 0, "error").otherwise("ok").alias("status"),
         F.lit(version).cast("int").alias("version"),
+        stat("error_class", None, "string").alias("error_class"),
+        n_errors.alias("n_errors"),
     )
 
 
@@ -701,7 +672,7 @@ def run_kernel_stage(
     )
     vals = obs.get  # the write already ran; returns without blocking
     wall = time.time() - t0
-    lineage_rows = []
+    stats_rows = []
     for b in remaining:
         n_ok = int(vals.get(f"ok{b}") or 0)
         n_err = int(vals.get(f"err{b}") or 0)
@@ -710,27 +681,14 @@ def run_kernel_stage(
             result["buckets_error"][b] = err_cls
         result["errored_series"] += n_err
         result["output_rows"] += n_ok
-        lineage_rows.append(
-            (
-                cfg.run_id,
-                stage.name,
-                b,
-                0,
-                n_ok,
-                0,
-                wall / max(len(remaining), 1),
-                "error" if n_err else "ok",
-                version,
-                err_cls,
-                n_err,
-            )
-        )
-    lineage = local_frame(
+        stats_rows.append((b, n_ok, n_err, err_cls))
+    stats = local_frame(
         spark,
-        lineage_rows,
-        "run_id string, stage string, bucket_id int, input_rows long, "
-        "output_rows long, encode_bytes long, wall_seconds double, "
-        "status string, version int, error_class string, n_errors long",
+        stats_rows,
+        "bucket_id int, output_rows long, n_errors long, error_class string",
+    )
+    lineage = _lineage_df(
+        cfg.run_id, stage.name, stats, wall, version, n_buckets=len(remaining)
     )
     io.append(lineage.coalesce(1), LINEAGE_TABLE)
     result["wall_seconds"] = round(wall, 3)
@@ -879,12 +837,13 @@ def run_pipeline(
             ).filter(F.col("bucket_id").isin([int(b) for b in wave]))
             stats = all_ids.join(stats, "bucket_id", "left").na.fill(0)
             lineage = _lineage_df(
-                cfg, stage, stats, time.time() - t0, version, n_buckets=len(wave)
+                cfg.run_id, stage, stats, time.time() - t0, version,
+                n_buckets=len(wave),
             )
             # Lineage commits AFTER the data (crash between them only re-runs
             # the bucket) but OFF the critical path: dependents need the data,
             # not the lineage row.
-            submit_async(lambda ln=lineage: io.append(ln.coalesce(1), LINEAGE_TABLE))
+            submit(lambda ln=lineage: append_lineage(ln))
             fresh.append(out)
             if fail_after_stage == stage:
                 raise StageFailure(f"injected failure after stage {stage}")
@@ -1074,9 +1033,9 @@ def run_pipeline(
             F.lit(total_rows).cast("long").alias("input_rows"),
         )
         lineage = _lineage_df(
-            cfg, "retention", stats_df, time.time() - t0, version, n_buckets=1
+            cfg.run_id, "retention", stats_df, time.time() - t0, version
         )
-        submit_async(lambda ln=lineage: io.append(ln.coalesce(1), LINEAGE_TABLE))
+        submit(lambda ln=lineage: append_lineage(ln))
         with lock:
             stage_seconds["retention"] = round(time.time() - t0, 3)
             integrity_ok[0] = ok
@@ -1095,31 +1054,15 @@ def run_pipeline(
             with lock:
                 errors.append(e)
 
-    import os as _os
-
-    serial_dag = (
-        _os.environ.get("MPNSM_SERIAL_DAG") == "1" or not cfg.parallel_stages
-    )
-
     def submit(fn):
-        if serial_dag:
-            guarded(fn)
-            return
         with lock:
             futs.append(ex.submit(guarded, fn))
 
-    def submit_async(fn):
-        """Off-critical-path I/O (lineage appends): ALWAYS pooled, even under
-        the serial stage DAG — dependents need the stage's data, never its
-        lineage row, and these 1-file writes otherwise add a serial barrier
-        per stage. The end-of-run wait() drains them before the summary reads
-        the lineage table."""
-        def labelled():
-            spark.sparkContext.setJobDescription("mpnsm:lineage")
-            fn()
-
-        with lock:
-            futs.append(ex.submit(guarded, labelled))
+    def append_lineage(lineage: DataFrame) -> None:
+        """One lineage commit, labelled apart from its stage's jobs. The
+        end-of-run wait() drains these before the summary reads the table."""
+        spark.sparkContext.setJobDescription("mpnsm:lineage")
+        io.append(lineage.coalesce(1), LINEAGE_TABLE)
 
     # --- stage DAG -----------------------------------------------------------
     # tier_1m is the root: everything depends on it, run it inline in the main

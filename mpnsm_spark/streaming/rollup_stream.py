@@ -10,7 +10,11 @@ turn may arrive. This module provides that surface for incremental arrival:
 - ``first/last by turn_idx`` is maintained with min_by/max_by — arrival-order
   independent, matching batch semantics;
 - the sink is ``foreachBatch`` → TableIO append, so tier snapshots and
-  lineage stay on the same storage path as the batch pipeline.
+  lineage stay on the same storage path as the batch pipeline;
+- the tool dictionary is REQUIRED by every entry point (``ValueError``
+  without it): the distinct-tool set rides a fixed-width ``bit_or`` mask
+  under the batch pipeline's dictionary, and the 1m window aggregates with
+  the batch ``turn_aggregates`` over the batch encoder's output.
 
 Streaming consistency contract (tested): for any finite input replayed as a
 stream, the streaming tier table equals the batch ``rollup_raw`` of the same
@@ -28,28 +32,12 @@ from pyspark.sql import functions as F
 
 from mpnsm_spark.operators.rollup import (
     _combine,
+    _finish_tier,
+    encode_role_tool,
     rollup_raw,
-    tool_mask_expr,
-    tools_from_mask,
+    turn_aggregates,
 )
-
-_TIER_COLS = (
-    "turn_count",
-    "first_turn_idx",
-    "last_turn_idx",
-    "n_user",
-    "n_assistant",
-    "n_system",
-    "n_tool",
-    "tools",
-    "distinct_tools",
-    "value_sum",
-    "value_min",
-    "value_max",
-    "value_avg",
-    "first_value",
-    "last_value",
-)
+from mpnsm_spark.schema import ROLES
 
 
 def _windowed_1m(
@@ -58,44 +46,28 @@ def _windowed_1m(
     tool_vocab: list[str] | None,
 ) -> DataFrame:
     """1m streaming aggregation keeping the ``win`` window struct (the
-    cascade re-windows on it; :func:`streaming_rollup_1m` projects it away)."""
-    w = F.window("ts", "1 minute")
-    base = stream_df.withWatermark("ts", watermark)
-
-    def role_count(role: str):
-        return F.sum(F.when(F.col("role") == role, 1).otherwise(0)).alias(f"n_{role}")
-
-    tool_aggs = (
-        [F.bit_or(tool_mask_expr(F.col("tool"), tool_vocab)).alias("tools_mask")]
-        if tool_vocab is not None
-        else [F.array_sort(F.collect_set("tool")).alias("tools")]
+    cascade re-windows on it; :func:`_tier_rows` projects it away): the
+    batch :func:`~mpnsm_spark.operators.rollup.turn_aggregates` over the
+    encoded stream, grouped by ``window(ts, "1 minute")``."""
+    if tool_vocab is None:
+        raise ValueError(
+            "streaming rollups require tool_vocab (bit_or mask state)"
+        )
+    encoded = encode_role_tool(
+        stream_df.withWatermark("ts", watermark), ROLES, tool_vocab
     )
-    out = base.groupBy(F.col("conv_id"), w.alias("win")).agg(
-        F.count(F.lit(1)).alias("turn_count"),
-        F.min("turn_idx").alias("first_turn_idx"),
-        F.max("turn_idx").alias("last_turn_idx"),
-        role_count("user"),
-        role_count("assistant"),
-        role_count("system"),
-        role_count("tool"),
-        *tool_aggs,
-        F.sum("value").alias("value_sum"),
-        F.min("value").alias("value_min"),
-        F.max("value").alias("value_max"),
-        F.min_by("value", "turn_idx").alias("first_value"),
-        F.max_by("value", "turn_idx").alias("last_value"),
+    return encoded.groupBy(
+        F.col("conv_id"), F.window("ts", "1 minute").alias("win")
+    ).agg(*turn_aggregates(ROLES))
+
+
+def _tier_rows(agg: DataFrame, tool_vocab: list[str]) -> DataFrame:
+    """Windowed aggregates → the batch tier schema (``bucket_start`` = window
+    start, decoded tool columns)."""
+    return _finish_tier(
+        agg.withColumn("bucket_start", F.col("win.start")).drop("win"),
+        tool_vocab,
     )
-    mask_cols = []
-    if tool_vocab is not None:
-        out = out.withColumn(
-            "tools", tools_from_mask(F.col("tools_mask"), tool_vocab)
-        ).withColumn("distinct_tools", F.bit_count("tools_mask").cast("int"))
-        mask_cols = ["tools_mask"]
-    else:
-        out = out.withColumn("distinct_tools", F.size("tools"))
-    return out.withColumn(
-        "value_avg", F.col("value_sum") / F.col("turn_count")
-    ).select("conv_id", "win", *_TIER_COLS, *mask_cols)
 
 
 def streaming_rollup_1m(
@@ -106,22 +78,16 @@ def streaming_rollup_1m(
     """Streaming 1m tier aggregation (append mode once the watermark passes).
 
     ``stream_df`` must be a streaming DataFrame with the transcript schema
-    plus ``value``. Output schema matches the batch tier table. Pass
-    ``tool_vocab`` so the distinct-tool set aggregates as a fixed-width
-    ``bit_or`` bitmask (same dictionary as the batch pipeline — streaming
-    can't scan its own input for a vocabulary); without it the state store
-    falls back to collect_set and the ``tools_mask`` column is omitted.
+    plus ``value``. Output schema matches the batch tier table.
+    ``tool_vocab`` is REQUIRED (``ValueError`` without it): the distinct-tool
+    set aggregates as a fixed-width ``bit_or`` bitmask under the same
+    dictionary as the batch pipeline, and a stream can't scan its own input
+    for one.
     """
-    out = _windowed_1m(stream_df, watermark, tool_vocab)
-    return out.select(
-        "conv_id",
-        F.col("win.start").alias("bucket_start"),
-        *[c for c in out.columns if c not in ("conv_id", "win")],
-    )
+    return _tier_rows(_windowed_1m(stream_df, watermark, tool_vocab), tool_vocab)
 
 
 _CASCADE_DUR = {"1h": "1 hour", "1d": "1 day"}
-_CASCADE_PARENT = {"1h": "1m", "1d": "1h"}
 
 
 def streaming_cascade(
@@ -157,21 +123,16 @@ def streaming_cascade(
     """
     if to_tier not in _CASCADE_DUR:
         raise ValueError(f"to_tier must be one of {sorted(_CASCADE_DUR)}")
-    if tool_vocab is None:
-        raise ValueError("streaming_cascade requires tool_vocab (bit_or mask state)")
     tiers = ["1h"] if to_tier == "1h" else ["1h", "1d"]
     agg = _windowed_1m(stream_df, watermark, tool_vocab)
     for tier in tiers:
-        grouped = agg.groupBy(
-            "conv_id",
-            F.window(F.window_time("win"), _CASCADE_DUR[tier]).alias("win"),
+        agg = _combine(
+            agg.groupBy(
+                "conv_id",
+                F.window(F.window_time("win"), _CASCADE_DUR[tier]).alias("win"),
+            )
         )
-        agg = _combine(grouped, tool_vocab, tools_arrays=False).select(
-            "conv_id", "win", *_TIER_COLS, "tools_mask"
-        )
-    return agg.select(
-        "conv_id", F.col("win.start").alias("bucket_start"), *_TIER_COLS, "tools_mask"
-    )
+    return _tier_rows(agg, tool_vocab)
 
 
 def run_cascade_to_memory(
@@ -212,7 +173,8 @@ def run_stream_to_memory(
     tool_vocab: list[str] | None = None,
 ) -> DataFrame:
     """Drive a finite source to completion through the streaming rollup and
-    return the materialized result (test/verification harness).
+    return the materialized result (test/verification harness). Requires
+    ``tool_vocab``, like :func:`streaming_rollup_1m`.
 
     ``complete`` output mode: every trigger rewrites the full aggregate state,
     so the memory table holds the final tier rows even for buckets whose
@@ -257,10 +219,12 @@ def stream_to_tableio(
     Returns the configured DataStreamWriter — the caller picks the trigger
     (``.trigger(availableNow=True).start()`` for finite replay, processing-
     time triggers for continuous ingestion) and owns await/stop.
+    ``tool_vocab`` is required, as for :func:`streaming_rollup_1m`.
     """
     import time as _time
 
     from mpnsm_spark.operators.skew import with_salt
+    from mpnsm_spark.plans.pipeline import LINEAGE_TABLE, _lineage_df
 
     agg = with_salt(
         streaming_rollup_1m(stream_df, watermark=watermark, tool_vocab=tool_vocab),
@@ -280,18 +244,11 @@ def stream_to_tableio(
                 F.count(F.lit(1)).alias("output_rows"),
                 F.sum("turn_count").alias("input_rows"),
             )
-            lineage = stats.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(f"stream_{table}").alias("stage"),
-                F.col("bucket_id").cast("int").alias("bucket_id"),
-                F.col("input_rows").cast("long").alias("input_rows"),
-                F.col("output_rows").cast("long").alias("output_rows"),
-                F.lit(0).cast("long").alias("encode_bytes"),
-                F.lit(float(_time.time() - t0)).alias("wall_seconds"),
-                F.lit("ok").alias("status"),
-                F.lit(version).cast("int").alias("version"),
+            lineage = _lineage_df(
+                run_id, f"stream_{table}", stats, _time.time() - t0, version,
+                n_buckets=1,
             )
-            io.append(lineage.coalesce(1), "lineage")
+            io.append(lineage.coalesce(1), LINEAGE_TABLE)
         finally:
             out.unpersist()
 
@@ -318,10 +275,7 @@ def read_stream_tier(spark, io, table: str = "tier_1m") -> DataFrame:
     ).drop("_v", "bucket_id")
 
 
-def batch_equivalent(
-    raw_df: DataFrame, tool_vocab: list[str] | None = None
-) -> DataFrame:
-    """The batch query a finite streaming replay must equal (consistency
-    oracle)."""
-    out = rollup_raw(raw_df, "1m", tool_vocab)
-    return out if tool_vocab is not None else out.drop("tools_mask")
+def batch_equivalent(raw_df: DataFrame, tool_vocab: list[str]) -> DataFrame:
+    """The batch query a finite streaming replay under ``tool_vocab`` must
+    equal (consistency oracle)."""
+    return rollup_raw(raw_df, "1m", tool_vocab)

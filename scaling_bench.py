@@ -437,7 +437,7 @@ _FRESH_STATE: dict = {"max": {}}  # n -> max hashes/sec seen this session
 def wait_fresh(n: int, frac: float = 0.93, max_wait_s: float = 1500.0,
                settle_s: float = 45.0) -> tuple[float, bool]:
     """Block until ABSOLUTE n-proc capacity recovers to >= frac x the session
-    max — the burst-credit recovery gate. jobs/regime_probe.py showed this
+    max — the burst-credit recovery gate. The host-regime study (BASELINE.md) showed this
     host is credit-throttled: after sustained wide load, fixed-work capacity
     sinks for minutes and then recovers; a RATIO probe (lo vs hi cores) can
     certify inside a drained regime because both sides sink together, so
@@ -833,7 +833,7 @@ def main() -> None:
         for rep in range(args.repeats):
             # Absolute burst-credit recovery gate BEFORE the ratio probe:
             # in a drained regime lo and hi capacity sink together, so the
-            # ratio band alone certifies poisoned windows (regime_probe).
+            # ratio band alone certifies poisoned windows (BASELINE.md host-regime study).
             _, fresh_ok = wait_fresh(args.cores[1], frac=args.fresh_frac)
             cert, cap_ratio = False, 0.0
             for attempt in range(args.cert_attempts):
@@ -871,7 +871,7 @@ def main() -> None:
             # rejects nearly every pair (round-3's 'conservative counts').
             # The post-probe's job is narrower: detect a catastrophic regime
             # collapse DURING the pair. Expected post-load readings are
-            # ~0.65-0.75x linear (regime_probe: capacity 0.56-0.75x fresh
+            # ~0.65-0.75x linear (host-regime study: capacity 0.56-0.75x fresh
             # right after a drain); readings below 0.55x linear mean the
             # window died mid-pair and the pair is rejected.
             post_cert = post_ratio >= 0.55 * core_ratio_req

@@ -236,6 +236,100 @@ def test_tool_vocab_divergence_fails_loudly(spark, tmp_path):
         reconcile_tool_vocab(io, ["alpha"])
 
 
+def test_tool_vocab_past_mask_width_fails_before_any_write(spark, tmp_path):
+    """65 distinct tools cannot share one long ``tools_mask`` (Spark's
+    ``shiftleft(1, 64)`` wraps to 1, aliasing the 65th tool onto the first):
+    run_pipeline raises a ValueError naming the dictionary size before any
+    stage commits."""
+    import datetime as dt
+
+    from mpnsm_spark.schema import TRANSCRIPT_SCHEMA
+
+    t0 = dt.datetime(2025, 1, 1, 10, 0)
+    rows = [
+        ("c0", i, "tool", "x" * (i + 1), f"tool{i:02d}", t0 + dt.timedelta(seconds=i))
+        for i in range(65)
+    ]
+    raw = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    io = TableIO(str(tmp_path / "wh65"))
+    with pytest.raises(ValueError, match="tool vocabulary 65"):
+        run_pipeline(spark, raw, io, _cfg())
+    assert not io.exists("tier_1m")
+
+
+LINEAGE_COLUMNS = [
+    "run_id", "stage", "bucket_id", "input_rows", "output_rows", "encode_bytes",
+    "wall_seconds", "status", "version", "error_class", "n_errors",
+]
+
+
+def test_every_lineage_file_has_one_schema(spark, tmp_path):
+    """Tier, leaf, retention and (poisoned) kernel stages, and the streaming
+    sink, all write lineage files with the same 11 columns in one order."""
+    import glob
+    import os
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from mpnsm_spark.generator import generate_transcripts, with_value
+    from mpnsm_spark.plans.pipeline import KernelStage
+    from mpnsm_spark.schema import TRANSCRIPT_SCHEMA
+    from mpnsm_spark.streaming.rollup_stream import stream_to_tableio
+
+    raw = with_value(generate_transcripts(spark, n_convs=6, n_turns=300, seed=5))
+    poison_conv = raw.select("conv_id").first().conv_id
+
+    def kernel(pdf):
+        if (pdf["conv_id"] == poison_conv).any():
+            raise ValueError("poisoned series")
+        return pdf.groupby("conv_id", as_index=False).agg(n=("turn_count", "sum"))
+
+    stage = KernelStage(name="totals", fn=kernel, output_schema="conv_id string, n long")
+    io = TableIO(str(tmp_path / "wh"))
+    summary = run_pipeline(spark, raw, io, _cfg(kernel_stages=(stage,)))
+    assert summary["kernel_stages"]["totals"]["errored_series"] == 1
+
+    src = str(tmp_path / "src")
+    pdf = pd.DataFrame(
+        [
+            ("c1", 0, "user", "a", "exec", "2025-01-01 10:00:10"),
+            ("__flush__", 0, "user", "x", None, "2025-01-01 11:00:00"),
+        ],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    )
+    pdf["ts"] = pd.to_datetime(pdf["ts"])
+    spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src)
+    q = (
+        stream_to_tableio(
+            spark,
+            with_value(stream),
+            io,
+            table="stream_tier",
+            tool_vocab=["exec"],
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            num_buckets=4,
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    files = glob.glob(os.path.join(io.root, LINEAGE_TABLE, "data", "*.parquet"))
+    schemas = {
+        tuple((f.name, str(f.type)) for f in pq.read_schema(path)) for path in files
+    }
+    assert len(schemas) == 1, schemas
+    assert [name for name, _ in schemas.pop()] == LINEAGE_COLUMNS
+    lin = io.read(spark, LINEAGE_TABLE).toPandas()
+    assert {"tier_1m", "chunks_1d", "totals", "stream_stream_tier"} <= set(lin.stage)
+    assert (lin.status == "error").sum() == 1
+    assert ((lin.status == "error") == (lin.n_errors > 0)).all()
+    stream_rows = lin[lin.stage == "stream_stream_tier"]
+    assert stream_rows.output_rows.sum() == 1 and stream_rows.error_class.isna().all()
+
+
 def test_kernel_stage_error_lineage_and_resume(spark, transcripts, tmp_path):
     """A poisoned series in a kernel stage: the run completes, the poisoned
     bucket gets a status='error' lineage row (stage, bucket_id, error class),

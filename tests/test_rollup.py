@@ -2,7 +2,12 @@
 
 import pytest
 
-from mpnsm_spark.operators.rollup import cascade, merge_partials, rollup_raw, rollup_tiers
+from mpnsm_spark.operators.rollup import (
+    distinct_tool_vocab,
+    merge_partials,
+    rollup_raw,
+    rollup_tiers,
+)
 
 from .oracle_pandas import compare_frames, rollup_pandas
 
@@ -36,14 +41,47 @@ def test_merge_partials_recovers_full_rollup(transcripts):
     must reproduce the unsplit rollup (hot-key split safety, SURVEY.md §4)."""
     from pyspark.sql import functions as F
 
-    # Split raw rows into two arbitrary halves by a hash, roll up each half,
-    # union the partials, re-merge.
+    # Split raw rows into two arbitrary halves by a hash, roll up each half
+    # under ONE dictionary, union the partials, re-merge.
+    vocab = distinct_tool_vocab(transcripts)
     left = transcripts.filter(F.xxhash64("conv_id", "turn_idx") % 2 == 0)
     right = transcripts.filter(F.xxhash64("conv_id", "turn_idx") % 2 != 0)
-    partials = rollup_raw(left, "1h").unionByName(rollup_raw(right, "1h"))
-    merged = merge_partials(partials).toPandas()
+    partials = rollup_raw(left, "1h", vocab).unionByName(rollup_raw(right, "1h", vocab))
+    merged = merge_partials(partials, vocab).toPandas()
     full = rollup_raw(transcripts, "1h").toPandas()
     compare_frames(merged, full, KEYS, float_cols=FLOATS)
+
+
+def test_rollup_raw_unknown_role_and_tool(spark):
+    """A role outside schema.ROLES counts in no n_* column and a tool missing
+    from the passed dictionary sets no bit: the result equals the pandas
+    reference with the unknown tools blanked."""
+    import pandas as pd
+
+    from mpnsm_spark.generator import with_value
+    from mpnsm_spark.schema import TRANSCRIPT_SCHEMA
+
+    pdf = pd.DataFrame(
+        [
+            ("c1", 0, "critic", "aa", "exec", "2025-01-01 10:00:01"),
+            ("c1", 1, "user", "b", "fetch", "2025-01-01 10:00:30"),
+            ("c1", 2, "moderator", "ccc", "fetch", "2025-01-01 10:01:05"),
+            ("c2", 0, "assistant", "dddd", None, "2025-01-01 10:00:40"),
+        ],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    )
+    pdf["ts"] = pd.to_datetime(pdf["ts"])
+    raw = with_value(spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA))
+    got = rollup_raw(raw, "1m", ["exec"]).toPandas()
+
+    ref = raw.toPandas()
+    ref.loc[ref["tool"] != "exec", "tool"] = None
+    compare_frames(got, rollup_pandas(ref, "1m"), KEYS, float_cols=FLOATS)
+    row = got.set_index("conv_id").loc["c1"].sort_values("bucket_start")
+    unknown = row.iloc[1]  # the 10:01 bucket holds only the unknown role/tool
+    assert [unknown[f"n_{r}"] for r in ("user", "assistant", "system", "tool")] == [0] * 4
+    assert unknown["tools_mask"] == 0 and list(unknown["tools"]) == []
+    assert list(row["tools_mask"]) == [1, 0]
 
 
 def test_rollup_order_insensitive(spark, transcripts):

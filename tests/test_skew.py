@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mpnsm_spark.operators.rollup import merge_partials, rollup_raw
+from mpnsm_spark.operators.rollup import distinct_tool_vocab, merge_partials, rollup_raw
 from mpnsm_spark.operators.skew import (
     apply_per_series,
     conv_sizes,
@@ -94,10 +94,11 @@ def test_per_series_kernel_with_split_matches_unsplit(spark, transcripts):
 
 def test_split_rollup_remerge(transcripts):
     """Tier rollup of sub-split raw + merge_partials == unsplit rollup."""
+    vocab = distinct_tool_vocab(transcripts)
     sub = with_sub_splits(transcripts, split_threshold=30)
-    parts = rollup_raw(sub.drop("sub_id"), "1h")  # sanity: dropping split is the same df
+    parts = rollup_raw(sub.drop("sub_id"), "1h", vocab)  # sanity: dropping split is the same df
     full = rollup_raw(transcripts, "1h").toPandas()
-    merged = merge_partials(parts).toPandas()
+    merged = merge_partials(parts, vocab).toPandas()
     compare_frames(merged, full, ["conv_id", "bucket_start"], float_cols=FLOATS)
 
 

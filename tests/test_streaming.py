@@ -75,6 +75,7 @@ def test_stream_to_tableio_sink_and_late_drop(spark, tmp_path):
     flush = [("__flush__", 0, "user", "x", None, "2025-01-01 11:00:00")]
 
     io = TableIO(str(tmp_path / "wh"))
+    vocab = ["browse", "exec"]
 
     def run_available(_):
         # one availableNow run per arrival wave; the watermark persists in
@@ -90,6 +91,7 @@ def test_stream_to_tableio_sink_and_late_drop(spark, tmp_path):
                 spark,
                 with_value(stream),
                 io,
+                tool_vocab=vocab,
                 checkpoint_dir=str(tmp_path / "ckpt"),
                 num_buckets=4,
             )
@@ -115,13 +117,8 @@ def test_stream_to_tableio_sink_and_late_drop(spark, tmp_path):
     )
     exp_pdf["ts"] = pd.to_datetime(exp_pdf["ts"])
     expected = with_value(spark.createDataFrame(exp_pdf, schema=TRANSCRIPT_SCHEMA))
-    want = batch_equivalent(expected).toPandas()
-    compare_frames(
-        got.drop(columns=["tools_mask"], errors="ignore"),
-        want,
-        ["conv_id", "bucket_start"],
-        float_cols=FLOATS,
-    )
+    want = batch_equivalent(expected, vocab).toPandas()
+    compare_frames(got, want, ["conv_id", "bucket_start"], float_cols=FLOATS)
     # lineage rows for every micro-batch that emitted windows
     lin = io.read(spark, "lineage").toPandas()
     assert (lin.stage == "stream_tier_1m").all()
@@ -157,6 +154,7 @@ def test_stream_checkpoint_restart_appends_only_new(spark, tmp_path):
                 spark,
                 with_value(stream),
                 io,
+                tool_vocab=[],
                 checkpoint_dir=str(tmp_path / "ckpt2"),
                 num_buckets=4,
             )
@@ -199,8 +197,13 @@ def test_streaming_rollup_out_of_order_arrival(spark):
         )
         from mpnsm_spark.generator import with_value as wv
 
-        got = run_stream_to_memory(spark, wv(stream), "t1m_stream_test2").toPandas()
-    want = batch_equivalent(raw).toPandas()  # vocab-less fallback path
+        from mpnsm_spark.operators.rollup import distinct_tool_vocab
+
+        vocab = distinct_tool_vocab(raw)
+        got = run_stream_to_memory(
+            spark, wv(stream), "t1m_stream_test2", tool_vocab=vocab
+        ).toPandas()
+    want = batch_equivalent(raw, vocab).toPandas()
     compare_frames(got, want, ["conv_id", "bucket_start"], float_cols=FLOATS)
 
 
@@ -393,15 +396,28 @@ def test_streaming_cascade_equals_batch(spark):
             )
 
 
-def test_streaming_cascade_requires_vocab(spark):
+def test_streaming_cascade_requires_vocab(spark, tmp_path):
+    """Every streaming entry point refuses to run without a tool dictionary
+    (there is no vocab-less fallback aggregate)."""
     import pytest
 
-    from mpnsm_spark.streaming.rollup_stream import streaming_cascade
+    from mpnsm_spark.sources.tableio import TableIO
+    from mpnsm_spark.streaming.rollup_stream import (
+        stream_to_tableio,
+        streaming_cascade,
+        streaming_rollup_1m,
+    )
 
     with pytest.raises(ValueError, match="tool_vocab"):
         streaming_cascade(None, to_tier="1d", tool_vocab=None)
     with pytest.raises(ValueError, match="to_tier"):
         streaming_cascade(None, to_tier="1w", tool_vocab=["a"])
+    with pytest.raises(ValueError, match="tool_vocab"):
+        streaming_rollup_1m(None)
+    with pytest.raises(ValueError, match="tool_vocab"):
+        run_stream_to_memory(spark, None, "t1m_no_vocab")
+    with pytest.raises(ValueError, match="tool_vocab"):
+        stream_to_tableio(spark, None, TableIO(str(tmp_path / "wh")))
 
 
 def test_streaming_row_empty_events(spark, tmp_path):

@@ -305,6 +305,23 @@ def test_dup_clusters_long_chain_and_fixed_iters(spark):
         assert lbl[node] == max(0, node - 3)
 
 
+def test_dup_clusters_fixed_iters_endpoint_missing_from_ids(spark):
+    """The fixed-round fast path labels a pair endpoint that ``ids`` omits
+    like the general path: doc 1 links 2 and 3 into cluster 1 and is kept,
+    and the isolated id 9 stays a singleton keeper."""
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
+    ids = spark.createDataFrame([(2,), (3,), (9,)], "doc_id long")
+    got = (
+        dedup.resolve_duplicate_clusters(pairs, ids=ids, fixed_iters=4)
+        .toPandas()
+        .set_index("doc_id")
+        .sort_index()
+    )
+    assert list(got.index) == [1, 2, 3, 9]
+    assert list(got.cluster_id) == [1, 1, 1, 9]
+    assert list(got.keep_flag) == [True, False, False, True]
+
+
 def test_dup_clusters_singletons_and_real_pairs(spark, docs):
     """End-to-end on the documents table: minhash pairs -> clusters; docs
     without any near-dup remain singleton keepers; every cluster keeps
