@@ -86,50 +86,8 @@ def _pack_codes(codes: np.ndarray, lengths: np.ndarray) -> bytes:
     return np.packbits(bits).tobytes()
 
 
-class _BitReader:
-    """Sequential MSB-first bit reader over a packed blob (decode path).
-
-    O(1) reads via a precomputed 64-bit big-endian window at every byte
-    offset (one vectorized pass at construction), so decoding costs a few
-    integer ops per TOKEN instead of a Python loop per BIT — ~30× faster on
-    real streams. Plain Python ints afterwards (list indexing beats numpy
-    scalar indexing in a scalar loop).
-    """
-
-    __slots__ = ("win", "tail", "pos")
-
-    _MASK = (1 << 64) - 1
-
-    def __init__(self, blob: bytes):
-        b = np.concatenate(
-            [np.frombuffer(blob, np.uint8), np.zeros(16, np.uint8)]
-        )
-        self.win = (
-            np.lib.stride_tricks.sliding_window_view(b, 8)
-            .copy()
-            .view(">u8")
-            .ravel()
-            .tolist()
-        )
-        self.tail = b.tolist()
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        q, r = p >> 3, p & 7
-        w = self.win[q]
-        if r:
-            w = ((w << r) & self._MASK) | (self.tail[q + 8] >> (8 - r))
-        self.pos = p + n
-        return w >> (64 - n)
-
-
 def _zigzag(x: np.ndarray) -> np.ndarray:
     return ((x << 1) ^ (x >> 63)).astype(np.int64).view(np.uint64)
-
-
-def _unzigzag(z: int) -> int:
-    return (z >> 1) ^ -(z & 1)
 
 
 # ------------------------------------------------------------- ts encode/decode
@@ -169,35 +127,11 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
     return head + _pack_codes(codes.ravel(), lens.ravel())
 
 
-def _decode_timestamps_scalar(blob: bytes, n: int) -> np.ndarray:
-    """Reference scalar decoder (kept as the vectorized decoder's test twin)."""
-    if n == 0:
-        return np.empty(0, np.int64)
-    first = int.from_bytes(blob[:8], "big", signed=True)
-    r = _BitReader(blob[8:])
-    read = r.read
-    delta, cur = 0, first
-    out = [first]
-    append = out.append
-    for _ in range(n - 1):
-        if read(1):
-            for _prefix, _pbits, vbits in _TS_CLASSES:
-                if read(1) == 0:
-                    z = read(vbits)
-                    break
-            else:
-                z = read(64)
-            delta += (z >> 1) ^ -(z & 1)
-        cur += delta
-        append(cur)
-    return np.array(out, dtype=np.int64)
-
-
 def _extract_bits(body: bytes, pos: np.ndarray, nbits: np.ndarray) -> np.ndarray:
     """Vectorized variable-length bit-field gather: for each i, the
     ``nbits[i]``-bit (1..64) big-endian field starting at bit ``pos[i]`` of
-    ``body``. Same windowing trick as :class:`_BitReader`, but as one numpy
-    pass over all fields instead of a Python call per field."""
+    ``body``: a precomputed 64-bit big-endian window at every byte offset,
+    shifted by the field's bit offset — one numpy pass over all fields."""
     b = np.concatenate([np.frombuffer(body, np.uint8), np.zeros(16, np.uint8)])
     win = np.lib.stride_tricks.sliding_window_view(b, 8).copy().view(">u8").ravel()
     q = (pos >> 3).astype(np.int64)
@@ -213,8 +147,9 @@ def decode_timestamps(blob: bytes, n: int) -> np.ndarray:
     from ONE peeked window (4 bits) and tracks bit positions — the only
     inherently sequential part of a prefix-coded stream — then payload
     extraction, zigzag inversion, and the dod→delta→ts double prefix-sum all
-    run as numpy passes. Bit-identical to :func:`_decode_timestamps_scalar`
-    (pinned by tests/test_gorilla.py)."""
+    run as numpy passes. Bit-identical to the scalar bit-reader decoder kept
+    as its test twin in ``tests/gorilla_scalar.py`` (pinned by
+    ``tests/test_gorilla.py``)."""
     if n == 0:
         return np.empty(0, np.int64)
     first = int.from_bytes(blob[:8], "big", signed=True)
@@ -296,26 +231,6 @@ def encode_values(vals: np.ndarray) -> bytes:
     return head + _pack_codes(codes.ravel(), lens.ravel())
 
 
-def _decode_values_scalar(blob: bytes, n: int) -> np.ndarray:
-    """Reference scalar decoder (kept as the vectorized decoder's test twin)."""
-    if n == 0:
-        return np.empty(0, np.float64)
-    first = int.from_bytes(blob[:8], "big")
-    r = _BitReader(blob[8:])
-    read = r.read
-    prev = first
-    out = [first]
-    append = out.append
-    for _ in range(n - 1):
-        if read(1):
-            hdr = read(11)  # lead(5) + (mlen-1)(6) in one window read
-            mlen = (hdr & 63) + 1
-            payload = read(mlen)
-            prev ^= payload << (64 - (hdr >> 6) - mlen)
-        append(prev)
-    return np.array(out, dtype=np.uint64).view(np.float64)
-
-
 def decode_values(blob: bytes, n: int) -> np.ndarray:
     """Two-pass vectorized decode of the stateless XOR stream. Pass 1 is a
     light Python scan — ONE peeked 12-bit window per element classifies
@@ -323,7 +238,8 @@ def decode_values(blob: bytes, n: int) -> np.ndarray:
     2 is numpy: gather all payloads (:func:`_extract_bits`), left-align them,
     and reconstruct the value chain with ``bitwise_xor.accumulate`` — the XOR
     chain is a prefix-scan, so no per-element Python survives. Bit-identical
-    to :func:`_decode_values_scalar` (pinned by tests/test_gorilla.py)."""
+    to the scalar bit-reader decoder kept as its test twin in
+    ``tests/gorilla_scalar.py`` (pinned by ``tests/test_gorilla.py``)."""
     if n == 0:
         return np.empty(0, np.float64)
     first = int.from_bytes(blob[:8], "big")

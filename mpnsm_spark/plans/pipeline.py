@@ -39,10 +39,17 @@ Execution model (why this scales):
   read-back, no dedupe window. Storage reads (with keep-last dedupe) happen
   only on resume, where prior snapshots exist.
 - **Stage DAG, parallel**: the independent 1h/1d branches, chunks,
-  retention and every lineage commit run from a pool of driver threads, so
-  the next stage's tasks back-fill executors freed by the current stage's
-  tail (guide §2.6). Gated A/B at bench scale: parallel 6.1s vs serial
-  14.0s. TableIO commits are lock-serialized.
+  retention and every lineage stats collect run from a pool of driver
+  threads, so the next stage's tasks back-fill executors freed by the
+  current stage's tail (guide §2.6). Gated A/B at bench scale: parallel 6.1s
+  vs serial 14.0s. TableIO commits are lock-serialized.
+- **Bookkeeping on the driver**: lineage rows (one per stage × bucket) are
+  built as a ``pyarrow.Table`` and committed by ``TableIO.append`` through
+  the same manifest rename as data, and read back with
+  ``TableIO.read_arrow`` — neither submits a Spark job. A tier or leaf wave
+  pays one stats collect; file-level retention, kernel stages and the
+  stream sink already hold their counts. A no-op re-run with file-level
+  retention submits only the vocabulary scan.
 - The wave loop is over salt buckets (a driver-side int list, not data); each
   wave is one declarative Spark job over ``bucket_id IN (...)``. The only
   full raw scans are tier-1m (fused with the dedupe) and the map-only
@@ -57,9 +64,12 @@ import uuid
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mpnsm_spark import TIERS
 from mpnsm_spark.generator import with_value
@@ -67,7 +77,7 @@ from mpnsm_spark.operators.gapfill import gapfill_anchored
 from mpnsm_spark.operators.gorilla import encode_tier_chunks
 from mpnsm_spark.operators.rollup import cascade, encode_role_tool, rollup_encoded
 from mpnsm_spark.operators.skew import apply_per_series, with_salt
-from mpnsm_spark.session import local_frame
+from mpnsm_spark.schema import LINEAGE_SCHEMA
 from mpnsm_spark.sources.tableio import TableIO
 
 LINEAGE_TABLE = "lineage"
@@ -350,62 +360,64 @@ def normalize(raw_df: DataFrame, num_buckets: int) -> DataFrame:
 # ------------------------------------------------------------------- lineage
 
 
-def load_lineage_map(spark: SparkSession, io: TableIO) -> dict[str, set[int]]:
-    """One storage read at pipeline start: stage → completed bucket ids."""
+def _ok_lineage(io: TableIO, *columns: str) -> list[dict]:
+    """The committed ``status="ok"`` lineage rows (``columns`` only), read
+    on the driver: no Spark job."""
     if not io.exists(LINEAGE_TABLE):
-        return {}
-    rows = (
-        io.read(spark, LINEAGE_TABLE, merge_schema=True)
-        .filter(F.col("status") == "ok")
-        .select("stage", "bucket_id")
-        .distinct()
-        .collect()
-    )
+        return []
+    rows = io.read_arrow(LINEAGE_TABLE, ["status", *columns]).to_pylist()
+    return [r for r in rows if r["status"] == "ok"]
+
+
+def load_lineage_map(io: TableIO) -> dict[str, set[int]]:
+    """Stage → completed bucket ids, from one driver-side read of the
+    lineage table (no Spark job)."""
     m: dict[str, set[int]] = defaultdict(set)
-    for r in rows:
-        m[r.stage].add(r.bucket_id)
+    for r in _ok_lineage(io, "stage", "bucket_id"):
+        m[r["stage"]].add(r["bucket_id"])
     return m
 
 
-def _lineage_df(
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+
+
+def _lineage_rows(
     run_id: str,
     stage: str,
-    per_bucket_stats: DataFrame,
+    per_bucket_stats: list[dict],
     wall_seconds: float,
     version: int,
     n_buckets: int = 1,
-) -> DataFrame:
-    """The one builder of lineage rows: a LAZY select over the per-bucket
-    stats frame, so the lineage append is ONE Spark job (no driver collect /
-    re-create), always in the same 11 columns.
+) -> pa.Table:
+    """Builds every lineage row: a driver-side ``pyarrow.Table`` in
+    the 11 columns of :data:`~mpnsm_spark.schema.LINEAGE_SCHEMA`, which
+    ``TableIO.append`` commits without a Spark job.
 
-    ``per_bucket_stats`` carries ``bucket_id`` and ``output_rows``;
+    Each stats dict carries ``bucket_id`` and ``output_rows``;
     ``input_rows``, ``encode_bytes`` and ``n_errors`` default to 0 and
     ``error_class`` to null when absent. ``status`` is ``"error"`` exactly
-    when ``n_errors > 0``. ``n_buckets`` (known driver-side) apportions the
-    stage wall across rows."""
-
-    def stat(name: str, default, dtype: str) -> F.Column:
-        if name in per_bucket_stats.columns:
-            return F.col(name).cast(dtype)
-        return F.lit(default).cast(dtype)
-
-    n_errors = stat("n_errors", 0, "long")
-    return per_bucket_stats.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.col("bucket_id").cast("int").alias("bucket_id"),
-        stat("input_rows", 0, "long").alias("input_rows"),
-        F.col("output_rows").cast("long").alias("output_rows"),
-        stat("encode_bytes", 0, "long").alias("encode_bytes"),
-        (F.lit(float(wall_seconds)) / F.lit(max(int(n_buckets), 1))).alias(
-            "wall_seconds"
-        ),
-        F.when(n_errors > 0, "error").otherwise("ok").alias("status"),
-        F.lit(version).cast("int").alias("version"),
-        stat("error_class", None, "string").alias("error_class"),
-        n_errors.alias("n_errors"),
-    )
+    when ``n_errors > 0``. ``n_buckets`` apportions the stage wall across
+    rows."""
+    wall = float(wall_seconds) / max(int(n_buckets), 1)
+    rows = []
+    for st in per_bucket_stats:
+        n_errors = int(st.get("n_errors") or 0)
+        rows.append(
+            {
+                "run_id": run_id,
+                "stage": stage,
+                "bucket_id": int(st["bucket_id"]),
+                "input_rows": int(st.get("input_rows") or 0),
+                "output_rows": int(st["output_rows"]),
+                "encode_bytes": int(st.get("encode_bytes") or 0),
+                "wall_seconds": wall,
+                "status": "error" if n_errors > 0 else "ok",
+                "version": int(version),
+                "error_class": st.get("error_class"),
+                "n_errors": n_errors,
+            }
+        )
+    return pa.Table.from_pylist(rows, schema=_LINEAGE_ARROW)
 
 
 # ---------------------------------------------------------------- read helpers
@@ -531,12 +543,14 @@ def classify_files_for_retention(
 # ------------------------------------------------------------------ integrity
 
 
-def checksums_match(reference_df: DataFrame, stored_df: DataFrame) -> bool:
+def checksums_match(reference_df: DataFrame, stored_df: DataFrame) -> tuple[bool, int]:
     """Order-insensitive per-conversation (turn_idx, text, ts) multiset
-    checksum equality. Hashes are computed map-side so only (conv, chk)
-    crosses the shuffle — the text column itself NEVER shuffles. bit_xor is
-    commutative/associative and overflow-free under ANSI mode; identical
-    duplicate rows cancel on BOTH sides equally, so equality still holds."""
+    checksum equality, and the stored row count, from ONE collect.
+
+    Hashes are computed map-side so only (conv, chk, n) crosses the shuffle —
+    the text column itself NEVER shuffles. bit_xor is commutative/associative
+    and overflow-free under ANSI mode; identical duplicate rows cancel in it
+    pairwise, so the per-conversation row count is compared too."""
 
     def checksum(df: DataFrame) -> DataFrame:
         return df.groupBy("conv_id").agg(
@@ -544,18 +558,20 @@ def checksums_match(reference_df: DataFrame, stored_df: DataFrame) -> bool:
             F.count(F.lit(1)).alias("n"),
         )
 
-    bad = (
+    mismatch = (
+        F.col("r.chk").isNull()
+        | F.col("g.chk").isNull()
+        | (F.col("r.chk") != F.col("g.chk"))
+        | (F.col("r.n") != F.col("g.n"))
+    )
+    bad, stored_rows = (
         checksum(reference_df)
         .alias("r")
         .join(checksum(stored_df).alias("g"), "conv_id", "full")
-        .filter(
-            F.col("r.chk").isNull()
-            | F.col("g.chk").isNull()
-            | (F.col("r.chk") != F.col("g.chk"))
-            | (F.col("r.n") != F.col("g.n"))
-        )
+        .agg(F.count_if(mismatch), F.sum("g.n"))
+        .collect()[0]
     )
-    return bad.limit(1).count() == 0
+    return bad == 0, stored_rows or 0
 
 
 def verify_turn_integrity(
@@ -563,7 +579,7 @@ def verify_turn_integrity(
 ) -> bool:
     """Per-turn text equality under stable (conv_id, turn_idx) ordering:
     normalized reference rows vs the stored raw_retained table."""
-    return checksums_match(reference_df, read_raw_retained(spark, io))
+    return checksums_match(reference_df, read_raw_retained(spark, io))[0]
 
 
 # ----------------------------------------------------- kernel stages (F1 + P8)
@@ -596,16 +612,15 @@ def run_kernel_stage(
     snapshots. Everything is one distributed pass of
     :func:`~mpnsm_spark.operators.skew.apply_per_series` with
     ``on_error="mark"``; the error channel rides in its two marker columns,
-    no accumulator races, no second job.
+    no accumulator races, no second job. The resume read and the lineage
+    commit both run on the driver (``TableIO.read_arrow`` and a
+    ``pyarrow.Table`` append of the write's ``Observation`` counts), so the
+    snapshot write is the stage's only Spark job.
     """
     cfg = cfg or PipelineConfig()
     t0 = time.time()
     spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
-    done = (
-        load_lineage_map(spark, io).get(stage.name, set())
-        if not cfg.ephemeral and io.exists(LINEAGE_TABLE)
-        else set()
-    )
+    done = load_lineage_map(io).get(stage.name, set()) if not cfg.ephemeral else set()
     remaining = sorted(set(range(cfg.num_buckets)) - done)
     result = {
         "stage": stage.name,
@@ -681,16 +696,13 @@ def run_kernel_stage(
             result["buckets_error"][b] = err_cls
         result["errored_series"] += n_err
         result["output_rows"] += n_ok
-        stats_rows.append((b, n_ok, n_err, err_cls))
-    stats = local_frame(
-        spark,
-        stats_rows,
-        "bucket_id int, output_rows long, n_errors long, error_class string",
+        stats_rows.append(
+            {"bucket_id": b, "output_rows": n_ok, "n_errors": n_err, "error_class": err_cls}
+        )
+    io.append(
+        _lineage_rows(cfg.run_id, stage.name, stats_rows, wall, version, len(remaining)),
+        LINEAGE_TABLE,
     )
-    lineage = _lineage_df(
-        cfg.run_id, stage.name, stats, wall, version, n_buckets=len(remaining)
-    )
-    io.append(lineage.coalesce(1), LINEAGE_TABLE)
     result["wall_seconds"] = round(wall, 3)
     return result
 
@@ -742,7 +754,7 @@ def run_pipeline(
         # Several waves re-filter norm — worth materializing once.
         norm = norm.cache()
     t_norm_done = time.time()
-    done_map = load_lineage_map(spark, io)
+    done_map = load_lineage_map(io)
     all_buckets = set(range(cfg.num_buckets))
 
     lock = threading.Lock()
@@ -806,10 +818,10 @@ def run_pipeline(
                 stage_table(stage),
                 meta={"stage": stage, "buckets": wave, "tool_vocab": tool_vocab},
             )
-            # Per-bucket lineage in ONE job: stats over the cached output
-            # (tiers) or a pruned read-back of the snapshot just written
-            # (leaves), left-joined to the wave's bucket ids so empty buckets
-            # still get their completion row.
+            # Per-bucket lineage from ONE collect: stats over the cached
+            # output (tiers) or a pruned read-back of the snapshot just
+            # written (leaves); the rows are built and committed on the
+            # driver, and wave buckets with no rows get zeros.
             if is_tier or stage == "retention":
                 stats_src = out
             else:
@@ -832,18 +844,11 @@ def run_pipeline(
                     else []
                 ),
             )
-            all_ids = spark.range(cfg.num_buckets).select(
-                F.col("id").cast("int").alias("bucket_id")
-            ).filter(F.col("bucket_id").isin([int(b) for b in wave]))
-            stats = all_ids.join(stats, "bucket_id", "left").na.fill(0)
-            lineage = _lineage_df(
-                cfg.run_id, stage, stats, time.time() - t0, version,
-                n_buckets=len(wave),
-            )
             # Lineage commits AFTER the data (crash between them only re-runs
             # the bucket) but OFF the critical path: dependents need the data,
             # not the lineage row.
-            submit(lambda ln=lineage: append_lineage(ln))
+            wall = time.time() - t0
+            submit(partial(commit_wave_lineage, stage, stats, wave, version, wall))
             fresh.append(out)
             if fail_after_stage == stage:
                 raise StageFailure(f"injected failure after stage {stage}")
@@ -1004,12 +1009,11 @@ def run_pipeline(
                 meta={"stage": "retention", "rewrote": len(straddling)},
             )
             int_df, _ = io.read_parts(spark, "raw_retained")
-            stored = _latest_snapshot(int_df)
-            rewritten_rows = stored.count()
             # Full text-equality verify on the rewritten subset only — the
             # adopted files are the SAME bytes by construction and the
-            # dropped files are proven below-cutoff by their footers.
-            ok = checksums_match(sub, stored)
+            # dropped files are proven below-cutoff by their footers. The
+            # same pass counts the rewritten rows.
+            ok, rewritten_rows = checksums_match(sub, _latest_snapshot(int_df))
         if adopted:
             version = max(
                 version,
@@ -1026,16 +1030,6 @@ def run_pipeline(
                 "raw_retained",
                 meta={"stage": "retention", "dropped": len(dropped)},
             )
-        adopted_rows = sum(s["rows"] for s in adopted)
-        stats_df = spark.range(1).select(
-            F.lit(-1).cast("int").alias("bucket_id"),
-            F.lit(adopted_rows + rewritten_rows).cast("long").alias("output_rows"),
-            F.lit(total_rows).cast("long").alias("input_rows"),
-        )
-        lineage = _lineage_df(
-            cfg.run_id, "retention", stats_df, time.time() - t0, version
-        )
-        submit(lambda ln=lineage: append_lineage(ln))
         with lock:
             stage_seconds["retention"] = round(time.time() - t0, 3)
             integrity_ok[0] = ok
@@ -1043,6 +1037,24 @@ def run_pipeline(
             raise StageFailure(
                 "rewritten-file text integrity check failed — raw NOT droppable"
             )
+        # One stage-level row (bucket -1), committed only once the rewrite
+        # verified: a failed check leaves retention to re-run.
+        io.append(
+            _lineage_rows(
+                cfg.run_id,
+                "retention",
+                [
+                    {
+                        "bucket_id": -1,
+                        "output_rows": sum(s["rows"] for s in adopted) + rewritten_rows,
+                        "input_rows": total_rows,
+                    }
+                ],
+                time.time() - t0,
+                version,
+            ),
+            LINEAGE_TABLE,
+        )
         if fail_after_stage == "retention":
             raise StageFailure("injected failure after stage retention")
         return True
@@ -1058,11 +1070,20 @@ def run_pipeline(
         with lock:
             futs.append(ex.submit(guarded, fn))
 
-    def append_lineage(lineage: DataFrame) -> None:
-        """One lineage commit, labelled apart from its stage's jobs. The
-        end-of-run wait() drains these before the summary reads the table."""
+    def commit_wave_lineage(
+        stage: str, stats: DataFrame, wave: list[int], version: int, wall: float
+    ) -> None:
+        """Collect one wave's per-bucket stats (the wave's only lineage job,
+        labelled apart from its stage's jobs) and commit its lineage rows on
+        the driver. The end-of-run wait() drains these before the summary
+        reads the table."""
         spark.sparkContext.setJobDescription("mpnsm:lineage")
-        io.append(lineage.coalesce(1), LINEAGE_TABLE)
+        got = {r.bucket_id: r.asDict() for r in stats.collect()}
+        rows = [got.get(b, {"bucket_id": b, "output_rows": 0}) for b in wave]
+        io.append(
+            _lineage_rows(cfg.run_id, stage, rows, wall, version, len(wave)),
+            LINEAGE_TABLE,
+        )
 
     # --- stage DAG -----------------------------------------------------------
     # tier_1m is the root: everything depends on it, run it inline in the main
@@ -1130,18 +1151,14 @@ def run_pipeline(
         kernel_summaries[ks.name] = run_kernel_stage(spark, io, ks, src, cfg)
 
     t_dag_done = time.time()
-    # input_turns (deduped) from the tier_1m lineage the run just committed —
-    # no separate count barrier over norm.
-    lin = io.read(spark, LINEAGE_TABLE, merge_schema=True).filter(
-        (F.col("stage") == "tier_1m") & (F.col("status") == "ok")
-    )
-    input_turns = (
-        lin.groupBy("bucket_id")
-        .agg(F.max_by("input_rows", "version").alias("ir"))
-        .agg(F.sum("ir"))
-        .collect()[0][0]
-        or 0
-    )
+    # input_turns (deduped) from each bucket's latest ok tier_1m lineage row,
+    # read on the driver — no count barrier over norm, no Spark job.
+    latest: dict[int, tuple[int, int]] = {}
+    for r in _ok_lineage(io, "stage", "bucket_id", "version", "input_rows"):
+        if r["stage"] == "tier_1m":
+            b = r["bucket_id"]
+            latest[b] = max(latest.get(b, (-1, 0)), (r["version"], r["input_rows"]))
+    input_turns = sum(n for _, n in latest.values())
 
     wall = time.time() - t_start
     for df in cached:

@@ -73,5 +73,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("wall_seconds", T.DoubleType(), False),
         T.StructField("status", T.StringType(), False),
         T.StructField("version", T.IntegerType(), False),
+        T.StructField("error_class", T.StringType(), True),
+        T.StructField("n_errors", T.LongType(), False),
     ]
 )

@@ -30,7 +30,12 @@ import threading
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from mpnsm_spark.session import local_frame
 
 
 class TableIO:
@@ -78,17 +83,32 @@ class TableIO:
     # ------------------------------------------------------------ operations
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         table: str,
         meta: dict | None = None,
         partition_by: list[str] | None = None,
     ) -> int:
         """Append ``df`` as a new snapshot; returns the snapshot version.
 
+        ``df`` is a Spark DataFrame, or a ``pyarrow.Table`` of driver-side
+        rows (lineage): the table is written as one parquet file on the
+        driver and committed through the same staging move and manifest
+        rename, so it submits no Spark job.
+
         ``partition_by`` hive-partitions the snapshot's files (S6 threaded
-        partitioned save analog — Spark writes partition dirs concurrently).
+        partitioned save analog — Spark writes partition dirs concurrently);
+        DataFrames only.
         """
+        is_arrow = isinstance(df, pa.Table)
+        if is_arrow and partition_by:
+            raise ValueError("partition_by needs a DataFrame, not a pyarrow.Table")
         if self.iceberg:
+            if is_arrow:
+                df = local_frame(
+                    SparkSession.active(),
+                    zip(*df.to_pydict().values()),
+                    from_arrow_schema(df.schema),
+                )
             df.writeTo(f"{self.catalog_prefix}{table}").append()
             return -1
         # A table's snapshots must share one layout (flat vs hive-partitioned):
@@ -101,10 +121,14 @@ class TableIO:
                     f"table {table}: cannot mix partitioned and flat snapshots"
                 )
         staging = os.path.join(self.root, table, f"_staging_{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
+        if is_arrow:
+            os.makedirs(staging)
+            pq.write_table(df, os.path.join(staging, "part-00000.parquet"))
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(staging)
         ddir = self._ddir(table)
         moved = []
         for dirpath, _dirs, files in os.walk(staging):
@@ -244,6 +268,22 @@ class TableIO:
         if not files:
             raise FileNotFoundError(f"table {table} snapshot v{version} is empty")
         return spark.read.parquet(*files)
+
+    def read_arrow(self, table: str, columns: list[str]) -> pa.Table:
+        """``columns`` of a small flat table's committed rows as one
+        ``pyarrow.Table``, read on the driver: no Spark job (the lineage
+        table). Snapshots that lack a requested column read it as nulls."""
+        if self.iceberg:
+            df = SparkSession.active().read.table(f"{self.catalog_prefix}{table}")
+            return df.select(*columns).toArrow()
+        files = self._committed_files(table)
+        if not files:
+            raise FileNotFoundError(f"table {table} has no committed snapshots")
+        ddir = self._ddir(table)
+        return pa.concat_tables(
+            [pq.read_table(os.path.join(ddir, f)) for f in files],
+            promote_options="default",
+        ).select(columns)
 
     def partitions(self, table: str) -> list[str]:
         """Hive partition ids (e.g. ``role=tool``) across committed snapshots."""

@@ -205,9 +205,10 @@ def stream_to_tableio(
 ):
     """Production streaming sink: append-mode (only watermark-FINALIZED
     windows emit) through ``foreachBatch`` into the same TableIO commit path
-    as the batch pipeline — one snapshot + one lineage append per micro-batch,
-    so ``read_tier`` and the resume machinery see streaming output
-    identically to batch output.
+    as the batch pipeline — one snapshot + one lineage append per micro-batch
+    (per-bucket counts observed during the snapshot write, lineage rows
+    committed on the driver), so ``read_tier`` and the resume machinery see
+    streaming output identically to batch output.
 
     Exactly-once story: the checkpoint replays an uncommitted micro-batch
     after a crash; the replayed append writes identical rows at a higher
@@ -223,8 +224,10 @@ def stream_to_tableio(
     """
     import time as _time
 
+    from pyspark.sql import Observation
+
     from mpnsm_spark.operators.skew import with_salt
-    from mpnsm_spark.plans.pipeline import LINEAGE_TABLE, _lineage_df
+    from mpnsm_spark.plans.pipeline import LINEAGE_TABLE, _lineage_rows
 
     agg = with_salt(
         streaming_rollup_1m(stream_df, watermark=watermark, tool_vocab=tool_vocab),
@@ -233,24 +236,30 @@ def stream_to_tableio(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         t0 = _time.time()
-        out = batch_df.withColumn(
+        # Per-bucket stats are observed DURING the snapshot write, so the
+        # lineage rows are built and committed on the driver: no second job.
+        obs = Observation()
+        metrics = []
+        for b in range(num_buckets):
+            c = F.col("bucket_id") == b
+            metrics += [
+                F.count_if(c).alias(f"n{b}"),
+                F.sum(F.when(c, F.col("turn_count"))).alias(f"t{b}"),
+            ]
+        out = batch_df.observe(obs, *metrics).withColumn(
             "_v", F.lit(io.snapshot_version(table) + 1)
-        ).cache()
-        try:
-            version = io.append(
-                out, table, meta={"stream_batch": int(batch_id)}
-            )
-            stats = out.groupBy("bucket_id").agg(
-                F.count(F.lit(1)).alias("output_rows"),
-                F.sum("turn_count").alias("input_rows"),
-            )
-            lineage = _lineage_df(
-                run_id, f"stream_{table}", stats, _time.time() - t0, version,
-                n_buckets=1,
-            )
-            io.append(lineage.coalesce(1), LINEAGE_TABLE)
-        finally:
-            out.unpersist()
+        )
+        version = io.append(out, table, meta={"stream_batch": int(batch_id)})
+        vals = obs.get
+        stats = [
+            {"bucket_id": b, "output_rows": vals[f"n{b}"], "input_rows": vals[f"t{b}"]}
+            for b in range(num_buckets)
+            if vals[f"n{b}"]
+        ]
+        io.append(
+            _lineage_rows(run_id, f"stream_{table}", stats, _time.time() - t0, version),
+            LINEAGE_TABLE,
+        )
 
     writer = agg.writeStream.outputMode("append").foreachBatch(_sink)
     if checkpoint_dir:

@@ -165,10 +165,7 @@ def test_encode_frame_matches_per_group():
 def test_vectorized_decoders_match_scalar_twins():
     """The two-pass vectorized decoders must be bit-identical to the scalar
     reference decoders on every case family (incl. specials and huge dods)."""
-    from mpnsm_spark.operators.gorilla import (
-        _decode_timestamps_scalar,
-        _decode_values_scalar,
-    )
+    from .gorilla_scalar import _decode_timestamps_scalar, _decode_values_scalar
 
     for name, ts in _ts_cases().items():
         blob = encode_timestamps(ts)

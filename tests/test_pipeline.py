@@ -108,6 +108,7 @@ def test_kill_resume_idempotent(spark, transcripts, tmp_path):
 
     resumed = run_pipeline(spark, transcripts, io, _cfg(wave_size=2))
     assert resumed["integrity_ok"]
+    assert resumed["input_turns"] == transcripts.count()
     # Resume skipped completed buckets.
     assert resumed["stages"]["tier_1m"] == 0
     assert resumed["stages"]["tier_1h"] == 2
@@ -328,6 +329,100 @@ def test_every_lineage_file_has_one_schema(spark, tmp_path):
     assert ((lin.status == "error") == (lin.n_errors > 0)).all()
     stream_rows = lin[lin.stage == "stream_stream_tier"]
     assert stream_rows.output_rows.sum() == 1 and stream_rows.error_class.isna().all()
+
+
+def test_lineage_values_match_stored_tables(spark, tmp_path):
+    """A fresh run over 3 conversations in 8 buckets (most of them empty):
+    every tier, gap-fill and chunk stage has exactly one ok lineage row per
+    bucket, and each value matches the stage's stored table."""
+    import pandas as pd
+
+    from mpnsm_spark.generator import generate_transcripts, with_value
+
+    raw = with_value(generate_transcripts(spark, n_convs=3, n_turns=300, seed=11))
+    io = TableIO(str(tmp_path / "wh"))
+    run_pipeline(spark, raw, io, _cfg(num_buckets=8))
+    lin = io.read(spark, LINEAGE_TABLE).toPandas()
+    empty = 0
+    stages = ("tier_1m", "tier_1h", "tier_1d", "gapfill_1d", "chunks_1m", "chunks_1h", "chunks_1d")
+    for stage in stages:
+        stored = io.read(spark, stage).toPandas()
+        by_bucket = stored.groupby("bucket_id")
+        if stage.startswith("tier_"):
+            inputs = by_bucket["turn_count"].sum()
+        elif stage.startswith("gapfill_"):
+            inputs = (~stored["is_gap"]).groupby(stored["bucket_id"]).sum()
+        else:
+            inputs = by_bucket["n_points"].sum()
+        encoded = (
+            (stored["ts_blob"].map(len) + stored["value_blob"].map(len))
+            .groupby(stored["bucket_id"])
+            .sum()
+            if stage.startswith("chunks_")
+            else pd.Series(dtype="int64")
+        )
+        rows = lin[lin.stage == stage].set_index("bucket_id").sort_index()
+        assert list(rows.index) == list(range(8)), stage
+        assert (rows.status == "ok").all(), stage
+        for b, r in rows.iterrows():
+            want = (
+                int((stored["bucket_id"] == b).sum()),
+                int(inputs.get(b, 0)),
+                int(encoded.get(b, 0)),
+                io.snapshot_version(stage),
+            )
+            got = (r.output_rows, r.input_rows, r.encode_bytes, r.version)
+            assert got == want, (stage, b)
+            assert r.n_errors == 0 and pd.isna(r.error_class), (stage, b)
+        empty += int((rows.output_rows == 0).sum())
+    assert empty > 0  # empty buckets are covered too
+
+
+def _jobs_of(spark, fn):
+    """(Spark jobs submitted while ``fn`` ran, its result), from the status
+    tracker's newest job id. Nothing else may run in the session meanwhile."""
+    sc = spark.sparkContext
+
+    def newest_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the scheduler
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    before = newest_job()
+    out = fn()
+    return newest_job() - before, out
+
+
+def test_bookkeeping_submits_no_spark_jobs(spark, tmp_path):
+    """On a finished warehouse: reading lineage and committing lineage rows
+    run on the driver, and a no-op re-run submits only the vocabulary scan."""
+    from mpnsm_spark.generator import generate_transcripts, with_value
+    from mpnsm_spark.plans.pipeline import (
+        _lineage_rows,
+        load_lineage_map,
+        role_tool_vocabs,
+    )
+
+    path = str(tmp_path / "raw")
+    generated = generate_transcripts(spark, n_convs=8, n_turns=800, seed=9)
+    with_value(generated).write.parquet(path)
+    raw = spark.read.parquet(path)  # a bare scan: file-level retention
+    io = TableIO(str(tmp_path / "wh"))
+    run_pipeline(spark, raw, io, _cfg())
+
+    jobs, done = _jobs_of(spark, lambda: load_lineage_map(io))
+    assert jobs == 0
+    assert done["tier_1m"] == {0, 1, 2, 3} and done["retention"] == {-1}
+
+    rows = _lineage_rows("probe", "probe", [{"bucket_id": 0, "output_rows": 1}], 0.5, 1)
+    jobs, _ = _jobs_of(spark, lambda: io.append(rows, LINEAGE_TABLE))
+    assert jobs == 0
+    assert load_lineage_map(io)["probe"] == {0}
+
+    vocab_jobs, _ = _jobs_of(spark, lambda: role_tool_vocabs(raw))
+    jobs, again = _jobs_of(spark, lambda: run_pipeline(spark, raw, io, _cfg()))
+    assert not any(again["stages"].values())
+    assert again["input_turns"] == raw.count()
+    assert jobs == vocab_jobs
 
 
 def test_kernel_stage_error_lineage_and_resume(spark, transcripts, tmp_path):

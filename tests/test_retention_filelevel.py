@@ -11,6 +11,7 @@ from mpnsm_spark.generator import generate_transcripts, with_value
 from mpnsm_spark.plans.pipeline import (
     LINEAGE_TABLE,
     PipelineConfig,
+    StageFailure,
     classify_files_for_retention,
     parquet_footer_stats,
     read_raw_retained,
@@ -144,3 +145,63 @@ def test_rowcount_preserving_rewrite_falls_back_to_row_level(spark, bronze, tmp_
     stored = read_raw_retained(spark, io)
     assert stored.filter(~F.col("text").startswith("REWRITTEN ")).count() == 0
     assert stored.count() == raw.count()
+
+
+class _TamperingIO(TableIO):
+    """Corrupts the straddling-file rewrite of ``raw_retained`` as it
+    commits; every other table is written untouched."""
+
+    def __init__(self, root, tamper):
+        super().__init__(root)
+        self.tamper = tamper
+
+    def append(self, df, table, meta=None, partition_by=None):
+        if table == "raw_retained":
+            df = self.tamper(df)
+        return super().append(df, table, meta=meta, partition_by=partition_by)
+
+
+def _change_one_text(df):
+    first = df.select("conv_id", "turn_idx").orderBy("conv_id", "turn_idx").first()
+    hit = (F.col("conv_id") == first.conv_id) & (F.col("turn_idx") == first.turn_idx)
+    return df.withColumn("text", F.when(hit, F.lit("TAMPERED")).otherwise(F.col("text")))
+
+
+def _add_copies_of_one_row(copies):
+    def tamper(df):
+        one = df.orderBy("conv_id", "turn_idx").limit(1)
+        for _ in range(copies):
+            df = df.unionByName(one)
+        return df
+
+    return tamper
+
+
+@pytest.mark.parametrize(
+    "tamper",
+    [_change_one_text, _add_copies_of_one_row(1), _add_copies_of_one_row(2)],
+    # Two extra copies cancel in bit_xor: only the row count catches them.
+    ids=["text", "duplicate", "duplicate_pair"],
+)
+def test_tampered_rewrite_fails_integrity_check(spark, bronze, tmp_path, tamper):
+    io = _TamperingIO(str(tmp_path / "wh"), tamper)
+    with pytest.raises(StageFailure, match="rewritten-file text integrity check failed"):
+        run_pipeline(spark, spark.read.parquet(bronze), io, _cfg(retention_cutoff=CUTOFF))
+
+
+def test_failed_integrity_check_leaves_retention_to_rerun(spark, bronze, tmp_path):
+    """A rewrite that fails its check commits no retention lineage row, so a
+    re-run redoes and re-verifies retention instead of trusting it."""
+    root = str(tmp_path / "wh")
+    raw = spark.read.parquet(bronze)
+    cfg = _cfg(retention_cutoff=CUTOFF)
+    with pytest.raises(StageFailure):
+        run_pipeline(spark, raw, _TamperingIO(root, _change_one_text), cfg)
+    io = TableIO(root)
+    lin = io.read(spark, LINEAGE_TABLE).toPandas()
+    assert "retention" not in set(lin.stage)
+    again = run_pipeline(spark, raw, io, cfg)
+    assert again["stages"]["retention"] == 1 and again["integrity_ok"]
+    retained = read_raw_retained(spark, io)
+    assert retained.filter(F.col("text") == "TAMPERED").count() == 0
+    assert retained.count() == raw.filter(F.col("ts") >= CUTOFF).count()
