@@ -1711,10 +1711,11 @@ def q_manager_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``/root/reference/mpnsm/time_series/manager.py:20-39, 135-149``) as an
     EXACT driver row: a two-level declarative config — root entry horizon 5,
     cohort-'1' override horizon 3 with ``targets`` field-inherited from the
-    root — resolves via broadcast config inheritance (operators/config.py),
-    then ``run_manager`` executes each distinct resolved config as ONE
-    kernel stage (resume + error lineage) with the SQL-replayable
-    ``linear_hinge`` forecaster. The oracle replays unit resolution
+    root — resolves via broadcast config inheritance (operators/config.py)
+    onto every input row, then ``run_manager`` runs ONE kernel stage per
+    target (resume + error lineage) over all units, each series reading its
+    horizon from its own rows, with the SQL-replayable ``linear_hinge``
+    forecaster. The oracle replays unit resolution
     (``user_id % 3``), the Cramer's-rule fit under the decimal contract,
     and the per-cohort horizon; output rounded half-away-from-zero at 6dp."""
     import tempfile

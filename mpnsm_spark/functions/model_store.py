@@ -48,6 +48,7 @@ from mpnsm_spark.sources.tableio import TableIO
 __all__ = [
     "MODEL_STATE_SCHEMA",
     "fit_model_states",
+    "state_row",
     "save_model_states",
     "load_model_states",
     "model_from_state",
@@ -80,35 +81,13 @@ def fit_model_states(
     """
     kwargs = dict(model_kwargs or {})
     tgt = target if target is not None else value_col
-    params_json = json.dumps(kwargs, sort_keys=True)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [
-            "conv_id", "target", "params_json", "n_train", "changepoints",
-            "beta", "smooth_fill", "smooth_train",
-        ]
         vals = pdf[value_col].to_numpy(np.float64)
         if len(vals) < min_train:
-            return pd.DataFrame({c: [] for c in cols}).astype(
-                {"n_train": "int32", "smooth_fill": float}
-            )
+            return pd.DataFrame()  # apply_per_series drops zero-row results
         m = TrendSeasonalOLS(**kwargs).fit(vals)
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf[key].iloc[0]],
-                "target": [tgt],
-                "params_json": [params_json],
-                "n_train": [np.int32(m.n_train_)],
-                "changepoints": [[int(c) for c in m.changepoints_]],
-                "beta": [[float(b) for b in m.beta_]],
-                "smooth_fill": [float(m.smooth_fill_)],
-                "smooth_train": [
-                    None
-                    if m.smooth_train_ is None
-                    else [float(s) for s in m.smooth_train_]
-                ],
-            }
-        )
+        return state_row(pdf[key].iloc[0], tgt, kwargs, m)
 
     return apply_per_series(
         df.select(key, order_col, value_col),
@@ -116,6 +95,26 @@ def fit_model_states(
         MODEL_STATE_SCHEMA,
         key=key,
         order_col=order_col,
+    )
+
+
+def state_row(key, target: str, kwargs: dict, m: TrendSeasonalOLS,
+              key_col: str = "conv_id") -> pd.DataFrame:
+    """A fitted model's state as one :data:`MODEL_STATE_SCHEMA` row, its
+    key column named ``key_col``."""
+    return pd.DataFrame(
+        {
+            key_col: [key],
+            "target": [target],
+            "params_json": [json.dumps(kwargs, sort_keys=True, default=list)],
+            "n_train": [np.int32(m.n_train_)],
+            "changepoints": [[int(c) for c in m.changepoints_]],
+            "beta": [[float(b) for b in m.beta_]],
+            "smooth_fill": [float(m.smooth_fill_)],
+            "smooth_train": [
+                None if m.smooth_train_ is None else [float(v) for v in m.smooth_train_]
+            ],
+        }
     )
 
 
@@ -190,9 +189,13 @@ def model_from_state(state: dict) -> TrendSeasonalOLS:
 PREDICT_SCHEMA = "conv_id string, target string, step int, yhat double"
 
 
-def predict_from_states(states: DataFrame, horizon: int) -> DataFrame:
+def predict_from_states(states: DataFrame, horizon: int | str) -> DataFrame:
     """Predict-only mode (``run_mode='predict'``, manager.py:249-275): walk
-    ``horizon`` steps from each stored state WITHOUT touching training data.
+    each stored state forward WITHOUT touching training data.
+
+    ``horizon`` is a step count, or the name of a per-row int column. A row
+    with an ``extra`` column (array<array<double>>, one regressor row per
+    step, in step order) predicts with those values, which must cover every step.
 
     State rows are independent, so this is ``mapInPandas`` — no shuffle, no
     grouping: each Arrow batch of state rows expands to its forecast rows in
@@ -209,13 +212,21 @@ def predict_from_states(states: DataFrame, horizon: int) -> DataFrame:
             outs = []
             for rec in pdf.to_dict("records"):
                 m = model_from_state(rec)
+                h = int(rec[horizon]) if isinstance(horizon, str) else horizon
+                extra = rec.get("extra")
+                if extra is not None and (len(extra) != h or not h):
+                    raise ValueError(
+                        f"series {rec['conv_id']!r}: {len(extra)} future regressor rows "
+                        f"for {h} steps — future feature data must be present"
+                    )
+                x = None if extra is None else np.stack(extra)
                 outs.append(
                     pd.DataFrame(
                         {
                             "conv_id": rec["conv_id"],
                             "target": rec["target"],
-                            "step": np.arange(1, horizon + 1, dtype=np.int32),
-                            "yhat": m.predict(horizon),
+                            "step": np.arange(1, h + 1, dtype=np.int32),
+                            "yhat": m.predict(h, extra=x),
                         }
                     )
                 )

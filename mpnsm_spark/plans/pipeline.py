@@ -64,7 +64,7 @@ import uuid
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
-from functools import partial
+from functools import partial, wraps
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -195,13 +195,8 @@ def ols_forecast_stage(
 
     def kernel(pdf: _pd.DataFrame) -> _pd.DataFrame:
         vals = pdf[value_col].to_numpy(_np.float64)
-        cols = [
-            "conv_id", "step", "yhat", "n_train", "coef_names", "coef_values",
-        ]
         if len(vals) < min_train:
-            return _pd.DataFrame({c: [] for c in cols}).astype(
-                {"step": "int32", "yhat": float, "n_train": "int32"}
-            )
+            return _pd.DataFrame()  # apply_per_series drops zero-row results
         m = TrendSeasonalOLS(**kwargs).fit(vals)
         coefs = m.coefficients()
         names = list(coefs)
@@ -585,6 +580,22 @@ def verify_turn_integrity(
 # ----------------------------------------------------- kernel stages (F1 + P8)
 
 
+def keeps_job_description(fn):
+    """Restore the calling thread's Spark job description when ``fn``
+    returns: a stage's label left on the thread would mislabel its later jobs."""
+
+    @wraps(fn)
+    def run(spark: SparkSession, *args, **kwargs):
+        caller = spark.sparkContext.getLocalProperty("spark.job.description")
+        try:
+            return fn(spark, *args, **kwargs)
+        finally:
+            spark.sparkContext.setJobDescription(caller)
+
+    return run
+
+
+@keeps_job_description
 def run_kernel_stage(
     spark: SparkSession,
     io: TableIO,
@@ -714,6 +725,7 @@ class StageFailure(RuntimeError):
     pass
 
 
+@keeps_job_description
 def run_pipeline(
     spark: SparkSession,
     raw_df: DataFrame,

@@ -115,8 +115,7 @@ def test_run_manager_two_targets_inherited_horizons(spark, panel, tmp_path):
         group_columns=["region", "store"],
         cfg=PipelineConfig(num_buckets=4),
     )
-    assert res.groups == 2  # horizon 5 group and horizon 3 group
-    assert len(res.stages) == 4  # 2 groups x 2 targets, each a kernel stage
+    assert len(res.stages) == 2  # one kernel stage per target
     assert all(not s["buckets_error"] for s in res.stages)
     fc = res.forecasts(spark, io).toPandas()
     # horizons: region A stores get 5 steps, region B stores 3 — per target
@@ -349,7 +348,7 @@ def test_run_manager_predict_serves_only_group_units(spark, panel, tmp_path):
         group_columns=["region", "store"], run_mode="predict",
         cfg=PipelineConfig(num_buckets=4),
     )
-    assert len(pred.forecast_tables) == 2
+    assert pred.forecast_tables == ["mgr_fcst_sales"]
     got = pred.forecasts(spark, io).toPandas()
     steps = got.groupby("_unit_id")["step"].apply(sorted).to_dict()
     sep = "\x1f"
@@ -480,3 +479,134 @@ def test_run_manager_ephemeral_rejects_fit(spark, panel, tmp_path):
             group_columns=["region", "store"], run_mode="fit",
             cfg=PipelineConfig(num_buckets=4, ephemeral=True),
         )
+
+
+def _panel_units(spark, n_units: int):
+    """``n_units`` stores over regions A/B, ``N_TRAIN`` train rows each."""
+    rows = [
+        ("AB"[ui % 2], f"s{ui}", i, float(v))
+        for ui in range(n_units)
+        for i, v in enumerate(_series(ui * 5.0))
+    ]
+    return spark.createDataFrame(rows, "region string, store string, turn_idx int, sales double")
+
+
+def _jobs_with_descriptions(spark, fn):
+    """(description of every Spark job submitted while ``fn`` ran, its
+    result). Nothing else may run in the session meanwhile."""
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the scheduler
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    before = job_ids()
+    out = fn()
+    store = sc._jsc.sc().statusStore()
+    descs = []
+    for j in sorted(job_ids() - before):
+        d = store.job(j).description()
+        descs.append(d.get() if d.isDefined() else None)
+    return descs, out
+
+
+def test_fit_persists_every_unit_across_resolved_configs(spark, tmp_path):
+    """Eight units, each with its own horizon entry (eight resolved configs):
+    fit mode stores one state per unit, and predict forecasts every unit
+    once, at its own horizon."""
+    io = TableIO(str(tmp_path / "wh"))
+    df = _panel_units(spark, 8)
+    root = {"unit": {}, "targets": [{"target_col": "sales", "model": {"n_changepoints": 2}}]}
+    horizons = {f"s{ui}": 2 + ui for ui in range(8)}
+    config = [root] + [
+        {"unit": {"region": "AB"[ui % 2], "store": f"s{ui}"}, "horizon": horizons[f"s{ui}"]}
+        for ui in range(8)
+    ]
+    groups = ["region", "store"]
+    fit = run_manager(spark, df, io, config, group_columns=groups, run_mode="fit",
+                      cfg=PipelineConfig(num_buckets=4))
+    states = io.read(spark, "mgr_models_sales").toPandas()
+    assert sorted(states["_unit_id"]) == sorted(
+        f"{'AB'[ui % 2]}\x1f{s}" for ui, s in enumerate(horizons)
+    )
+    assert sum(s["output_rows"] for s in fit.stages) == 8
+
+    pred = run_manager(spark, df, io, config, group_columns=groups,
+                       run_mode="predict", cfg=PipelineConfig(num_buckets=4))
+    got = pred.forecasts(spark, io).toPandas()
+    steps = got.groupby("_unit_id")["step"].apply(sorted).to_dict()
+    assert steps == {
+        f"{'AB'[ui % 2]}\x1f{s}": list(range(1, h + 1))
+        for ui, (s, h) in enumerate(horizons.items())
+    }
+
+
+def test_fit_then_predict_with_regressors_matches_fit_predict(spark, panel, tmp_path):
+    """A target with lag + event regressors: fit then predict forecasts each
+    unit's future rows with those rows' regressor values, bitwise equal to
+    fit_predict on the same input."""
+    config = [
+        {
+            "unit": {},
+            "horizon": 9,
+            "targets": [
+                {
+                    "target_col": "sales",
+                    "model": {"n_changepoints": 1},
+                    "regressors": [
+                        {"kind": "lag", "col": "visits", "lags": [1, 2]},
+                        {"kind": "big_changer", "dates": ["2024-01-10"]},
+                    ],
+                }
+            ],
+        },
+        {"unit": {"region": "B"}, "horizon": 3},
+    ]
+    kw = dict(group_columns=["region", "store"], date_col="ds",
+              cfg=PipelineConfig(num_buckets=4))
+    io = TableIO(str(tmp_path / "wh"))
+    run_manager(spark, panel, io, config, run_mode="fit", **kw)
+    pred = run_manager(spark, panel, io, config, run_mode="predict", **kw)
+    io_ref = TableIO(str(tmp_path / "ref"))
+    ref = run_manager(spark, panel, io_ref, config, **kw)
+
+    cols = ["_unit_id", "target", "step", "yhat"]
+    got = pred.forecasts(spark, io).select(*cols).toPandas()
+    want = ref.forecasts(spark, io_ref).select(*cols).toPandas()
+    assert len(want) == 4 * N_FUTURE
+    pd.testing.assert_frame_equal(
+        got.sort_values(cols).reset_index(drop=True),
+        want.sort_values(cols).reset_index(drop=True),
+        check_exact=True,
+    )
+
+
+def test_uncovering_config_raises_before_any_table(spark, panel, tmp_path):
+    wh = tmp_path / "wh"
+    with pytest.raises(ValueError, match="does not cover"):
+        run_manager(
+            spark, _train_only(panel), TableIO(str(wh)),
+            [{"unit": {"region": "A"}, "targets": CONFIG[0]["targets"]}],
+            group_columns=["region", "store"], cfg=PipelineConfig(num_buckets=4),
+        )
+    assert not (wh.is_dir() and any(p.name.startswith("mgr_") for p in wh.iterdir()))
+
+
+def test_root_targets_submit_jobs_only_in_kernel_stages(spark, panel, tmp_path):
+    """A root entry that sets targets covers every unit by construction:
+    run_manager submits no job outside its per-target kernel stages, and
+    hands the caller its own job description back."""
+    sc = spark.sparkContext
+    train = _train_only(panel)
+    sc.setJobDescription("caller")
+    try:
+        descs, res = _jobs_with_descriptions(spark, lambda: run_manager(
+            spark, train, TableIO(str(tmp_path / "wh")), CONFIG,
+            group_columns=["region", "store"], cfg=PipelineConfig(num_buckets=4),
+        ))
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert descs and all(str(d).startswith("mpnsm:mgr_fcst_") for d in descs), descs
+    assert set(descs) == {"mpnsm:mgr_fcst_sales", "mpnsm:mgr_fcst_visits"}
+    assert res.forecast_tables == ["mgr_fcst_sales", "mgr_fcst_visits"]

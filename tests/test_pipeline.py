@@ -425,6 +425,21 @@ def test_bookkeeping_submits_no_spark_jobs(spark, tmp_path):
     assert jobs == vocab_jobs
 
 
+def test_run_pipeline_restores_caller_job_description(spark, tmp_path):
+    """Stages label the thread they run on; the caller's own job description
+    comes back on return, so its later jobs are not booked to a stage."""
+    from mpnsm_spark.generator import generate_transcripts, with_value
+
+    raw = with_value(generate_transcripts(spark, n_convs=4, n_turns=200, seed=5))
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        run_pipeline(spark, raw, TableIO(str(tmp_path / "wh")), _cfg())
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_kernel_stage_error_lineage_and_resume(spark, transcripts, tmp_path):
     """A poisoned series in a kernel stage: the run completes, the poisoned
     bucket gets a status='error' lineage row (stage, bucket_id, error class),
