@@ -18,7 +18,7 @@ burst-credit throttled and oscillates ±40% minute-to-minute
 (host-regime study, BASELINE.md); single-pass numbers whipsaw with the host regime, not
 the code (r4 shipped two rows at ~3× their same-day local twins on unchanged
 code). The battery therefore runs BEST-OF-N passes (default 3,
-``SPARK_GRAFT_BENCH_REPS``), each pass gated by scaling_bench v4's absolute
+``SPARK_GRAFT_BENCH_REPS``), each pass gated by ``hostgate``'s absolute
 fixed-work capacity probe: a pass starts only once the box delivers
 ≥ ``SPARK_GRAFT_BENCH_GATE_FRAC`` (default 0.93) of the session-max capacity
 — the burst-credit recovery gate — so the recovery sleep between passes is
@@ -31,13 +31,14 @@ old single-pass behavior for quick local iteration.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import shutil
 import sys
 import tempfile
 import time
+
+import hostgate
 
 
 def _calibrate_capacity(n: int, samples: int = 3, gap_s: float = 15.0) -> float:
@@ -46,37 +47,12 @@ def _calibrate_capacity(n: int, samples: int = 3, gap_s: float = 15.0) -> float:
     few samples across ~30s catches at least one near-fresh reading unless
     the whole window is drained — and then the per-pass gate keeps waiting,
     which is the correct behavior."""
-    from scaling_bench import capacity_quick
-
     best = 0.0
     for i in range(samples):
-        best = max(best, capacity_quick(n))
+        best = max(best, hostgate.capacity_quick(n))
         if i + 1 < samples:
             time.sleep(gap_s)
     return best
-
-
-def _gate(n: int, ref: dict, frac: float, max_wait_s: float = 420.0,
-          settle_s: float = 30.0) -> tuple[float, bool]:
-    """Block until absolute n-proc capacity recovers to ≥ frac × session max
-    (scaling_bench.wait_fresh semantics; diagnostics to stderr so stdout
-    stays the contract's single JSON line)."""
-    from scaling_bench import capacity_quick, wait_quiet
-
-    deadline = time.time() + max_wait_s
-    while True:
-        with contextlib.redirect_stdout(sys.stderr):
-            wait_quiet(max_wait_s=60, consecutive=1)
-            cap = capacity_quick(n)
-        ref["max"] = max(ref.get("max", 0.0), cap)
-        ratio = cap / ref["max"]
-        print(f"bench gate n={n}: cap={cap:,.0f} ratio={ratio:.3f} "
-              f"(need {frac})", file=sys.stderr, flush=True)
-        if ratio >= frac:
-            return ratio, True
-        if time.time() > deadline:
-            return ratio, False
-        time.sleep(settle_s)
 
 
 def main() -> None:
@@ -147,7 +123,9 @@ def main() -> None:
         input_turns = 0
         for rep in range(max(reps, 1)):
             if gating:
-                pre_ratio, pre_ok = _gate(cpus, ref, gate_frac)
+                pre_ratio, pre_ok = hostgate.gate(
+                    cpus, ref, gate_frac, max_wait_s=420.0, settle_s=30.0
+                )
             else:
                 pre_ratio, pre_ok = 1.0, True
             qtimes: dict[str, float] = {}

@@ -25,31 +25,12 @@ Env:
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import sys
 import time
 
-
-def _gate(n: int, ref: dict, frac: float = 0.93, max_wait_s: float = 420.0,
-          settle_s: float = 20.0) -> None:
-    """bench.py's certified-window gate: wait until absolute fixed-work
-    capacity recovers to >= frac x session max (diagnostics to stderr)."""
-    from scaling_bench import capacity_quick, wait_quiet
-
-    deadline = time.time() + max_wait_s
-    while True:
-        with contextlib.redirect_stdout(sys.stderr):
-            wait_quiet(max_wait_s=60, consecutive=1)
-            cap = capacity_quick(n)
-        ref["max"] = max(ref.get("max", 0.0), cap)
-        ratio = cap / ref["max"]
-        print(f"gate: cap={cap:,.0f} ratio={ratio:.3f}", file=sys.stderr,
-              flush=True)
-        if ratio >= frac or time.time() > deadline:
-            return
-        time.sleep(settle_s)
+import hostgate
 
 
 def main() -> None:
@@ -99,7 +80,7 @@ def main() -> None:
     out: dict[str, dict] = {name: {"samples": []} for name in names}
     for rep in range(reps):
         if gating:
-            _gate(cpus, gate_ref)
+            hostgate.gate(cpus, gate_ref, 0.93, max_wait_s=420.0, settle_s=20.0)
         for name in names:
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.time()

@@ -11,7 +11,7 @@ Cluster usage (the deployment path the engine is designed for):
         --warehouse s3://bucket/warehouse \
         --num-buckets 4096 --retention-cutoff "2025-01-01 00:00:00"
 
-Local smoke (also what the sandbox scaling evidence uses):
+Local smoke:
 
     python jobs/run_pipeline_job.py --synthetic-turns 100000 \
         --warehouse /tmp/wh --cores 8

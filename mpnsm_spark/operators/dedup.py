@@ -452,7 +452,6 @@ def resolve_duplicate_clusters(
     id_b: str = "id_b",
     max_iters: int = 20,
     fixed_iters: int | None = None,
-    pointer_jumping: bool = True,
 ) -> DataFrame:
     """Duplicate pairs → connected components → keep-one-per-cluster.
 
@@ -465,15 +464,14 @@ def resolve_duplicate_clusters(
 
     - per round, every node takes ``min(label, min(neighbor labels))`` —
       one shuffle on the edge key per round (large-star step);
-    - ``pointer_jumping=True`` adds path-halving (``label = min(label,
-      label(label))``, the small-star step) so convergence needs
-      O(log diameter) rounds instead of O(diameter);
-    - rounds stop when no label changes (checked with a cheap count) or at
-      ``max_iters``. ``fixed_iters`` runs EXACTLY that many neighbor-min
-      rounds with no convergence actions and no pointer jumping — the
-      bit-deterministic mode the driver oracle replays by unrolling the same
-      rounds in SQL (correct whenever the graph diameter < fixed_iters; the
-      convergence-checked mode is the production default).
+    - by default rounds stop when no label changes (checked with a cheap
+      count) or at ``max_iters``, and each round adds path-halving
+      (``label = min(label, label(label))``, the small-star step) so
+      convergence needs O(log diameter) rounds instead of O(diameter);
+    - ``fixed_iters`` runs EXACTLY that many neighbor-min rounds with no
+      convergence actions and no pointer jumping — the bit-deterministic
+      mode the driver oracle replays by unrolling the same rounds in SQL
+      (correct whenever the graph diameter < fixed_iters).
 
     ``ids`` (optional, one column named like ``id_a``-less ``doc_id``…
     any single-column frame) adds isolated documents as singleton clusters.
@@ -485,138 +483,77 @@ def resolve_duplicate_clusters(
     and partial aggregation; per-round state is one (id, label) row per
     UNIQUE node, never the pair multiset.
     """
+    if fixed_iters is not None and fixed_iters < 1:
+        raise ValueError(f"fixed_iters must be >= 1, got {fixed_iters}")
     # Mirror each pair with ONE explode, not a self-union: a union's two
     # branches duplicate the upstream pair plan in the physical tree, and
     # ReuseExchange only dedups exchanges — the pair-producing JOIN itself
     # (the expensive in-bucket quadratic verify for LSH inputs) would execute
     # TWICE inside the edge materialization job. explode emits both
-    # directions from one execution of the pair plan.
-    fast = bool(fixed_iters) and ids is not None
-    directions = [(id_a, id_b), (id_b, id_a)]
-    if fast:
-        # ...plus a self-loop per endpoint: each round then folds the node's
-        # own label in through the same join as its neighbours'.
-        directions += [(id_a, id_a), (id_b, id_b)]
+    # directions from one execution of the pair plan, plus a self-loop per
+    # endpoint: each round then folds the node's own label in through the
+    # same join as its neighbours', so a round is one join + one
+    # min-aggregate.
     edges = pairs.select(
         F.explode(
             F.array(
                 *[
                     F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
-                    for s, d in directions
+                    for s, d in [(id_a, id_b), (id_b, id_a), (id_a, id_a), (id_b, id_b)]
                 ]
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
+    if ids is not None:
+        # isolated ids ride through the rounds labelled by their own loop
+        id_col = ids.columns[0]
+        edges = edges.unionByName(
+            ids.select(F.col(id_col).alias("src"), F.col(id_col).alias("dst"))
+        )
     # Materialize the edge list ONCE: every propagation round joins `edges`,
     # and the upstream pair-finding plan (LSH self-join over a Python embed
     # stage, say) would otherwise re-execute per round — measured 5x the
-    # whole chain's cost at sf0.1. Edge state is two (fixed-round mode: four)
-    # rows per duplicate pair (tiny next to the corpus), and localCheckpoint also truncates lineage
-    # so the loop's DAG stays flat at any scale.
-    if fast:
-        # Fixed-round corpus mode (both driver rows): every node, pair
-        # endpoint or isolated id, has a SELF-LOOP edge, so a round is one
-        # join + one min-aggregate instead of join + aggregate + left-join,
-        # with no labels-init job and no final singleton anti-join (isolated
-        # ids ride through the rounds labelled by their own loop). Round one
-        # needs no join at all: every label still equals its node's id, so
-        # it is the min ``dst`` per ``src``. Identical labels: min({own} ∪
-        # neighbor labels) per round — exactly the general path's output.
-        id_col = ids.columns[0]
-        loops = ids.select(
-            F.col(id_col).alias("src"), F.col(id_col).alias("dst")
-        )
-        edges = edges.unionByName(loops).localCheckpoint(eager=True)
-        labels = (
-            edges.groupBy("src")
-            .agg(F.min("dst").alias("label"))
-            .withColumnRenamed("src", "id")
-        )
-        # Each round references `labels` exactly ONCE (one join, one
-        # aggregate), so the whole fixed-round chain stays LAZY: no subtree
-        # duplication, no per-round checkpoint job — the driver submits one
-        # job for all rounds. Plan depth is fixed_iters joins over the
-        # checkpointed edge list (flat lineage).
-        for _ in range(fixed_iters - 1):
-            labels = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("label").alias("label"))
-                .withColumnRenamed("src", "id")
-            )
-        return labels.select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            (F.col("id") == F.col("label")).alias("keep_flag"),
-        )
-
+    # whole chain's cost at sf0.1. Edge state is four rows per duplicate
+    # pair (tiny next to the corpus), and localCheckpoint also truncates
+    # lineage so the loop's DAG stays flat at any scale.
     edges = edges.localCheckpoint(eager=True)
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    labels = nodes.select("id", F.col("id").alias("label")).persist()
-    labels.count()
-
-    n_rounds = fixed_iters if fixed_iters is not None else max_iters
-    for it in range(n_rounds):
-        nb_min = (
+    # Round one needs no join: every label still equals its node's id, so
+    # it is the min ``dst`` per ``src``.
+    labels = (
+        edges.groupBy("src").agg(F.min("dst").alias("label"))
+        .withColumnRenamed("src", "id")
+    )
+    for _ in range((fixed_iters or max_iters) - 1):
+        new_labels = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
-            .agg(F.min("label").alias("nb_label"))
+            .agg(F.min("label").alias("label"))
+            .withColumnRenamed("src", "id")
         )
+        if fixed_iters is not None:
+            # Each round references `labels` exactly ONCE, so the whole
+            # fixed-round chain stays LAZY: the driver submits one job for
+            # all rounds over the checkpointed edge list.
+            labels = new_labels
+            continue
+        l2 = new_labels.select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
         new_labels = (
-            labels.join(nb_min, labels.id == nb_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nb_label", F.col("label"))
-                ).alias("label"),
-            )
+            new_labels.join(l2, new_labels.label == l2.p_id)
+            .select("id", F.least("label", "p_label").alias("label"))
+            .localCheckpoint(eager=True)  # one row per node; flat lineage
         )
-        if fixed_iters is None and pointer_jumping:
-            l2 = new_labels.select(
-                F.col("id").alias("p_id"), F.col("label").alias("p_label")
-            )
-            new_labels = (
-                new_labels.join(l2, new_labels.label == l2.p_id, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce("p_label", F.col("label"))
-                    ).alias("label"),
-                )
-            )
-        # truncate lineage: each round's frame is small (one row per node)
-        new_labels = new_labels.localCheckpoint(eager=True)
-        if fixed_iters is None:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels.unpersist()
-            labels = new_labels
-
-    out = labels.select(
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "id")
+            .filter(F.col("n.label") != F.col("o.label"))
+            .limit(1)
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels.select(
         F.col("id").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("id") == F.col("label")).alias("keep_flag"),
     )
-    if ids is not None:
-        id_col = ids.columns[0]
-        singletons = (
-            ids.select(F.col(id_col).alias("doc_id"))
-            .join(out.select("doc_id"), "doc_id", "left_anti")
-            .select(
-                "doc_id",
-                F.col("doc_id").alias("cluster_id"),
-                F.lit(True).alias("keep_flag"),
-            )
-        )
-        out = out.unionByName(singletons)
-    return out

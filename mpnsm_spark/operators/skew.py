@@ -213,11 +213,12 @@ def apply_per_series(
         )
     cols = schema.fieldNames()
 
-    def run_series(g: pd.DataFrame) -> pd.DataFrame:
+    def run_kernel(g: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
+        """``fn`` on one series: ``(output, True)``, or ``(marker row,
+        False)`` when it raises under ``on_error="mark"``."""
         init_python_worker()
         try:
-            out = fn(g.sort_values(order_col).reset_index(drop=True))
-            return out.assign(_status="ok", _error=None) if on_error == "mark" else out
+            return fn(g.sort_values(order_col).reset_index(drop=True)), True
         except Exception as e:  # noqa: BLE001 — the isolation contract
             if on_error == "raise":
                 raise
@@ -225,14 +226,25 @@ def apply_per_series(
             marker[key] = [g[key].iloc[0]]
             marker["_status"] = ["error"]
             marker["_error"] = [type(e).__name__]
-            return pd.DataFrame(marker)
+            return pd.DataFrame(marker), False
+
+    def tag_ok(out: pd.DataFrame) -> pd.DataFrame:
+        return out.assign(_status="ok", _error=None) if on_error == "mark" else out
+
+    def run_series(g: pd.DataFrame) -> pd.DataFrame:
+        out, ok = run_kernel(g)
+        return tag_ok(out) if ok else out
 
     def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
+        # Good rows are tagged once per batch, not once per series.
+        oks, markers = [], []
         for _, g in pdf.drop(columns=["_batch_id"]).groupby(key, sort=False, dropna=False):
-            r = run_series(g)
-            if len(r):
-                outs.append(r)
+            out, ok = run_kernel(g)
+            if not ok:
+                markers.append(out)
+            elif len(out):
+                oks.append(out)
+        outs = ([tag_ok(pd.concat(oks, ignore_index=True))] if oks else []) + markers
         return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(columns=cols)
 
     if split_threshold is not None:

@@ -250,15 +250,6 @@ class PipelineConfig:
     points_per_chunk: int = 4096
     gapfill_tiers: tuple[str, ...] = ("1h", "1d")
     retention_cutoff: str | None = None  # drop raw turns with ts < cutoff
-    # File-level retention (Iceberg DELETE-WHERE shape): drop whole files
-    # whose footer max(ts) < cutoff, ADOPT untouched files by reference (zero
-    # copy), rewrite only cutoff-straddling files. Engages only when raw_df
-    # is PROVABLY a bare parquet scan: its optimized plan must be a single
-    # leaf relation (any Project/Filter — including row-count-preserving text
-    # rewrites — forces the row-level path), footer row totals must equal
-    # count(), and the session timezone must be UTC. Set False to force the
-    # row-level rewrite unconditionally.
-    file_level_retention: bool = True
     # Per-series kernel stages run after the tier DAG with per-bucket error
     # lineage: a poisoned series yields a status="error" lineage row (stage,
     # bucket_id, error class) instead of failing the run, and only errored
@@ -1115,7 +1106,7 @@ def run_pipeline(
             return run
 
         def retention_then_verify():
-            if cfg.file_level_retention and run_retention_file_level():
+            if run_retention_file_level():
                 return
             run_stage("retention", produce_retention)
             ok = verify_turn_integrity(

@@ -1,6 +1,13 @@
-import pytest
+import os
 
-from mpnsm_spark.session import get_spark
+# Spark's Python workers run single-threaded BLAS; the bitwise tests' local
+# numpy oracles must too, or the last bits of a fit differ. Set before
+# anything imports numpy.
+os.environ.setdefault("OMP_NUM_THREADS", "1")
+
+import pytest  # noqa: E402
+
+from mpnsm_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

@@ -84,10 +84,14 @@ def test_file_level_cutoff_matches_row_level_content(spark, bronze, tmp_path):
     io_f = TableIO(str(tmp_path / "wh_file"))
     io_r = TableIO(str(tmp_path / "wh_row"))
     s1 = run_pipeline(spark, raw, io_f, _cfg(retention_cutoff=CUTOFF))
+    # The same rows behind a Filter node: not a bare scan, so the row-level
+    # rewrite runs.
     s2 = run_pipeline(
-        spark, raw, io_r, _cfg(retention_cutoff=CUTOFF, file_level_retention=False)
+        spark, raw.filter(F.col("turn_idx") >= 0), io_r, _cfg(retention_cutoff=CUTOFF)
     )
     assert s1["integrity_ok"] and s2["integrity_ok"]
+    lin = io_r.read(spark, LINEAGE_TABLE).toPandas()
+    assert set(lin[lin.stage == "retention"].bucket_id) == {0, 1, 2, 3}
     a = (
         read_raw_retained(spark, io_f)
         .select("conv_id", "turn_idx", "text", "ts")
