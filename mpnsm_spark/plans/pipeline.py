@@ -48,8 +48,12 @@ Execution model (why this scales):
   the same manifest rename as data, and read back with
   ``TableIO.read_arrow`` — neither submits a Spark job. A tier or leaf wave
   pays one stats collect; file-level retention, kernel stages and the
-  stream sink already hold their counts. A no-op re-run with file-level
-  retention submits only the vocabulary scan.
+  stream sink already hold their counts. A re-run whose lineage already
+  covers every stage returns before the vocabulary scan: no Spark job.
+- **Reads planned from manifests**: each snapshot's manifest records its
+  Spark schema, so reading the engine's own tables submits no
+  schema-inference job, and keep-last per bucket is skipped when the
+  snapshots list disjoint buckets (see :func:`_keep_last`).
 - The wave loop is over salt buckets (a driver-side int list, not data); each
   wave is one declarative Spark job over ``bucket_id IN (...)``. The only
   full raw scans are tier-1m (fused with the dedupe) and the map-only
@@ -426,6 +430,18 @@ def _latest_snapshot(df: DataFrame) -> DataFrame:
     )
 
 
+def _keep_last(io: TableIO, table: str, df: DataFrame) -> DataFrame:
+    """Keep-last per bucket of ``df``, the engine-written rows of ``table``.
+    When the table's snapshots list disjoint buckets (every clean run, one
+    snapshot per stage wave) it is the identity, so the rows are read as
+    they are, with no ``max(_v)`` job; overlapping lists (a crash between
+    data and lineage, a kernel stage's errored buckets re-run) and Iceberg
+    go through :func:`_latest_snapshot`."""
+    if io.buckets_disjoint(table):
+        return df.drop("_v", "bucket_id")
+    return _latest_snapshot(df)
+
+
 def read_tier(spark: SparkSession, io: TableIO, tier: str) -> DataFrame:
     """Tier table with keep-last snapshot dedupe (U2 cache-merge semantics).
 
@@ -435,7 +451,7 @@ def read_tier(spark: SparkSession, io: TableIO, tier: str) -> DataFrame:
     bloat every tier write/cache with a redundant array<string> column)."""
     from mpnsm_spark.operators.rollup import decode_tier
 
-    df = _latest_snapshot(io.read(spark, f"tier_{tier}"))
+    df = _keep_last(io, f"tier_{tier}", io.read(spark, f"tier_{tier}"))
     if "tools" not in df.columns:
         vocab = io.table_meta(f"tier_{tier}").get("tool_vocab", [])
         # Every snapshot must have been encoded under a prefix of the latest
@@ -447,11 +463,11 @@ def read_tier(spark: SparkSession, io: TableIO, tier: str) -> DataFrame:
 
 
 def read_chunks(spark: SparkSession, io: TableIO, tier: str) -> DataFrame:
-    return _latest_snapshot(io.read(spark, f"chunks_{tier}"))
+    return _keep_last(io, f"chunks_{tier}", io.read(spark, f"chunks_{tier}"))
 
 
 def read_gapfill(spark: SparkSession, io: TableIO, tier: str) -> DataFrame:
-    return _latest_snapshot(io.read(spark, f"gapfill_{tier}"))
+    return _keep_last(io, f"gapfill_{tier}", io.read(spark, f"gapfill_{tier}"))
 
 
 def read_raw_retained(spark: SparkSession, io: TableIO) -> DataFrame:
@@ -463,8 +479,7 @@ def read_raw_retained(spark: SparkSession, io: TableIO) -> DataFrame:
     if ext_df is not None:
         parts.append(with_value(ext_df))
     if int_df is not None:
-        d = _latest_snapshot(int_df)
-        parts.append(d)
+        parts.append(_keep_last(io, "raw_retained", int_df))
     out = parts[0]
     for p in parts[1:]:
         out = out.select(*parts[0].columns).unionByName(p.select(*parts[0].columns))
@@ -533,30 +548,35 @@ def checksums_match(reference_df: DataFrame, stored_df: DataFrame) -> tuple[bool
     """Order-insensitive per-conversation (turn_idx, text, ts) multiset
     checksum equality, and the stored row count, from ONE collect.
 
-    Hashes are computed map-side so only (conv, chk, n) crosses the shuffle —
-    the text column itself NEVER shuffles. bit_xor is commutative/associative
-    and overflow-free under ANSI mode; identical duplicate rows cancel in it
-    pairwise, so the per-conversation row count is compared too."""
+    Each row is hashed map-side and signed (+1 reference, -1 stored), so
+    only (conv, hash, sign) crosses the one shuffle — the text column
+    itself NEVER shuffles. A conversation matches when the bit_xor of both
+    sides' hashes is 0 and the signs sum to 0: equal checksums and equal
+    row counts, one side missing included. bit_xor is commutative and
+    overflow-free under ANSI mode; identical duplicate rows cancel in it
+    pairwise, which the row count catches."""
 
-    def checksum(df: DataFrame) -> DataFrame:
-        return df.groupBy("conv_id").agg(
-            F.bit_xor(F.xxhash64("turn_idx", "text", "ts")).alias("chk"),
-            F.count(F.lit(1)).alias("n"),
+    def signed(df: DataFrame, sign: int) -> DataFrame:
+        return df.select(
+            "conv_id",
+            F.xxhash64("turn_idx", "text", "ts").alias("h"),
+            F.lit(sign).alias("s"),
         )
 
-    mismatch = (
-        F.col("r.chk").isNull()
-        | F.col("g.chk").isNull()
-        | (F.col("r.chk") != F.col("g.chk"))
-        | (F.col("r.n") != F.col("g.n"))
+    per_conv = (
+        signed(reference_df, 1)
+        .unionByName(signed(stored_df, -1))
+        .groupBy("conv_id")
+        .agg(
+            F.bit_xor("h").alias("x"),
+            F.sum("s").alias("d"),
+            F.count_if(F.col("s") < 0).alias("n"),
+        )
     )
-    bad, stored_rows = (
-        checksum(reference_df)
-        .alias("r")
-        .join(checksum(stored_df).alias("g"), "conv_id", "full")
-        .agg(F.count_if(mismatch), F.sum("g.n"))
-        .collect()[0]
-    )
+    # Rows with a null conv_id belong to no conversation to compare: a
+    # mismatch, whatever the other side holds.
+    mismatch = (F.col("x") != 0) | (F.col("d") != 0) | F.col("conv_id").isNull()
+    bad, stored_rows = per_conv.agg(F.count_if(mismatch), F.sum("n")).collect()[0]
     return bad == 0, stored_rows or 0
 
 
@@ -584,6 +604,18 @@ def keeps_job_description(fn):
             spark.sparkContext.setJobDescription(caller)
 
     return run
+
+
+def _kernel_result(name: str, buckets_run: int) -> dict:
+    """A kernel stage's summary before it has produced anything."""
+    return {
+        "stage": name,
+        "buckets_run": buckets_run,
+        "buckets_error": {},
+        "output_rows": 0,
+        "errored_series": 0,
+        "wall_seconds": 0.0,
+    }
 
 
 @keeps_job_description
@@ -624,14 +656,7 @@ def run_kernel_stage(
     spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
     done = load_lineage_map(io).get(stage.name, set()) if not cfg.ephemeral else set()
     remaining = sorted(set(range(cfg.num_buckets)) - done)
-    result = {
-        "stage": stage.name,
-        "buckets_run": len(remaining),
-        "buckets_error": {},
-        "output_rows": 0,
-        "errored_series": 0,
-        "wall_seconds": 0.0,
-    }
+    result = _kernel_result(stage.name, len(remaining))
     if not remaining:
         return result
 
@@ -716,6 +741,67 @@ class StageFailure(RuntimeError):
     pass
 
 
+def _dag_stages(cfg: PipelineConfig) -> list[str]:
+    """Every stage the tier DAG runs under ``cfg``."""
+    stages = ["tier_1m", "chunks_1m"]
+    for tier in ("1h", "1d"):
+        stages.append(f"tier_{tier}")
+        if tier in cfg.gapfill_tiers:
+            stages.append(f"gapfill_{tier}")
+        stages.append(f"chunks_{tier}")
+    return stages + ["retention"]
+
+
+def _stage_done(done_map: dict[str, set[int]], stage: str, buckets: set[int]) -> bool:
+    """Whether committed lineage covers ``stage`` over ``buckets``;
+    file-level retention commits one stage-level row, bucket -1."""
+    done = done_map.get(stage, set())
+    return done >= buckets or (stage == "retention" and -1 in done)
+
+
+def _lineage_covers(done_map: dict[str, set[int]], cfg: PipelineConfig) -> bool:
+    """Whether committed lineage covers every DAG stage and kernel stage, so
+    a run has nothing to do (ephemeral kernel stages always run)."""
+    if cfg.ephemeral and cfg.kernel_stages:
+        return False
+    buckets = set(range(cfg.num_buckets))
+    stages = _dag_stages(cfg) + [ks.name for ks in cfg.kernel_stages]
+    return all(_stage_done(done_map, s, buckets) for s in stages)
+
+
+def _summary(
+    io: TableIO,
+    cfg: PipelineConfig,
+    t_start: float,
+    stages_run: dict[str, int],
+    stage_seconds: dict[str, float],
+    phase_seconds: dict[str, float],
+    integrity_ok: bool,
+    kernel_summaries: dict[str, dict],
+) -> dict:
+    """``run_pipeline``'s summary. ``input_turns`` (deduped) comes from each
+    bucket's latest ok tier_1m lineage row, read on the driver — no count
+    barrier over norm, no Spark job."""
+    latest: dict[int, tuple[int, int]] = {}
+    for r in _ok_lineage(io, "stage", "bucket_id", "version", "input_rows"):
+        if r["stage"] == "tier_1m":
+            b = r["bucket_id"]
+            latest[b] = max(latest.get(b, (-1, 0)), (r["version"], r["input_rows"]))
+    input_turns = sum(n for _, n in latest.values())
+    wall = time.time() - t_start
+    return {
+        "run_id": cfg.run_id,
+        "input_turns": input_turns,
+        "wall_seconds": wall,
+        "turns_per_sec": input_turns / wall if wall > 0 else 0.0,
+        "stages": stages_run,
+        "stage_seconds": stage_seconds,
+        "phase_seconds": phase_seconds,
+        "integrity_ok": integrity_ok,
+        "kernel_stages": kernel_summaries,
+    }
+
+
 @keeps_job_description
 def run_pipeline(
     spark: SparkSession,
@@ -733,6 +819,27 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     t_start = time.time()
     spark.sparkContext.setJobDescription("mpnsm:plan")
+    done_map = load_lineage_map(io)
+    all_buckets = set(range(cfg.num_buckets))
+    if _lineage_covers(done_map, cfg):
+        # A no-op re-run: nothing to plan, so no vocabulary scan. The stored
+        # dictionaries are still checked (on the driver).
+        reconcile_tool_vocab(io, [])
+        return _summary(
+            io,
+            cfg,
+            t_start,
+            stages_run={s: 0 for s in _dag_stages(cfg)},
+            stage_seconds={},
+            phase_seconds={
+                "plan_vocab": round(time.time() - t_start, 3),
+                "stage_dag": 0.0,
+            },
+            integrity_ok=True,
+            kernel_summaries={
+                ks.name: _kernel_result(ks.name, 0) for ks in cfg.kernel_stages
+            },
+        )
     # Scale-critical split: the wide text column NEVER crosses a shuffle.
     # - raw_aug: salted raw rows incl. text — consumed only by map-only
     #   stages (retention write, map-side integrity hashes);
@@ -757,8 +864,6 @@ def run_pipeline(
         # Several waves re-filter norm — worth materializing once.
         norm = norm.cache()
     t_norm_done = time.time()
-    done_map = load_lineage_map(io)
-    all_buckets = set(range(cfg.num_buckets))
 
     lock = threading.Lock()
     stages_run: dict[str, int] = {}
@@ -874,7 +979,8 @@ def run_pipeline(
             df = fresh_outputs.get(f"tier_{tier}")
         if df is not None:
             return df.drop("_v"), True
-        stored = _latest_snapshot(io.read(spark, f"tier_{tier}")).drop(
+        table = f"tier_{tier}"
+        stored = _keep_last(io, table, io.read(spark, table)).drop(
             "tools", "distinct_tools"
         )
         return with_salt(stored, cfg.num_buckets), False
@@ -952,13 +1058,12 @@ def run_pipeline(
         import datetime as _dt
 
         spark.sparkContext.setJobDescription("mpnsm:retention")
-        done = done_map.get("retention", set())
-        if -1 in done or done >= all_buckets:
+        if _stage_done(done_map, "retention", all_buckets):
             with lock:
                 stages_run["retention"] = 0
                 integrity_ok[0] = True
             return True
-        if done:
+        if done_map.get("retention"):
             # partial ROW-level retention from a crashed prior run: adopting
             # files now would duplicate the already-written buckets — finish
             # at row level instead.
@@ -999,7 +1104,10 @@ def run_pipeline(
         version = 0
         ok = True
         if straddling:
-            src = spark.read.parquet(*[s["path"] for s in straddling])
+            # raw_df is a bare scan of these files: its schema is theirs.
+            src = spark.read.schema(raw_df.schema).parquet(
+                *[s["path"] for s in straddling]
+            )
             sub = with_salt(with_value(src), cfg.num_buckets).filter(
                 F.col("ts") >= F.lit(cfg.retention_cutoff)
             )
@@ -1016,7 +1124,9 @@ def run_pipeline(
             # adopted files are the SAME bytes by construction and the
             # dropped files are proven below-cutoff by their footers. The
             # same pass counts the rewritten rows.
-            ok, rewritten_rows = checksums_match(sub, _latest_snapshot(int_df))
+            ok, rewritten_rows = checksums_match(
+                sub, _keep_last(io, "raw_retained", int_df)
+            )
         if adopted:
             version = max(
                 version,
@@ -1154,29 +1264,19 @@ def run_pipeline(
         kernel_summaries[ks.name] = run_kernel_stage(spark, io, ks, src, cfg)
 
     t_dag_done = time.time()
-    # input_turns (deduped) from each bucket's latest ok tier_1m lineage row,
-    # read on the driver — no count barrier over norm, no Spark job.
-    latest: dict[int, tuple[int, int]] = {}
-    for r in _ok_lineage(io, "stage", "bucket_id", "version", "input_rows"):
-        if r["stage"] == "tier_1m":
-            b = r["bucket_id"]
-            latest[b] = max(latest.get(b, (-1, 0)), (r["version"], r["input_rows"]))
-    input_turns = sum(n for _, n in latest.values())
-
-    wall = time.time() - t_start
-    for df in cached:
-        df.unpersist()
-    return {
-        "run_id": cfg.run_id,
-        "input_turns": input_turns,
-        "wall_seconds": wall,
-        "turns_per_sec": input_turns / wall if wall > 0 else 0.0,
-        "stages": stages_run,
-        "stage_seconds": stage_seconds,
-        "phase_seconds": {
+    summary = _summary(
+        io,
+        cfg,
+        t_start,
+        stages_run=stages_run,
+        stage_seconds=stage_seconds,
+        phase_seconds={
             "plan_vocab": round(t_norm_done - t_start, 3),
             "stage_dag": round(t_dag_done - t_norm_done, 3),
         },
-        "integrity_ok": integrity_ok[0],
-        "kernel_stages": kernel_summaries,
-    }
+        integrity_ok=integrity_ok[0],
+        kernel_summaries=kernel_summaries,
+    )
+    for df in cached:
+        df.unpersist()
+    return summary

@@ -58,6 +58,11 @@ def get_spark(
         # batches never blow executor memory (SURVEY.md §4 spill-to-disk note).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
+        # Generated classes are cached by source text, 100 by default. One
+        # pipeline + manager run uses ~113 and the 49 driver rows ~536, so
+        # the default LRU evicts every class before its next use and each
+        # run pays Janino plus JIT for ~80 classes again.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Local mode = driver-only JVM: the heap must cover all concurrent
         # task memory + cached tables, or high core counts GC-thrash.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))

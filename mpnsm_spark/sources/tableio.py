@@ -34,6 +34,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from mpnsm_spark.session import local_frame
 
@@ -80,6 +81,36 @@ class TableIO:
     def _committed_files(self, table: str) -> list[str]:
         return [f for m in self._manifests(table) for f in m["files"]]
 
+    @staticmethod
+    def _reader(spark: SparkSession, manifests: list[dict]):
+        """``spark.read`` with the Spark schema that every one of
+        ``manifests`` recorded at append, when they all have one and it is
+        the same: the files are then read without a schema-inference job.
+        Otherwise the reader infers, as for external or pyarrow files."""
+        schemas = {m.get("schema") for m in manifests}
+        if len(schemas) != 1 or None in schemas:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(json.loads(schemas.pop())))
+
+    def buckets_disjoint(self, table: str) -> bool:
+        """Whether keep-last per bucket over the table's engine-written
+        snapshots is the identity: there is at most one, or each lists its
+        ``meta["buckets"]`` and no bucket is listed twice (the engine writes
+        a bucket's rows only into a snapshot that lists it). Always False
+        on Iceberg, whose snapshots carry no such list."""
+        if self.iceberg:
+            return False
+        internal = [m for m in self._manifests(table) if not m["meta"].get("external")]
+        if len(internal) <= 1:
+            return True
+        seen: set[int] = set()
+        for m in internal:
+            buckets = m["meta"].get("buckets")
+            if buckets is None or seen.intersection(buckets):
+                return False
+            seen.update(buckets)
+        return True
+
     # ------------------------------------------------------------ operations
     def append(
         self,
@@ -94,6 +125,10 @@ class TableIO:
         rows (lineage): the table is written as one parquet file on the
         driver and committed through the same staging move and manifest
         rename, so it submits no Spark job.
+
+        A flat DataFrame snapshot's manifest records ``df.schema``, which
+        the read methods hand to Spark instead of inferring it from the
+        files.
 
         ``partition_by`` hive-partitions the snapshot's files (S6 threaded
         partitioned save analog — Spark writes partition dirs concurrently);
@@ -150,6 +185,8 @@ class TableIO:
                 "committed_at": time.time(),
                 "meta": meta or {},
             }
+            if not is_arrow and not partition_by:
+                manifest["schema"] = df.schema.json()
             tmp = os.path.join(self._mdir(table), f".tmp_v{version}.json")
             with open(tmp, "w") as fh:
                 json.dump(manifest, fh)
@@ -191,14 +228,15 @@ class TableIO:
         adopted external snapshot (earlier adopts are superseded wholesale —
         adoption is an all-at-once metadata commit, not an append)."""
         manifests = self._manifests(table)
-        internal = [
-            f for m in manifests if not m["meta"].get("external") for f in m["files"]
-        ]
+        int_manifests = [m for m in manifests if not m["meta"].get("external")]
+        internal = [f for m in int_manifests for f in m["files"]]
         ext_manifests = [m for m in manifests if m["meta"].get("external")]
         external = ext_manifests[-1]["files"] if ext_manifests else []
         ddir = self._ddir(table)
         int_df = (
-            spark.read.parquet(*[os.path.join(ddir, f) for f in internal])
+            self._reader(spark, int_manifests).parquet(
+                *[os.path.join(ddir, f) for f in internal]
+            )
             if internal
             else None
         )
@@ -226,10 +264,12 @@ class TableIO:
         for tables whose schema legitimately evolves (the lineage table gained
         error columns); costs a footer read per file, so keep it off for big
         data tables (Iceberg handles evolution natively via its own schema).
+        Snapshots that all recorded one schema need neither.
         """
         if self.iceberg:
             return spark.read.table(f"{self.catalog_prefix}{table}")
-        files = self._committed_files(table)
+        manifests = self._manifests(table)
+        files = [f for m in manifests for f in m["files"]]
         if not files:
             raise FileNotFoundError(f"table {table} has no committed snapshots")
         if any(os.path.isabs(f) for f in files):
@@ -240,7 +280,7 @@ class TableIO:
                 return int_df
             return int_df.unionByName(ext_df, allowMissingColumns=True)
         ddir = self._ddir(table)
-        reader = spark.read
+        reader = self._reader(spark, manifests)
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         if any("/" in f for f in files):
@@ -267,7 +307,7 @@ class TableIO:
         ]
         if not files:
             raise FileNotFoundError(f"table {table} snapshot v{version} is empty")
-        return spark.read.parquet(*files)
+        return self._reader(spark, [m]).parquet(*files)
 
     def read_arrow(self, table: str, columns: list[str]) -> pa.Table:
         """``columns`` of a small flat table's committed rows as one

@@ -140,6 +140,132 @@ def test_integrity_detects_corruption(spark, transcripts, tmp_path):
     assert not verify_turn_integrity(spark, io, tampered)
 
 
+def _checksums_match_join(reference_df, stored_df):
+    """``checksums_match`` in its earlier form, kept as the parity oracle:
+    one per-conversation aggregate per side and a full join."""
+
+    def checksum(df):
+        return df.groupBy("conv_id").agg(
+            F.bit_xor(F.xxhash64("turn_idx", "text", "ts")).alias("chk"),
+            F.count(F.lit(1)).alias("n"),
+        )
+
+    mismatch = (
+        F.col("r.chk").isNull()
+        | F.col("g.chk").isNull()
+        | (F.col("r.chk") != F.col("g.chk"))
+        | (F.col("r.n") != F.col("g.n"))
+    )
+    bad, stored_rows = (
+        checksum(reference_df)
+        .alias("r")
+        .join(checksum(stored_df).alias("g"), "conv_id", "full")
+        .agg(F.count_if(mismatch), F.sum("g.n"))
+        .collect()[0]
+    )
+    return bad == 0, stored_rows or 0
+
+
+def _turns(spark, rows):
+    import datetime as dt
+
+    t0 = dt.datetime(2025, 1, 1)
+    return spark.createDataFrame(
+        [(c, i, txt, t0 + dt.timedelta(seconds=s)) for c, i, txt, s in rows],
+        "conv_id string, turn_idx int, text string, ts timestamp",
+    )
+
+
+_REF = [("a", 0, "hi", 0), ("a", 1, "yo", 5), ("a", 1, "yo", 5), ("b", 0, "x", 9)]
+_STORED = {
+    "same_rows_reordered": (True, [_REF[3], _REF[1], _REF[0], _REF[2]]),
+    "conversation_missing_in_stored": (False, _REF[:3]),
+    "conversation_missing_in_reference": (False, _REF + [("c", 0, "z", 1)]),
+    "changed_text": (False, [("a", 0, "HI", 0)] + _REF[1:]),
+    "changed_ts": (False, [("a", 0, "hi", 1)] + _REF[1:]),
+    "changed_turn_idx": (False, [("a", 2, "hi", 0)] + _REF[1:]),
+    "added_duplicate": (False, _REF + [_REF[3]]),
+    # two extra copies cancel in bit_xor: only the row count catches them
+    "added_duplicate_pair": (False, _REF + [_REF[3], _REF[3]]),
+    "dropped_duplicate": (False, _REF[:2] + _REF[3:]),
+    "null_conversation_on_both_sides": (False, _REF + [(None, 0, "n", 0)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_STORED))
+def test_checksums_match_parity_with_join_form(spark, case):
+    """The one-shuffle check fails exactly where the two-aggregate join did,
+    on every mismatch class, and counts the same stored rows."""
+    from mpnsm_spark.plans.pipeline import checksums_match
+
+    want_match, stored = _STORED[case]
+    ref_rows = _REF + ([(None, 0, "n", 0)] if case.startswith("null") else [])
+    reference, stored_df = _turns(spark, ref_rows), _turns(spark, stored)
+    got = checksums_match(reference, stored_df)
+    assert got == _checksums_match_join(reference, stored_df)
+    assert got == (want_match, len(stored))
+
+
+def test_engine_tables_read_without_planning_jobs(spark, tmp_path):
+    """On a fresh pipeline + manager warehouse, building a read of any table
+    the engine wrote submits no Spark job: the manifests' recorded schema
+    replaces inference (and equals what Spark infers from the files), and
+    snapshots listing disjoint buckets need no keep-last aggregate. Two
+    snapshots listing the same bucket still keep only the later one's rows."""
+    import os
+
+    from mpnsm_spark import TIERS
+    from mpnsm_spark.generator import generate_transcripts, with_value
+    from mpnsm_spark.plans.manager import run_manager
+
+    raw = with_value(generate_transcripts(spark, n_convs=6, n_turns=600, seed=3))
+    io = TableIO(str(tmp_path / "wh"))
+    cfg = _cfg()
+    run_pipeline(spark, raw, io, cfg)
+    config = [{"unit": {}, "targets": [{"target_col": "value_avg"}]}]
+    tier = read_tier(spark, io, "1m")
+    run_manager(spark, tier, io, config, ["conv_id"], order_col="bucket_start", cfg=cfg)
+
+    tables = sorted(t for t in os.listdir(io.root) if t != LINEAGE_TABLE)
+    want = {"tier_1m", "gapfill_1d", "chunks_1d", "raw_retained", "mgr_fcst_value_avg"}
+    assert want <= set(tables)
+    for t in tables:
+        jobs, df = _jobs_of(spark, lambda: io.read(spark, t))
+        assert jobs == 0, t
+        files = [os.path.join(io.root, t, "data", f) for f in io._committed_files(t)]
+        assert df.schema == spark.read.parquet(*files).schema, t
+        for v in range(1, io.snapshot_version(t) + 1):
+            jobs, _ = _jobs_of(spark, lambda: io.read_snapshot(spark, t, v))
+            assert jobs == 0, (t, v)
+    reads = [lambda t=t: read_tier(spark, io, t) for t in TIERS] + [
+        lambda: read_chunks(spark, io, "1m"),
+        lambda: read_gapfill(spark, io, "1d"),
+        lambda: read_raw_retained(spark, io),
+    ]
+    for read in reads:
+        jobs, _ = _jobs_of(spark, read)
+        assert jobs == 0
+
+    # A crash between data and lineage re-writes a bucket at a higher _v.
+    first = io.read_snapshot(spark, "tier_1m", 1)
+    bucket = first.first().bucket_id
+    hot = first.filter(F.col("bucket_id") == bucket)
+    convs = {r.conv_id for r in hot.select("conv_id").distinct().collect()}
+
+    def values():
+        tier = read_tier(spark, io, "1m").select("conv_id", "bucket_start", "value_avg")
+        return {(r[0], r[1]): r[2] for r in tier.collect()}
+
+    before = values()
+    io.append(
+        hot.withColumns({"value_avg": F.col("value_avg") + 1, "_v": F.lit(2)}),
+        "tier_1m",
+        meta={**io.table_meta("tier_1m"), "buckets": [bucket]},
+    )
+    assert not io.buckets_disjoint("tier_1m")
+    assert values() == {k: v + 1 if k[0] in convs else v for k, v in before.items()}
+
+
 def test_normalize_dedupes_keep_last(spark, transcripts):
     dup = transcripts.unionByName(
         transcripts.limit(50).withColumn(
@@ -394,13 +520,10 @@ def _jobs_of(spark, fn):
 
 def test_bookkeeping_submits_no_spark_jobs(spark, tmp_path):
     """On a finished warehouse: reading lineage and committing lineage rows
-    run on the driver, and a no-op re-run submits only the vocabulary scan."""
+    run on the driver, and a no-op re-run submits no Spark job (not even
+    the vocabulary scan)."""
     from mpnsm_spark.generator import generate_transcripts, with_value
-    from mpnsm_spark.plans.pipeline import (
-        _lineage_rows,
-        load_lineage_map,
-        role_tool_vocabs,
-    )
+    from mpnsm_spark.plans.pipeline import _lineage_rows, load_lineage_map
 
     path = str(tmp_path / "raw")
     generated = generate_transcripts(spark, n_convs=8, n_turns=800, seed=9)
@@ -418,11 +541,10 @@ def test_bookkeeping_submits_no_spark_jobs(spark, tmp_path):
     assert jobs == 0
     assert load_lineage_map(io)["probe"] == {0}
 
-    vocab_jobs, _ = _jobs_of(spark, lambda: role_tool_vocabs(raw))
     jobs, again = _jobs_of(spark, lambda: run_pipeline(spark, raw, io, _cfg()))
     assert not any(again["stages"].values())
     assert again["input_turns"] == raw.count()
-    assert jobs == vocab_jobs
+    assert jobs == 0
 
 
 def test_run_pipeline_restores_caller_job_description(spark, tmp_path):

@@ -70,3 +70,48 @@ def test_no_python_list_frames_outside_local_frame():
             ):
                 offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
     assert offenders == []
+
+
+def _compiled_classes(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeat_run_compiles_no_new_classes(spark, tmp_path):
+    """The generated-class cache holds a whole pipeline → read_tier →
+    run_manager flow: running it again on a fresh warehouse compiles
+    nothing. With Spark's default 100 entries the flow's classes evict one
+    another and the second run recompiles most of them."""
+    from pyspark.sql import functions as F
+
+    from mpnsm_spark.generator import generate_transcripts, with_value
+    from mpnsm_spark.plans.manager import run_manager
+    from mpnsm_spark.plans.pipeline import PipelineConfig, read_tier, run_pipeline
+    from mpnsm_spark.sources.tableio import TableIO
+
+    src = str(tmp_path / "raw")
+    raw = with_value(generate_transcripts(spark, n_convs=20, n_turns=2000, seed=4))
+    raw.repartitionByRange(4, "ts").write.parquet(src)
+    cutoff = raw.agg(F.percentile_approx("ts", 0.5)).first()[0].isoformat(" ")
+    config = [
+        {"unit": {}, "horizon": 6, "targets": [{"target_col": "value_avg"}]},
+        {"unit": {"cohort": "1"}, "horizon": 4},
+    ]
+
+    def flow(i: int) -> None:
+        cfg = PipelineConfig(num_buckets=4, retention_cutoff=cutoff)
+        io = TableIO(str(tmp_path / f"wh{i}"))
+        run_pipeline(spark, spark.read.parquet(src), io, cfg)
+        run_pipeline(spark, spark.read.parquet(src), io, cfg)
+        cohort = F.pmod(F.xxhash64("conv_id"), F.lit(3)).cast("string")
+        tier = read_tier(spark, io, "1m").withColumn("cohort", cohort)
+        out = TableIO(str(tmp_path / f"mgr{i}"))
+        res = run_manager(spark, tier, out, config, ["cohort", "conv_id"],
+                          order_col="bucket_start", cfg=cfg)
+        res.forecasts(spark, out).agg(F.count(F.lit(1))).collect()
+
+    flow(0)
+    before = _compiled_classes(spark)
+    flow(1)
+    assert _compiled_classes(spark) - before == 0
