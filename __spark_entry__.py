@@ -1218,7 +1218,7 @@ def q_hyperparam_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = tune_per_series(
         ev,
-        param_grid=[1, 2, 4, 8],
+        [1, 2, 4, 8],
         n_folds=3,
         horizon=10,
         jump=5,
@@ -1227,7 +1227,7 @@ def q_hyperparam_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         F.col("conv_id").cast("bigint").alias("user_id"),
-        "chosen_param",
+        F.col("value").alias("chosen_param"),
         "folds_used",
     )
 
@@ -1285,8 +1285,8 @@ def q_hyperparam_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = tune_per_series(
         ev,
-        param_grid=make_ladder(1, 16, 2, "multiplicative"),
-        metric_specs=[
+        make_ladder(1, 16, 2, "multiplicative"),
+        metric=[
             MetricSpec(wmape, higher_better=False, max_worse=0.02,
                        min_better=0.002, name="wmape")
         ],
@@ -1299,7 +1299,7 @@ def q_hyperparam_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         F.col("conv_id").cast("bigint").alias("user_id"),
-        "chosen_param",
+        F.col("value").alias("chosen_param"),
         "folds_used",
     )
 
@@ -2016,8 +2016,8 @@ def q_hyperparam_multimetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = tune_per_series(
         ev,
-        param_grid=make_ladder(1, 16, 2, "multiplicative"),
-        metric_specs=[
+        make_ladder(1, 16, 2, "multiplicative"),
+        metric=[
             MetricSpec(wmape, max_worse=0.02, min_better=0.002, name="wmape"),
             MetricSpec(median_abs_pct, max_worse=0.05, min_better=0.005,
                        name="median_abs_pct"),
@@ -2031,7 +2031,7 @@ def q_hyperparam_multimetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         F.col("conv_id").cast("bigint").alias("user_id"),
-        "chosen_param",
+        F.col("value").alias("chosen_param"),
         "folds_used",
     )
 

@@ -213,10 +213,11 @@ _OLS_PARAM_KEYS = {
 
 
 def ols_forecaster(train: np.ndarray, horizon: int, param=None) -> np.ndarray:
-    """Forecaster adapter for the search harness (``tune_per_series`` /
-    ``cv_fit_predict`` / ``stepwise_predict``): ``param`` is a dict of
-    :class:`TrendSeasonalOLS` knobs (multi-parameter grids) or a bare number
-    meaning ``n_changepoints``."""
+    """Forecaster adapter for the search harness
+    (``functions.tuning.search_series``, which the manager's tuning runs, and
+    ``cv_fit_predict``): ``param`` is a dict of :class:`TrendSeasonalOLS`
+    knobs (multi-parameter grids) or a bare number meaning
+    ``n_changepoints``."""
     if param is None:
         kwargs = {}
     elif isinstance(param, dict):

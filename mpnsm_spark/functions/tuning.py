@@ -9,12 +9,16 @@ Reference parity — the reference's most-used entry after fit_predict:
 - cross-fold median/mode param chooser (SURVEY.md A8):
   ``hyperparameter_tuning.py:147-172``, ``deprecated/ts_model.py:838-849``.
 
-Architecture: the whole search loop runs INSIDE the per-series grouped-map
-kernel (``apply_per_series``) — exactly where the reference runs it (inside
-each joblib worker), never spawning nested Spark jobs. Forecasters are
-pluggable callables ``(train_values, horizon, param) -> predictions``; the
-built-in surrogate (``last_w_mean``) is deterministic so the driver oracle
-can replay the full search in ANSI SQL.
+Architecture: one numpy search core, :func:`search_series`, scores
+candidates fold by fold on one series; grid, 1-D ladder and
+coordinate-descent searches are its options. It runs INSIDE a per-series
+grouped-map kernel — :func:`tune_per_series` here, or the manager's fit
+kernel, which fits the winner in the same pass — exactly where the
+reference runs it (inside each joblib worker), never spawning nested Spark
+jobs. :func:`cv_fit_predict` is the fold replay without a chooser.
+Forecasters are pluggable callables ``(train_values, horizon, param) ->
+predictions``; the built-in surrogate (``last_w_mean``) is deterministic so
+the driver oracle can replay the full search in ANSI SQL.
 
 Cross-engine float contract: scores use the same exact-DECIMAL(20,6)
 quantization the SQL oracles use (``_q6``: half-away-from-zero at 6dp, exact
@@ -214,7 +218,7 @@ def locf(train: np.ndarray, horizon: int, _param=None) -> np.ndarray:
     return np.full(horizon, float(train[-1]))
 
 
-# ------------------------------------------------------------ fold machinery
+# ------------------------------------------------------------------ search
 
 
 def expanding_cutoffs(
@@ -225,120 +229,6 @@ def expanding_cutoffs(
     first ``n - horizon - f*jump`` rows, tests on the next ``horizon``."""
     cuts = [n - horizon - f * jump for f in range(n_folds)]
     return [c for c in cuts if c >= min_train]
-
-
-TUNE_SCHEMA = "conv_id string, chosen_param double, folds_used int"
-
-
-def tune_per_series(
-    df: DataFrame,
-    param_grid: Sequence,
-    forecaster: Callable[[np.ndarray, int, object], np.ndarray] = last_w_mean,
-    metric: str | Callable = "wmape",
-    n_folds: int = 3,
-    horizon: int = 10,
-    jump: int = 5,
-    min_train: int = 5,
-    key: str = "conv_id",
-    order_col: str = "turn_idx",
-    value_col: str = "value",
-    chooser: str = "median",
-    ladder_early_stop: bool = False,
-    patience: int = 2,
-    metric_specs: Sequence[MetricSpec] | None = None,
-    fold_choice: str = "best",
-) -> DataFrame:
-    """Grid/ladder hyperparameter search per series over expanding CV folds.
-
-    Per fold: replay ``forecaster`` for every param on the fold's train
-    prefix, score the ``horizon`` test points with ``metric``, keep the best
-    param (ties → earliest in ``param_grid``). The final param is the
-    cross-fold ``median`` (numeric) or ``mode`` (ties → smallest) — SURVEY A8.
-
-    Early-stop modes (reference ``hyperparameter_tuning.py:96-145``):
-
-    - default: exhaustive grid (oracle-replayable);
-    - ``ladder_early_stop=True`` without ``metric_specs``: simple patience
-      rule (stop after ``patience`` consecutive non-improving params);
-    - ``metric_specs=[MetricSpec(...), ...]``: the reference's per-metric
-      tolerance rule — walking the ladder stops at the first rung where any
-      metric regresses beyond its ``max_worse`` or no metric improves by its
-      ``min_better`` (see :func:`ladder_converged`). With
-      ``fold_choice="penultimate"`` the fold's winner is the rung BEFORE the
-      convergence stop (the reference's chooser: the last rung "may be
-      significantly worse due to converge parameters"); ``"best"`` keeps the
-      argmin/argmax of the first metric.
-
-    Output: (key, chosen_param double, folds_used int); series with zero
-    valid folds emit nothing.
-    """
-    metric_fn = METRICS[metric] if isinstance(metric, str) else metric
-    specs = list(metric_specs) if metric_specs else None
-    grid = list(param_grid)
-    order_cols = list(order_col) if isinstance(order_col, (list, tuple)) else [order_col]
-
-    def fold_best(train, test) -> float:
-        if specs is None:
-            best_s, best_p, streak = None, None, 0
-            for p in grid:
-                s = metric_fn(test, forecaster(train, horizon, p))
-                if best_s is None or s < best_s:
-                    best_s, best_p, streak = s, p, 0
-                elif ladder_early_stop:
-                    streak += 1
-                    if streak >= patience:
-                        break
-            return float(best_p)
-        # tolerance-rule ladder walk
-        tried: list[tuple[float, dict[str, float]]] = []
-        for p in grid:
-            preds = forecaster(train, horizon, p)
-            scores = {sp.name: sp.fn(test, preds) for sp in specs}
-            tried.append((float(p), scores))
-            if len(tried) >= 2 and ladder_converged(tried[-2][1], scores, specs):
-                break
-        if fold_choice == "penultimate" and len(tried) >= 2:
-            return tried[-2][0]
-        lead = specs[0]
-        keyfn = (lambda t: -t[1][lead.name]) if lead.higher_better else (
-            lambda t: t[1][lead.name]
-        )
-        return min(tried, key=keyfn)[0]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].to_numpy(np.float64)
-        n = len(vals)
-        best_params: list[float] = []
-        for cutoff in expanding_cutoffs(n, n_folds, horizon, jump, min_train):
-            train, test = vals[:cutoff], vals[cutoff : cutoff + horizon]
-            best_params.append(fold_best(train, test))
-        if not best_params:
-            return pd.DataFrame(
-                {"conv_id": [], "chosen_param": [], "folds_used": []}
-            ).astype({"chosen_param": float, "folds_used": "int32"})
-        if chooser == "median":
-            chosen = float(np.median(best_params))
-        else:  # mode, ties -> smallest (scipy.stats.mode semantics)
-            uniq, counts = np.unique(best_params, return_counts=True)
-            chosen = float(uniq[np.argmax(counts)])
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf[key].iloc[0]],
-                "chosen_param": [chosen],
-                "folds_used": np.array([len(best_params)], dtype=np.int32),
-            }
-        )
-
-    return apply_per_series(
-        df.select(key, *order_cols, value_col),
-        kernel,
-        TUNE_SCHEMA,
-        key=key,
-        order_col=order_cols,
-    )
-
-
-# ------------------------------------------------- multi-parameter search
 
 
 def expand_param_grid(grid: dict[str, Sequence]) -> list[dict]:
@@ -355,191 +245,169 @@ def expand_param_grid(grid: dict[str, Sequence]) -> list[dict]:
     ]
 
 
-TUNE_PARAMS_SCHEMA = "conv_id string, param string, value double, folds_used int"
+def _mode(values) -> float:
+    """Most frequent value, ties → smallest (scipy.stats.mode semantics)."""
+    uniq, counts = np.unique(values, return_counts=True)
+    return uniq[np.argmax(counts)]
 
 
-def _params_out(key_val, chosen: dict, folds: int) -> pd.DataFrame:
-    names = sorted(chosen)
-    return pd.DataFrame(
-        {
-            "conv_id": [key_val] * len(names),
-            "param": names,
-            "value": [float(chosen[p]) for p in names],
-            "folds_used": np.full(len(names), folds, dtype=np.int32),
-        }
-    )
-
-
-def _empty_params_out() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"conv_id": [], "param": [], "value": [], "folds_used": []}
-    ).astype({"value": float, "folds_used": "int32"})
-
-
-def tune_grid_per_series(
-    df: DataFrame,
-    param_grid: dict[str, Sequence],
-    forecaster: Callable[[np.ndarray, int, dict], np.ndarray],
-    metric: str | Callable = "wmape",
-    chooser: str = "global_min",
+def search_series(
+    vals: np.ndarray,
+    candidates,
+    forecaster: Callable[[np.ndarray, int, object], np.ndarray] = last_w_mean,
+    metric: str | Callable | Sequence[MetricSpec] = "wmape",
+    chooser: str = "median",
+    fold_choice: str = "best",
+    patience: int | None = None,
+    start: dict | None = None,
     n_folds: int = 3,
     horizon: int = 10,
     jump: int = 5,
     min_train: int = 5,
-    key: str = "conv_id",
-    order_col: str = "turn_idx",
-    value_col: str = "value",
-) -> DataFrame:
-    """Multi-parameter exhaustive grid search per series (reference
-    ``ParameterGridHyperparameterTuning``, ``hyperparameter_tuning.py:
-    338-527``): every combination scored on every expanding-CV fold.
+) -> tuple[dict[str, float], int] | None:
+    """Hyperparameter search over one series' expanding-CV folds: the
+    winning params (as floats) and the number of folds, or ``None`` when no
+    fold has ``min_train`` train rows.
 
-    Choosers:
+    ``candidates`` is a list of params, each handed as is to ``forecaster``
+    — bare values (reported under the name ``"param"``) or dicts — or a
+    dict of lists, expanded in ``ParameterGrid`` order
+    (:func:`expand_param_grid`). Each fold walks the list, scoring every
+    candidate on the fold's ``horizon`` test rows, and stops early
+    (reference ``hyperparameter_tuning.py:96-145``):
 
-    - ``"global_min"`` — the reference's ``choose_best_param`` (``:366-389``):
-      ONE winning combination, the global argmin of the metric over all
-      (fold, combination) pairs; ties → earliest combination in
-      ``ParameterGrid`` order, then earliest fold.
-    - ``"median"`` — per fold pick the best combination, then per PARAMETER
-      take the cross-fold median (the engine's A8 chooser lifted to dicts).
+    - when ``metric`` is a list of :class:`MetricSpec`, by the reference's
+      tolerance rule on the last two candidates (:func:`ladder_converged`);
+    - with ``patience``, after that many candidates in a row that do not
+      beat the fold's best.
 
-    Output: one row per (series, parameter name): (key, param, value,
-    folds_used) — tall shape so heterogeneous grids stay SQL-comparable.
+    The fold's winner is its best candidate by the first metric (ties →
+    earliest) or, with ``fold_choice="penultimate"``, the candidate before
+    the last one walked (the reference's choice: the last rung "may be
+    significantly worse due to converge parameters"). ``chooser`` then
+    takes per parameter the cross-fold ``median`` or ``mode`` (ties →
+    smallest) of the fold winners (SURVEY A8), or ``global_min``: the
+    candidate with the best score over every (fold, candidate) pair walked,
+    ties → earliest candidate, then earliest fold (the reference's
+    ``choose_best_param``, ``:366-389``).
+
+    With ``start`` (a params dict), ``candidates`` is a dict of lists walked
+    ONE parameter at a time, in its key order, from the current best
+    configuration (coordinate descent, ``:174-304``): a rung's score is each
+    metric's mean over all folds, and the rung winner is fixed before the
+    next parameter; ``chooser`` does not apply.
     """
-    metric_fn = METRICS[metric] if isinstance(metric, str) else metric
-    combos = expand_param_grid(param_grid)
-    order_cols = list(order_col) if isinstance(order_col, (list, tuple)) else [order_col]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].to_numpy(np.float64)
-        cutoffs = expanding_cutoffs(len(vals), n_folds, horizon, jump, min_train)
-        if not cutoffs:
-            return _empty_params_out()
-        scores = np.empty((len(cutoffs), len(combos)))
-        for fi, cutoff in enumerate(cutoffs):
-            train, test = vals[:cutoff], vals[cutoff : cutoff + horizon]
-            for ci, combo in enumerate(combos):
-                scores[fi, ci] = metric_fn(test, forecaster(train, horizon, combo))
-        if chooser == "global_min":
-            # argmin over (fold, combo); ties -> earliest combo, then fold
-            flat_ci = int(
-                np.lexsort((np.repeat(range(len(cutoffs)), len(combos)),
-                            np.tile(range(len(combos)), len(cutoffs)),
-                            scores.ravel()))[0]
-            ) % len(combos)
-            chosen = combos[flat_ci]
-        elif chooser == "median":
-            best_per_fold = [combos[int(np.argmin(row))] for row in scores]
-            chosen = {
-                p: float(np.median([b[p] for b in best_per_fold]))
-                for p in param_grid
-            }
-        else:
-            raise ValueError(f"chooser must be global_min|median, got {chooser!r}")
-        return _params_out(pdf[key].iloc[0], chosen, len(cutoffs))
-
-    return apply_per_series(
-        df.select(key, *order_cols, value_col),
-        kernel,
-        TUNE_PARAMS_SCHEMA,
-        key=key,
-        order_col=order_cols,
-    )
-
-
-def tune_ladder_per_series(
-    df: DataFrame,
-    ladder_specs: Sequence[dict],
-    forecaster: Callable[[np.ndarray, int, dict], np.ndarray],
-    base_params: dict | None = None,
-    metric_specs: Sequence[MetricSpec] | None = None,
-    fold_agg: str = "mean",
-    fold_choice: str = "penultimate",
-    n_folds: int = 3,
-    horizon: int = 10,
-    jump: int = 5,
-    min_train: int = 5,
-    key: str = "conv_id",
-    order_col: str = "turn_idx",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-parameter heuristic ladders with the OTHERS FIXED — the
-    reference's coordinate-descent tuner (``hyperparameter_tuning.py:
-    174-304``: ``optimize`` walks ``self.hyperparams`` in declaration order,
-    each ``optimize_hyperparameter`` laddering ONE param from the current
-    best configuration and fixing its winner before the next param).
-
-    ``ladder_specs``: ordered dicts ``{"name", "initial", "final", "step",
-    "mode"}`` (``make_ladder`` args). Per rung, fold scores are aggregated by
-    ``fold_agg`` (``mean``/``median``) per metric; the walk stops by the
-    reference's two-rung tolerance rule (:func:`ladder_converged` over
-    ``metric_specs``, default a single WMAPE spec); the rung winner is the
-    ``penultimate`` (reference chooser) or ``best`` rung.
-
-    Output: tall (key, param, value, folds_used) rows — one per tuned param.
-    """
-    specs = list(metric_specs) if metric_specs else [MetricSpec("wmape")]
-    if fold_agg not in ("mean", "median"):
-        raise ValueError(f"fold_agg must be mean|median, got {fold_agg!r}")
-    agg = np.mean if fold_agg == "mean" else np.median
-    order_cols = list(order_col) if isinstance(order_col, (list, tuple)) else [order_col]
-    base = dict(base_params or {})
-    ladders = [
-        (sp["name"], make_ladder(sp["initial"], sp["final"], sp["step"],
-                                 sp.get("mode", "additive")))
-        for sp in ladder_specs
+    if chooser not in ("median", "mode", "global_min"):
+        raise ValueError(f"chooser must be median|mode|global_min, got {chooser!r}")
+    if fold_choice not in ("best", "penultimate"):
+        raise ValueError(f"fold_choice must be best|penultimate, got {fold_choice!r}")
+    tolerance = not (isinstance(metric, str) or callable(metric))
+    specs = list(metric) if tolerance else [MetricSpec(metric)]
+    lead = specs[0]
+    sign = -1.0 if lead.higher_better else 1.0
+    folds = [
+        (vals[:c], vals[c : c + horizon])
+        for c in expanding_cutoffs(len(vals), n_folds, horizon, jump, min_train)
     ]
+    if not folds:
+        return None
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].to_numpy(np.float64)
-        cutoffs = expanding_cutoffs(len(vals), n_folds, horizon, jump, min_train)
-        if not cutoffs:
-            return _empty_params_out()
-        folds = [
-            (vals[:c], vals[c : c + horizon]) for c in cutoffs
-        ]
+    def score(params, on) -> dict[str, float]:
+        """Each metric of ``params``' forecasts, averaged over folds ``on``."""
+        per_fold = []
+        for train, test in on:
+            preds = forecaster(train, horizon, params)
+            per_fold.append([sp.fn(test, preds) for sp in specs])
+        return {
+            sp.name: s[0] if len(s) == 1 else float(np.mean(s))
+            for sp, s in zip(specs, zip(*per_fold))
+        }
 
-        def rung_scores(params: dict) -> dict[str, float]:
-            per_fold = {sp.name: [] for sp in specs}
-            for train, test in folds:
-                preds = forecaster(train, horizon, params)
-                for sp in specs:
-                    per_fold[sp.name].append(sp.fn(test, preds))
-            return {name: float(agg(v)) for name, v in per_fold.items()}
+    def walk(cands, on) -> tuple[int, list[dict[str, float]]]:
+        """The winner's index in ``cands`` and the scores walked."""
+        tried: list[dict[str, float]] = []
+        for params in cands:
+            tried.append(score(params, on))
+            best = min(range(len(tried)), key=lambda i: sign * tried[i][lead.name])
+            if len(tried) > 1 and (
+                (tolerance and ladder_converged(tried[-2], tried[-1], specs))
+                or (patience is not None and len(tried) - 1 - best >= max(patience, 1))
+            ):
+                break
+        if fold_choice == "penultimate" and len(tried) > 1:
+            return len(tried) - 2, tried
+        return best, tried
 
-        best = dict(base)
-        for name, ladder in ladders:
-            tried: list[tuple[float, dict[str, float]]] = []
-            for v in ladder:
-                s = rung_scores({**best, name: v})
-                tried.append((float(v), s))
-                if len(tried) >= 2 and ladder_converged(tried[-2][1], s, specs):
-                    break
-            if fold_choice == "penultimate" and len(tried) >= 2:
-                best[name] = tried[-2][0]
-            else:
-                lead = specs[0]
-                keyfn = (
-                    (lambda t: -t[1][lead.name])
-                    if lead.higher_better
-                    else (lambda t: t[1][lead.name])
-                )
-                best[name] = min(tried, key=keyfn)[0]
-        tuned = {name: best[name] for name, _ in ladders}
-        return _params_out(pdf[key].iloc[0], tuned, len(cutoffs))
+    if start is not None:
+        best = dict(start)
+        for name, values in candidates.items():
+            i, _ = walk([{**best, name: v} for v in values], folds)
+            best[name] = float(values[i])
+        return {name: best[name] for name in candidates}, len(folds)
 
+    cands = (
+        expand_param_grid(candidates) if isinstance(candidates, dict) else list(candidates)
+    )
+    named = [c if isinstance(c, dict) else {"param": c} for c in cands]
+    walks = [walk(cands, [fold]) for fold in folds]
+    if chooser == "global_min":
+        _, ci, _ = min(
+            (sign * s[lead.name], ci, fi)
+            for fi, (_, tried) in enumerate(walks)
+            for ci, s in enumerate(tried)
+        )
+        return {p: float(v) for p, v in named[ci].items()}, len(folds)
+    pick = np.median if chooser == "median" else _mode
+    won = [named[i] for i, _ in walks]
+    return {p: float(pick([w[p] for w in won])) for p in won[0]}, len(folds)
+
+
+def _per_series(df: DataFrame, fn, schema: str, key: str, order_col, value_col: str):
+    """``fn(key value, ordered values)`` per series in one grouped-map pass."""
+    order_cols = list(order_col) if isinstance(order_col, (list, tuple)) else [order_col]
     return apply_per_series(
         df.select(key, *order_cols, value_col),
-        kernel,
-        TUNE_PARAMS_SCHEMA,
+        lambda pdf: fn(pdf[key].iat[0], pdf[value_col].to_numpy(np.float64)),
+        schema,
         key=key,
         order_col=order_cols,
     )
 
 
-CV_PRED_SCHEMA = (
-    "conv_id string, fold int, step int, y double, yhat double"
-)
+def tune_per_series(
+    df: DataFrame,
+    candidates,
+    forecaster: Callable[[np.ndarray, int, object], np.ndarray] = last_w_mean,
+    key: str = "conv_id",
+    order_col="turn_idx",
+    value_col: str = "value",
+    **search,
+) -> DataFrame:
+    """:func:`search_series` over every series of ``df`` (``value_col`` in
+    ``order_col`` order) inside one grouped-map kernel — where the
+    reference runs its search, in each joblib worker. ``search`` takes
+    :func:`search_series`' keyword options, checked on the driver first.
+
+    Output: one row per (series, parameter): (key, param, value double,
+    folds_used int), the tall shape that keeps heterogeneous grids
+    SQL-comparable; series without a valid fold emit nothing."""
+    search_series(np.empty(0), candidates, forecaster, **search)
+
+    def fn(key_val, vals: np.ndarray) -> pd.DataFrame:
+        found = search_series(vals, candidates, forecaster, **search)
+        if found is None:
+            return pd.DataFrame()  # apply_per_series drops zero-row results
+        chosen, folds = found
+        names = sorted(chosen)
+        return pd.DataFrame({
+            key: key_val,
+            "param": names,
+            "value": [chosen[p] for p in names],
+            "folds_used": np.full(len(names), folds, dtype=np.int32),
+        })
+
+    schema = f"{key} string, param string, value double, folds_used int"
+    return _per_series(df, fn, schema, key, order_col, value_col)
 
 
 def cv_fit_predict(
@@ -551,47 +419,35 @@ def cv_fit_predict(
     jump: int = 5,
     min_train: int = 5,
     key: str = "conv_id",
-    order_col: str = "turn_idx",
+    order_col="turn_idx",
     value_col: str = "value",
     with_debug: bool = False,
 ) -> DataFrame:
-    """Fold replay (reference ``fit_predictCV``): per fold, fit on the train
-    prefix and emit (fold, step, y, yhat) rows — the union-with-fold-column
-    shape the reference produces (``forecast.py:753-756``).
+    """The search's fold replay with no chooser (reference
+    ``fit_predictCV``, ``forecast.py:707-758``): per fold, fit ``param`` on
+    the train prefix and emit (key, fold, step, y, yhat) rows — the
+    union-with-fold-column shape of ``forecast.py:753-756``.
 
-    ``with_debug=True`` enriches every row with the fit's parameters —
-    ``param`` (the hyperparameter the fold fitted with) and ``cutoff`` (the
-    fold's train length) — the reference's coefficient/debug-enriched output
-    contract (``model.py:194-222``, ``deprecated/ts_model.py:1229-1254``)."""
+    ``with_debug=True`` adds ``param`` (as a double) and ``cutoff`` (the
+    fold's train length) to every row — the reference's debug-enriched
+    output (``model.py:194-222``, ``deprecated/ts_model.py:1229-1254``)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].to_numpy(np.float64)
-        cols = ["conv_id", "fold", "step", "y", "yhat"] + (
-            ["param", "cutoff"] if with_debug else []
-        )
-        rows = {c: [] for c in cols}
-        for f, cutoff in enumerate(
-            expanding_cutoffs(len(vals), n_folds, horizon, jump, min_train)
-        ):
-            preds = forecaster(vals[:cutoff], horizon, param)
-            test = vals[cutoff : cutoff + horizon]
-            for i, (y, yh) in enumerate(zip(test, preds)):
-                rows["conv_id"].append(pdf[key].iloc[0])
-                rows["fold"].append(f)
-                rows["step"].append(i)
-                rows["y"].append(float(y))
-                rows["yhat"].append(float(yh))
-                if with_debug:
-                    rows["param"].append(float(param))
-                    rows["cutoff"].append(cutoff)
-        out = pd.DataFrame(rows).astype({"fold": "int32", "step": "int32"})
-        return out.astype({"cutoff": "int32"}) if with_debug else out
+    def fn(key_val, vals: np.ndarray) -> pd.DataFrame:
+        cuts = expanding_cutoffs(len(vals), n_folds, horizon, jump, min_train)
+        folds = [
+            pd.DataFrame({
+                key: key_val,
+                "fold": np.int32(f),
+                "step": np.arange(horizon, dtype=np.int32),
+                "y": vals[c : c + horizon],
+                "yhat": forecaster(vals[:c], horizon, param),
+                **({"param": float(param), "cutoff": np.int32(c)} if with_debug else {}),
+            })
+            for f, c in enumerate(cuts)
+        ]
+        return pd.concat(folds, ignore_index=True) if folds else pd.DataFrame()
 
-    order_cols = list(order_col) if isinstance(order_col, (list, tuple)) else [order_col]
-    return apply_per_series(
-        df.select(key, *order_cols, value_col),
-        kernel,
-        CV_PRED_SCHEMA + ", param double, cutoff int" if with_debug else CV_PRED_SCHEMA,
-        key=key,
-        order_col=order_cols,
-    )
+    schema = f"{key} string, fold int, step int, y double, yhat double"
+    if with_debug:
+        schema += ", param double, cutoff int"
+    return _per_series(df, fn, schema, key, order_col, value_col)

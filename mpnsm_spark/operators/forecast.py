@@ -95,76 +95,3 @@ def stepwise_predict(
         key=key,
         order_col=order_cols,
     )
-
-
-FORECAST_SCHEMA = "conv_id string, step int, yhat double"
-FORECAST_DEBUG_SCHEMA = (
-    FORECAST_SCHEMA
-    + ", n_train int, n_changepoints int, intercept double, trend double"
-    + ", resid_std double"
-)
-
-
-def forecast_trend_seasonal(
-    df: DataFrame,
-    horizon: int = 10,
-    model_kwargs: dict | None = None,
-    key: str = "conv_id",
-    order_col="turn_idx",
-    value_col: str = "value",
-    min_train: int = 8,
-    with_debug: bool = False,
-) -> DataFrame:
-    """Per-series changepoint-aware OLS trend+seasonal forecast — the
-    engine's real model (reference ``model.py:417-442`` fit +
-    ``forecast.py`` predict), fit in closed form inside the grouped-map
-    kernel (:class:`mpnsm_spark.functions.model.TrendSeasonalOLS`).
-
-    Output: (key, step 1..horizon, yhat); series shorter than ``min_train``
-    emit nothing. ``with_debug`` enriches rows with the fit's shape —
-    ``n_train``, ``n_changepoints``, the intercept/trend coefficients and the
-    in-sample residual std — mirroring the reference's coefficient-enriched
-    forecast output (``model.py:194-222``).
-    """
-    from mpnsm_spark.functions.model import TrendSeasonalOLS
-
-    kwargs = dict(model_kwargs or {})
-    order_cols = list(order_col) if isinstance(order_col, (list, tuple)) else [order_col]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].to_numpy(np.float64)
-        cols = ["conv_id", "step", "yhat"] + (
-            ["n_train", "n_changepoints", "intercept", "trend", "resid_std"]
-            if with_debug
-            else []
-        )
-        if len(vals) < min_train:
-            return pd.DataFrame({c: [] for c in cols}).astype(
-                {"step": "int32", "yhat": float}
-            )
-        model = TrendSeasonalOLS(**kwargs).fit(vals)
-        preds = model.predict(horizon)
-        out = pd.DataFrame(
-            {
-                "conv_id": pdf[key].iloc[0],
-                "step": np.arange(1, horizon + 1, dtype=np.int32),
-                "yhat": preds,
-            }
-        )
-        if with_debug:
-            coefs = model.coefficients()
-            resid = vals - model.predict_in_sample()
-            out["n_train"] = np.int32(len(vals))
-            out["n_changepoints"] = np.int32(len(model.changepoints_))
-            out["intercept"] = coefs["intercept"]
-            out["trend"] = coefs["trend"]
-            out["resid_std"] = float(np.std(resid))
-        return out
-
-    return apply_per_series(
-        df.select(key, *order_cols, value_col),
-        kernel,
-        FORECAST_DEBUG_SCHEMA if with_debug else FORECAST_SCHEMA,
-        key=key,
-        order_col=order_cols,
-    )

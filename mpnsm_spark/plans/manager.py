@@ -21,17 +21,20 @@ gives every unit its own config (``config.py:143-165`` ``generate_dicts``):
   costs no job when an entry with ``unit: {}`` sets ``targets``.
 - ONE :func:`~mpnsm_spark.plans.pipeline.run_kernel_stage` pass per TARGET
   over every unit that forecasts it (resume + per-series error lineage):
-  the kernel dispatches on the series' ``_spec`` to that spec's model knobs,
-  regressor columns (null on other specs' rows; builders in
-  ``functions/regressors.py``) and tuning winners
-  (``functions.tuning.tune_grid_per_series``), and reads the horizon from
-  the unit's rows — 10 units or 10 million, one resolved config or a
-  thousand, the same Spark jobs. Each target writes one table keyed by
-  ``_unit_id``.
-- ``run_mode='fit'`` persists fitted state through
-  ``functions/model_store.py`` (versioned snapshots); ``'predict'`` reloads
-  and forecasts without re-fitting — the reference's fit-data save / reload
-  split (manager.py:222-275).
+  the kernel dispatches on the series' ``_spec`` to that spec's model knobs
+  and regressor columns (null on other specs' rows; builders in
+  ``functions/regressors.py``), runs the spec's grid search on the unit's
+  train values (``functions.tuning.search_series``) and fits the winner,
+  and reads the horizon from the unit's rows — 10 units or 10 million, one
+  resolved config or a thousand, the same Spark jobs. This kernel is the
+  engine's only place a model is tuned, fit and stored. Each target writes
+  one table keyed by ``_unit_id``.
+- ``run_mode='fit'`` stores one state row per unit
+  (``functions/model_store.py``) in versioned snapshots, fitting only the
+  units without a state yet — the reference's ``cache_feat`` skip
+  (``deprecated/ts_manager.py:123-145``), so a fit over a grown panel fits
+  the new units; ``'predict'`` reloads and forecasts without re-fitting —
+  the reference's fit-data save / reload split (manager.py:222-275).
 
 Config shape (JSON/YAML-able; every value plain data)::
 
@@ -77,6 +80,8 @@ from mpnsm_spark.operators.config import resolve_config
 from mpnsm_spark.plans.pipeline import (
     KernelStage,
     PipelineConfig,
+    _kernel_result,
+    _run_kernel_buckets,
     keeps_job_description,
     run_kernel_stage,
 )
@@ -204,6 +209,8 @@ def _target_specs(config: list[dict], persist: bool) -> dict[str, dict[int, dict
                     "linear_hinge supports neither regressors, tuning, nor "
                     "fit-mode state persistence"
                 )
+            if spec.get("tuning"):
+                _tune(spec["tuning"], np.empty(0))  # checks the spec's options
             targets.setdefault(spec["target_col"], {})[i] = spec
     return targets
 
@@ -272,15 +279,15 @@ def _apply_regressors(df: DataFrame, spec_id: int, spec: dict, order_col: str,
     ).drop(*cols), scoped
 
 
-def _tuned_params(df: DataFrame, spec: dict, order_col: str, target: str) -> DataFrame:
-    """Run the configured grid search on ``df``'s TRAIN rows; one row per
-    series with its winning params as an array<struct> column (``_tuned``)."""
+def _tune(tuning: dict, y: np.ndarray) -> dict[str, float] | None:
+    """The spec's grid search on one unit's train values: its winning
+    params, or None when no fold has enough train rows. Candidates are
+    scored with the grid's knobs alone (``ols_forecaster``)."""
     from mpnsm_spark.functions.model import ols_forecaster
-    from mpnsm_spark.functions.tuning import tune_grid_per_series
+    from mpnsm_spark.functions.tuning import search_series
 
-    tuning = spec["tuning"]
-    tall = tune_grid_per_series(
-        df.filter(F.col("_is_train")),
+    found = search_series(
+        y,
         tuning["grid"],
         ols_forecaster,
         metric=tuning.get("metric", "wmape"),
@@ -289,13 +296,8 @@ def _tuned_params(df: DataFrame, spec: dict, order_col: str, target: str) -> Dat
         horizon=int(tuning.get("horizon", 10)),
         jump=int(tuning.get("jump", 5)),
         min_train=int(tuning.get("min_train", 5)),
-        key="_unit_id",
-        order_col=order_col,
-        value_col=target,
     )
-    return tall.groupBy(F.col("conv_id").alias("_unit_id")).agg(
-        F.collect_list(F.struct("param", "value")).alias("_tuned")
-    )
+    return None if found is None else found[0]
 
 
 @dataclass
@@ -333,15 +335,16 @@ def run_manager(
     cfg: PipelineConfig | None = None,
 ) -> ManagerResult:
     """One declarative call: resolve each unit's config onto its rows, then
-    per target run regressor building → optional tuning → per-series
-    fit/forecast as ONE :func:`run_kernel_stage` pass over every unit that
-    forecasts it (resume + error lineage included).
+    per target build regressors and run ONE kernel-stage pass over every
+    unit that forecasts it — tuning, fit and forecast inside the per-series
+    kernel (error lineage included).
 
     ``run_mode``: ``'fit_predict'`` forecasts into ``mgr_fcst_<target>``
-    tables; ``'fit'`` persists fitted model state into
-    ``mgr_models_<target>`` tables (no forecast); ``'predict'`` reloads
-    persisted state and forecasts into ``mgr_fcst_<target>`` WITHOUT
-    re-fitting (requires a prior ``'fit'`` run).
+    tables (bucket resume); ``'fit'`` persists fitted model state into
+    ``mgr_models_<target>`` tables (no forecast) for the units without a
+    stored state; ``'predict'`` reloads persisted state and forecasts into
+    ``mgr_fcst_<target>`` WITHOUT re-fitting (requires a prior ``'fit'``
+    run).
 
     Up to :data:`PARALLEL_FLOWS` targets submit their Spark jobs
     concurrently from driver threads (distinct output/lineage tables, commit
@@ -380,28 +383,21 @@ def run_manager(
         if run_mode == "predict":
             return _predict(spark, io, t_df, target, reg_cols, order_col, cfg)
 
-        tuned = [
-            _tuned_params(t_df.filter(F.col("_spec") == i), spec, order_col, target)
-            for i, spec in specs.items() if spec.get("tuning")
-        ]
-        if tuned:
-            t_df = t_df.join(reduce(DataFrame.unionByName, tuned), "_unit_id", "left")
         keep = ["_unit_id", "_spec", "_horizon", order_col, target, "_is_train",
                 *[c for cols in reg_cols.values() for c in cols]]
-        src = t_df.select(*dict.fromkeys(keep + (["_tuned"] if tuned else [])))
+        src = t_df.select(*dict.fromkeys(keep))
+        kernel = _make_fit_kernel(specs, reg_cols, target, min_train, run_mode == "fit")
         if run_mode == "fit":
             from mpnsm_spark.functions.model_store import MODEL_STATE_SCHEMA
 
-            # model_store schema keyed by the manager's composite unit id
-            stage_schema = MODEL_STATE_SCHEMA.replace("conv_id", "_unit_id")
-            table = f"mgr_models_{target}"
-        else:
-            stage_schema = "_unit_id string, target string, step int, yhat double"
-            table = f"mgr_fcst_{target}"
-        kernel = _make_fit_kernel(specs, reg_cols, target, min_train, run_mode == "fit")
-        stage = KernelStage(table, kernel, stage_schema, order_col=order_col)
+            stage = KernelStage(f"mgr_models_{target}", kernel, MODEL_STATE_SCHEMA,
+                                order_col=order_col)
+            return _fit_new_units(spark, io, stage, src, cfg, min_train), stage.name
+        stage = KernelStage(f"mgr_fcst_{target}", kernel,
+                            "_unit_id string, target string, step int, yhat double",
+                            order_col=order_col)
         res = run_kernel_stage(spark, io, stage, src, cfg, key="_unit_id")
-        return res, res.pop("frame") if cfg.ephemeral else table
+        return res, res.pop("frame") if cfg.ephemeral else stage.name
 
     # Targets are independent — the reference runs its per-unit loop under
     # joblib (deprecated/ts_manager.py); here each target is already one
@@ -448,26 +444,43 @@ def _predict(spark: SparkSession, io: TableIO, t_df: DataFrame, target: str,
             .alias("extra")
         )
     units = t_df.groupBy("_unit_id").agg(*per_unit)
-    states = load_model_states(
-        spark, io, f"mgr_models_{target}", target=target, key_col="_unit_id"
-    ).join(units, "_unit_id")
-    fcst = predict_from_states(
-        states.withColumnRenamed("_unit_id", "conv_id"), "horizon"
-    ).withColumnRenamed("conv_id", "_unit_id")
+    states = load_model_states(spark, io, f"mgr_models_{target}").join(units, "_unit_id")
+    fcst = predict_from_states(states, "horizon")
     if cfg.ephemeral:
         return None, fcst
     io.append(fcst, table, meta={"run_mode": "predict"})
     return None, table
 
 
+def _fit_new_units(spark: SparkSession, io: TableIO, stage: KernelStage,
+                   src: DataFrame, cfg: PipelineConfig, min_train: int) -> dict:
+    """Fit mode's stage: fit the units of ``src`` that have no state in
+    ``stage.name`` yet (an anti-join on the stored units, the reference's
+    ``cache_feat`` skip) over every salt bucket — bucket lineage cannot tell
+    a grown panel's new units from the fitted ones. When the table exists,
+    one probe job checks for a unit left to fit (``min_train`` train rows,
+    no state); without one the run appends nothing. A unit whose fit raised
+    has no state, so the next fit retries it."""
+    if io.exists(stage.name):
+        spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
+        stored = io.read(spark, stage.name).select("_unit_id")
+        src = src.join(F.broadcast(stored), "_unit_id", "left_anti")
+        todo = src.filter("_is_train").groupBy("_unit_id").count()
+        if not todo.filter(F.col("count") >= min_train).take(1):
+            return _kernel_result(stage.name, 0)
+    return _run_kernel_buckets(spark, io, stage, src, cfg, "_unit_id",
+                               list(range(cfg.num_buckets)))
+
+
 def _make_fit_kernel(specs: dict[int, dict], reg_cols: dict[int, list[str]],
                      target: str, min_train: int, emit_state: bool):
     """Per-series kernel: dispatch on the series' ``_spec`` to that spec's
-    model knobs, regressor columns and tuning; split train/future; fit
-    TrendSeasonalOLS (with tuned overrides and regressor extras) and emit
-    forecast rows — or, in fit mode, one model-state row (model_store schema
-    keyed by _unit_id). A series with future rows forecasts them; one
-    without forecasts its ``_horizon``.
+    model knobs, regressor columns and tuning; split train/future; run the
+    spec's grid search on the train values (:func:`_tune`); fit
+    TrendSeasonalOLS (with the winning params and regressor extras) and emit
+    forecast rows — or, in fit mode, one model-state row
+    (:data:`~mpnsm_spark.functions.model_store.MODEL_STATE_SCHEMA`). A series
+    with future rows forecasts them; one without forecasts its ``_horizon``.
 
     ``model.forecaster`` selects the fit: ``"trend_seasonal_ols"`` (default,
     the reference-parity model) or ``"linear_hinge"`` — the fixed 3-basis
@@ -500,16 +513,12 @@ def _make_fit_kernel(specs: dict[int, dict], reg_cols: dict[int, list[str]],
         if model_cfg.get("forecaster") == "linear_hinge":
             knot_frac = float(model_cfg.get("knot_frac", 0.5))
             return forecast(uid, linear_hinge_forecaster(y, steps, knot_frac))
-        tuned = None
-        if spec.get("tuning"):
-            entries = pdf["_tuned"].iat[0]
-            if entries is not None and len(entries):
-                tuned = {e["param"]: e["value"] for e in entries}
+        tuned = _tune(spec["tuning"], y) if spec.get("tuning") else None
         kwargs = _model_kwargs(spec, tuned)
         extra = pdf[cols].to_numpy(np.float64) if cols else None
         m = TrendSeasonalOLS(**kwargs).fit(y, None if extra is None else extra[is_train])
         if emit_state:
-            return state_row(uid, target, kwargs, m, key_col="_unit_id")
+            return state_row(uid, target, kwargs, m)
         if extra is not None and not n_future:
             raise ValueError(
                 f"target {target!r} has regressors but no future rows — "

@@ -162,91 +162,6 @@ class KernelStage:
     split_threshold: int | None = None
 
 
-FORECAST_STAGE_SCHEMA = (
-    "conv_id string, step int, yhat double, n_train int, "
-    "coef_names array<string>, coef_values array<double>"
-)
-
-
-def ols_forecast_stage(
-    name: str = "forecast",
-    source: str = "1m",
-    value_col: str = "value_avg",
-    order_col: str = "bucket_start",
-    horizon: int = 12,
-    model_kwargs: dict | None = None,
-    min_train: int = 8,
-) -> KernelStage:
-    """The pipeline's DEFAULT forecast stage: the REAL per-series model
-    (:class:`~mpnsm_spark.functions.model.TrendSeasonalOLS` — changepoint-
-    aware trend + seasonal OLS), not a surrogate, fit on a tier's value
-    column with the fitted coefficients cross-joined onto every forecast row
-    — the reference's coefficient-enriched forecast output
-    (``/root/reference/mpnsm/time_series/manager.py:287-292``:
-    ``regressor_coefficients(fcst)`` merged onto the saved results;
-    ``model.py:194-222``).
-
-    Because :func:`run_kernel_stage` snapshot-versions the stage's output
-    table and stamps per-bucket lineage, every fitted series' coefficients
-    are durably recorded per run — the model-lineage record
-    (``read_forecast_models`` extracts the one-row-per-series view).
-    """
-    from mpnsm_spark.functions.model import TrendSeasonalOLS
-
-    kwargs = dict(model_kwargs or {})
-    import numpy as _np
-    import pandas as _pd
-
-    def kernel(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        vals = pdf[value_col].to_numpy(_np.float64)
-        if len(vals) < min_train:
-            return _pd.DataFrame()  # apply_per_series drops zero-row results
-        m = TrendSeasonalOLS(**kwargs).fit(vals)
-        coefs = m.coefficients()
-        names = list(coefs)
-        return _pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "step": _np.arange(1, horizon + 1, dtype=_np.int32),
-                "yhat": m.predict(horizon),
-                "n_train": _np.int32(len(vals)),
-                "coef_names": [names] * horizon,
-                "coef_values": [[float(coefs[n]) for n in names]] * horizon,
-            }
-        )
-
-    return KernelStage(
-        name=name,
-        fn=kernel,
-        output_schema=FORECAST_STAGE_SCHEMA,
-        source=source,
-        order_col=order_col,
-    )
-
-
-def read_forecast_models(
-    spark: SparkSession, io: TableIO, name: str = "forecast"
-) -> DataFrame:
-    """One row per fitted series from the forecast stage's versioned output:
-    (conv_id, n_train, coef_names, coef_values) — the per-series model
-    lineage (latest snapshot wins on resume re-runs)."""
-    df = io.read(spark, name)
-    return (
-        df.groupBy("conv_id")
-        .agg(
-            F.max_by(
-                F.struct("n_train", "coef_names", "coef_values"), F.col("_v")
-            ).alias("_m")
-        )
-        .select(
-            "conv_id",
-            F.col("_m.n_train").alias("n_train"),
-            F.col("_m.coef_names").alias("coef_names"),
-            F.col("_m.coef_values").alias("coef_values"),
-        )
-    )
-
-
 @dataclass
 class PipelineConfig:
     num_buckets: int = 16
@@ -618,7 +533,6 @@ def _kernel_result(name: str, buckets_run: int) -> dict:
     }
 
 
-@keeps_job_description
 def run_kernel_stage(
     spark: SparkSession,
     io: TableIO,
@@ -652,10 +566,26 @@ def run_kernel_stage(
     snapshot write is the stage's only Spark job.
     """
     cfg = cfg or PipelineConfig()
-    t0 = time.time()
-    spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
     done = load_lineage_map(io).get(stage.name, set()) if not cfg.ephemeral else set()
     remaining = sorted(set(range(cfg.num_buckets)) - done)
+    return _run_kernel_buckets(spark, io, stage, src, cfg, key, remaining)
+
+
+@keeps_job_description
+def _run_kernel_buckets(
+    spark: SparkSession,
+    io: TableIO,
+    stage: KernelStage,
+    src: DataFrame,
+    cfg: PipelineConfig,
+    key: str,
+    remaining: list[int],
+) -> dict:
+    """:func:`run_kernel_stage` over the salt buckets ``remaining``: the
+    kernel pass, the snapshot write with its ``Observation`` and the
+    lineage commit, or the ephemeral frame. Callers choose the buckets."""
+    t0 = time.time()
+    spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
     result = _kernel_result(stage.name, len(remaining))
     if not remaining:
         return result

@@ -237,10 +237,10 @@ def test_run_manager_regressor_without_future_errors_isolated(
 
 def test_run_manager_tuning_spec(spark, panel, tmp_path):
     """A tuning spec in the config drives per-series grid search; the fitted
-    forecast uses each series' tuned winner (verified via the engine's own
-    tuner as the param oracle + a local fit)."""
+    forecast uses each series' tuned winner (verified via the search core
+    called per series in plain numpy as the param oracle + a local fit)."""
     from mpnsm_spark.functions.model import ols_forecaster
-    from mpnsm_spark.functions.tuning import tune_grid_per_series
+    from mpnsm_spark.functions.tuning import search_series
 
     io = TableIO(str(tmp_path / "wh"))
     tuning = {"grid": {"n_changepoints": [1, 3]}, "n_folds": 2, "horizon": 4}
@@ -266,29 +266,44 @@ def test_run_manager_tuning_spec(spark, panel, tmp_path):
         cfg=PipelineConfig(num_buckets=4),
     )
     fc = res.forecasts(spark, io).toPandas()
-    chosen = {
-        r["conv_id"]: int(r["value"])
-        for r in tune_grid_per_series(
-            train,
-            tuning["grid"],
-            ols_forecaster,
-            n_folds=2,
-            horizon=4,
-            key="_uid",
-            value_col="sales",
-        ).collect()
-        if r["param"] == "n_changepoints"
-    }
     pdf = train.toPandas().sort_values(["_uid", "turn_idx"])
     for uid, g in pdf.groupby("_uid"):
+        y = g["sales"].to_numpy(np.float64)
+        chosen, _ = search_series(
+            y, tuning["grid"], ols_forecaster, chooser="global_min",
+            n_folds=2, horizon=4,
+        )
         m = TrendSeasonalOLS(
-            n_changepoints=chosen[uid], min_distance=2
-        ).fit(g["sales"].to_numpy(np.float64))
+            n_changepoints=int(chosen["n_changepoints"]), min_distance=2
+        ).fit(y)
         exp = m.predict(4)
         got = (
             fc[fc["_unit_id"] == uid].sort_values("step")["yhat"].to_numpy()
         )
         assert (got == exp).all(), uid
+
+
+def test_tuned_target_plans_one_python_pass(spark, tmp_path):
+    """Tuning runs inside the fit kernel: a tuned target's executed plan has
+    exactly one FlatMapGroupsInPandas and no more exchanges than an untuned
+    one."""
+    df = _panel_units(spark, 8)
+
+    def plan(target: dict) -> str:
+        res = run_manager(
+            spark, df, TableIO(str(tmp_path / "wh")),
+            [{"unit": {}, "horizon": 3, "targets": [target]}],
+            group_columns=["region", "store"],
+            cfg=PipelineConfig(num_buckets=4, ephemeral=True),
+        )
+        return res.forecast_frames[0]._jdf.queryExecution().executedPlan().toString()
+
+    tuning = {"grid": {"n_changepoints": [1, 2]}, "n_folds": 2, "horizon": 3}
+    tuned = plan({"target_col": "sales", "tuning": tuning})
+    untuned = plan({"target_col": "sales"})
+    assert tuned.count("FlatMapGroupsInPandas") == 1, tuned
+    assert untuned.count("FlatMapGroupsInPandas") == 1, untuned
+    assert tuned.count("Exchange") == untuned.count("Exchange"), tuned
 
 
 def test_run_manager_fit_then_predict(spark, panel, tmp_path):
@@ -610,3 +625,60 @@ def test_root_targets_submit_jobs_only_in_kernel_stages(spark, panel, tmp_path):
     assert descs and all(str(d).startswith("mpnsm:mgr_fcst_") for d in descs), descs
     assert set(descs) == {"mpnsm:mgr_fcst_sales", "mpnsm:mgr_fcst_visits"}
     assert res.forecast_tables == ["mgr_fcst_sales", "mgr_fcst_visits"]
+
+
+def test_grown_panel_fit_fits_only_new_units(spark, tmp_path):
+    """The reference's cache_feat skip (deprecated/ts_manager.py:123-145):
+    a second fit over a grown panel fits exactly the units without a stored
+    state — the new ones and one whose fit raised in the first run — and
+    refits none of the stored ones (their values x1000 leave their
+    predictions bitwise unchanged); a fit with nothing new appends no
+    snapshot."""
+    io = TableIO(str(tmp_path / "wh"))
+    groups = ["region", "store"]
+    panel = _panel_units(spark, 8)
+    model = {"n_changepoints": 2}
+    root = {"unit": {}, "horizon": 4, "targets": [{"target_col": "sales", "model": model}]}
+    # s4's first fit raises: the residual re-fit has no 'forecast' mode
+    broken = {"unit": {"region": "A", "store": "s4"}, "targets": [{
+        "target_col": "sales",
+        "model": {**model, "fit_smooth": True, "smooth_future": "forecast"}}]}
+    fit_kw = dict(group_columns=groups, run_mode="fit", cfg=PipelineConfig(num_buckets=4))
+    pred_kw = dict(group_columns=groups, run_mode="predict",
+                   cfg=PipelineConfig(num_buckets=4, ephemeral=True))
+    key = ["_unit_id", "step"]
+
+    first = panel.filter(F.col("store").isin("s0", "s1", "s2", "s3", "s4"))
+    run1 = run_manager(spark, first, io, [root, broken], **fit_kw)
+    assert sum(s["errored_series"] for s in run1.stages) == 1
+    assert io.read(spark, "mgr_models_sales").count() == 4
+    pred1 = run_manager(spark, panel, io, [root], **pred_kw)
+    pred1 = pred1.forecasts(spark, io).toPandas().sort_values(key).reset_index(drop=True)
+    assert pred1["_unit_id"].nunique() == 4
+
+    stored = [f"{'AB'[ui % 2]}\x1fs{ui}" for ui in range(4)]
+    poisoned = panel.withColumn(
+        "sales",
+        F.when(F.col("store").isin("s0", "s1", "s2", "s3"), F.col("sales") * 1000.0)
+        .otherwise(F.col("sales")),
+    )
+    run2 = run_manager(spark, poisoned, io, [root], **fit_kw)
+    assert sum(s["output_rows"] for s in run2.stages) == 4  # only the new units
+    states = io.read(spark, "mgr_models_sales").toPandas()
+    assert len(states) == states["_unit_id"].nunique() == 8
+
+    pred2 = run_manager(spark, poisoned, io, [root], **pred_kw)
+    pred2 = pred2.forecasts(spark, io).toPandas().sort_values(key).reset_index(drop=True)
+    assert pred2["_unit_id"].nunique() == 8
+    old = pred2[pred2["_unit_id"].isin(stored)].reset_index(drop=True)
+    assert (old["yhat"].to_numpy() == pred1["yhat"].to_numpy()).all()
+    for ui in range(4, 8):  # the new units: fit on their own values
+        uid = f"{'AB'[ui % 2]}\x1fs{ui}"
+        want = TrendSeasonalOLS(**model).fit(_series(ui * 5.0)).predict(4)
+        got = pred2[pred2["_unit_id"] == uid]["yhat"].to_numpy()
+        assert (got == want).all(), uid
+
+    version = io.snapshot_version("mgr_models_sales")
+    run3 = run_manager(spark, poisoned, io, [root], **fit_kw)
+    assert io.snapshot_version("mgr_models_sales") == version
+    assert sum(s["buckets_run"] for s in run3.stages) == 0

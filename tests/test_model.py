@@ -170,22 +170,29 @@ def test_linear_hinge_matches_independent_lstsq():
 # ------------------------------------------------------------- Spark surface
 
 
-def test_forecast_trend_seasonal_matches_local_kernel(spark, transcripts):
-    from pyspark.sql import functions as F
+def test_manager_forecast_matches_local_kernel(spark, transcripts, tmp_path):
+    """run_manager's kernel, the engine's one fit path, forecasts each series
+    with at least min_train rows bitwise like a local fit, and the state it
+    stores carries the fit's shape and coefficients."""
+    from mpnsm_spark.functions.model_store import load_model_states, model_from_state
+    from mpnsm_spark.plans.manager import run_manager
+    from mpnsm_spark.plans.pipeline import PipelineConfig
+    from mpnsm_spark.sources.tableio import TableIO
 
-    from mpnsm_spark.operators.forecast import forecast_trend_seasonal
-
+    io = TableIO(str(tmp_path / "wh"))
+    config = [{"unit": {}, "horizon": 4,
+               "targets": [{"target_col": "value", "model": {"n_changepoints": 2}}]}]
+    kw = dict(group_columns=["conv_id"], cfg=PipelineConfig(num_buckets=4))
     out = (
-        forecast_trend_seasonal(
-            transcripts,
-            horizon=4,
-            model_kwargs={"n_changepoints": 2},
-            with_debug=True,
-        )
+        run_manager(spark, transcripts, io, config, **kw)
+        .forecasts(spark, io)
         .toPandas()
-        .sort_values(["conv_id", "step"])
+        .sort_values(["_unit_id", "step"])
         .reset_index(drop=True)
     )
+    run_manager(spark, transcripts, io, config, run_mode="fit", **kw)
+    states = load_model_states(spark, io, "mgr_models_value").toPandas()
+    states = states.set_index("_unit_id")
     local = (
         transcripts.select("conv_id", "turn_idx", "value")
         .toPandas()
@@ -197,14 +204,14 @@ def test_forecast_trend_seasonal_matches_local_kernel(spark, transcripts):
         if len(vals) < 8:
             continue
         m = TrendSeasonalOLS(n_changepoints=2).fit(vals)
-        for i, p in enumerate(m.predict(4), start=1):
-            rows.append((conv, i, p, len(vals), len(m.changepoints_)))
-    want = pd.DataFrame(
-        rows, columns=["conv_id", "step", "yhat", "n_train", "n_changepoints"]
-    ).sort_values(["conv_id", "step"]).reset_index(drop=True)
+        rows += [(conv, i, p) for i, p in enumerate(m.predict(4), start=1)]
+        st = states.loc[conv]
+        assert st["n_train"] == len(vals)
+        assert list(st["changepoints"]) == list(m.changepoints_)
+        assert model_from_state(st.to_dict()).coefficients() == m.coefficients()
+    want = pd.DataFrame(rows, columns=["_unit_id", "step", "yhat"])
+    want = want.sort_values(["_unit_id", "step"]).reset_index(drop=True)
     assert len(out) == len(want) > 0
-    np.testing.assert_allclose(out["yhat"], want["yhat"], rtol=1e-9)
-    assert (out["n_changepoints"].to_numpy() == want["n_changepoints"].to_numpy()).all()
-    assert out["resid_std"].notna().all()
-    # debug coefficients are per-series constant
-    assert (out.groupby("conv_id")["intercept"].nunique() == 1).all()
+    assert len(states) == want["_unit_id"].nunique()
+    assert (out["_unit_id"] == want["_unit_id"]).all()
+    assert (out["yhat"].to_numpy() == want["yhat"].to_numpy()).all()

@@ -1,6 +1,7 @@
-"""Fitted-model persistence + predict-only warm start (reference
-manager.py:213-220/262-271 fit-save / predict-reload, model.py:518-552
-save_model/load_model, deprecated/ts_manager.py:123-145 cache_feat skip)."""
+"""Fitted-model state through the manager's fit path: persist, reload and
+predict without refitting (reference manager.py:213-220/262-271 fit-save /
+predict-reload, model.py:518-552 save_model/load_model). The grown-panel
+``cache_feat`` skip is checked in test_manager.py."""
 
 import numpy as np
 import pandas as pd
@@ -9,13 +10,12 @@ from pyspark.sql import functions as F
 
 from mpnsm_spark.functions.model import TrendSeasonalOLS
 from mpnsm_spark.functions.model_store import (
-    fit_missing_model_states,
-    fit_model_states,
     load_model_states,
     model_from_state,
     predict_from_states,
-    save_model_states,
 )
+from mpnsm_spark.plans.manager import run_manager
+from mpnsm_spark.plans.pipeline import PipelineConfig
 from mpnsm_spark.sources.tableio import TableIO
 
 MODEL_KWARGS = {
@@ -41,32 +41,44 @@ def series_df(spark):
     return spark.createDataFrame(rows, "conv_id string, turn_idx int, value double")
 
 
+TABLE = "mgr_models_value"
+
+
+def _fit(spark, df, io, min_train=8):
+    """run_manager's fit mode: one state row per series in ``TABLE``."""
+    config = [{"unit": {}, "targets": [{"target_col": "value", "model": MODEL_KWARGS}]}]
+    return run_manager(spark, df, io, config, ["conv_id"], run_mode="fit",
+                       min_train=min_train, cfg=PipelineConfig(num_buckets=2))
+
+
+def _local_fit(values) -> TrendSeasonalOLS:
+    kwargs = dict(MODEL_KWARGS)
+    kwargs["seasonality"] = tuple(tuple(s) for s in kwargs["seasonality"])
+    return TrendSeasonalOLS(**kwargs).fit(np.asarray(values, dtype=np.float64))
+
+
 def _pd(df):
-    return df.toPandas().sort_values(["conv_id", "target", "step"]).reset_index(drop=True)
+    return df.toPandas().sort_values(["_unit_id", "target", "step"]).reset_index(drop=True)
 
 
 def test_fit_persist_reload_bitwise(spark, series_df, tmp_path):
-    """fit → persist → reload → predictions are BIT-identical to both the
-    in-memory fitted state and an independent local refit."""
-    tio = TableIO(str(tmp_path / "wh"))
-    states = fit_model_states(series_df, MODEL_KWARGS)
-    v = save_model_states(tio, states, "models")
-    assert v == 1
+    """fit → persist → reload → predictions are BIT-identical to an
+    independent local refit."""
+    io = TableIO(str(tmp_path / "wh"))
+    _fit(spark, series_df, io)
+    assert io.snapshot_version(TABLE) == 1
 
-    reloaded = load_model_states(spark, tio, "models")
-    got = _pd(predict_from_states(reloaded, horizon=7))
+    got = _pd(predict_from_states(load_model_states(spark, io, TABLE), horizon=7))
 
     # independent local oracle: refit each series in plain numpy/pandas
     pdf = series_df.toPandas().sort_values(["conv_id", "turn_idx"])
     expected = []
     for conv, g in pdf.groupby("conv_id"):
-        kwargs = dict(MODEL_KWARGS)
-        kwargs["seasonality"] = tuple(tuple(s) for s in kwargs["seasonality"])
-        m = TrendSeasonalOLS(**kwargs).fit(g["value"].to_numpy(np.float64))
+        m = _local_fit(g["value"])
         expected.append(
             pd.DataFrame(
                 {
-                    "conv_id": conv,
+                    "_unit_id": conv,
                     "target": "value",
                     "step": np.arange(1, 8, dtype=np.int32),
                     "yhat": m.predict(7),
@@ -74,7 +86,7 @@ def test_fit_persist_reload_bitwise(spark, series_df, tmp_path):
             )
         )
     exp = pd.concat(expected, ignore_index=True)
-    exp = exp.sort_values(["conv_id", "target", "step"]).reset_index(drop=True)
+    exp = exp.sort_values(["_unit_id", "target", "step"]).reset_index(drop=True)
     # bitwise: parquet round-trips IEEE doubles exactly and the reloaded
     # predict is the same code path as fit-time predict
     assert (got["yhat"].to_numpy() == exp["yhat"].to_numpy()).all()
@@ -84,11 +96,11 @@ def test_fit_persist_reload_bitwise(spark, series_df, tmp_path):
 def test_state_row_reconstructs_full_model(spark, series_df, tmp_path):
     """model_from_state restores in-sample prediction too (smooth_train_
     round-trips) — the state row IS the complete fitted model."""
-    tio = TableIO(str(tmp_path / "wh"))
-    save_model_states(tio, fit_model_states(series_df, MODEL_KWARGS), "models")
+    io = TableIO(str(tmp_path / "wh"))
+    _fit(spark, series_df, io)
     row = (
-        load_model_states(spark, tio, "models")
-        .filter(F.col("conv_id") == "conv0")
+        load_model_states(spark, io, TABLE)
+        .filter(F.col("_unit_id") == "conv0")
         .collect()[0]
         .asDict()
     )
@@ -98,62 +110,39 @@ def test_state_row_reconstructs_full_model(spark, series_df, tmp_path):
         .toPandas()
         .sort_values("turn_idx")
     )
-    kwargs = dict(MODEL_KWARGS)
-    kwargs["seasonality"] = tuple(tuple(s) for s in kwargs["seasonality"])
-    fresh = TrendSeasonalOLS(**kwargs).fit(pdf["value"].to_numpy(np.float64))
+    fresh = _local_fit(pdf["value"])
     assert (m.predict_in_sample() == fresh.predict_in_sample()).all()
     assert (m.predict(12) == fresh.predict(12)).all()
 
 
-def test_warm_start_skips_fitted_series(spark, series_df, tmp_path):
-    """cache_feat semantics: a second run must NOT refit stored series —
-    proven by corrupting their data and checking predictions are unchanged —
-    while new series get fitted and appended."""
-    tio = TableIO(str(tmp_path / "wh"))
-    first = series_df.filter(F.col("conv_id").isin("conv0", "conv1", "conv2"))
-    states1 = fit_missing_model_states(spark, first, tio, model_kwargs=MODEL_KWARGS)
-    assert states1.count() == 3
-    pred1 = _pd(predict_from_states(states1, horizon=5))
-
-    # corrupt the already-fitted series' values; add new series
-    poisoned = series_df.withColumn(
-        "value",
-        F.when(
-            F.col("conv_id").isin("conv0", "conv1", "conv2"),
-            F.col("value") * 1000.0,
-        ).otherwise(F.col("value")),
-    )
-    states2 = fit_missing_model_states(spark, poisoned, tio, model_kwargs=MODEL_KWARGS)
-    assert states2.count() == 6
-    pred2 = _pd(predict_from_states(states2, horizon=5))
-    old = pred2[pred2["conv_id"].isin(["conv0", "conv1", "conv2"])].reset_index(
-        drop=True
-    )
-    # stored series: identical predictions despite corrupted input = no refit
-    assert (old["yhat"].to_numpy() == pred1["yhat"].to_numpy()).all()
-
-    # a third run with nothing new appends no snapshot (pure metadata read)
-    v_before = tio.snapshot_version("models")
-    states3 = fit_missing_model_states(spark, poisoned, tio, model_kwargs=MODEL_KWARGS)
-    assert tio.snapshot_version("models") == v_before
-    assert states3.count() == 6
-
-
 def test_refit_supersedes_by_snapshot_version(spark, series_df, tmp_path):
-    """An explicit refit appends a snapshot and load takes the newest state
-    per (key, target) — versioned params semantics (A7 max-version scan)."""
-    tio = TableIO(str(tmp_path / "wh"))
-    save_model_states(tio, fit_model_states(series_df, MODEL_KWARGS), "models")
+    """A newer snapshot holding some units' states supersedes just those
+    units: load takes the newest state per (unit, target) — versioned params
+    semantics (A7 max-version scan) — and the other units keep theirs."""
+    io = TableIO(str(tmp_path / "wh"))
+    _fit(spark, series_df, io)
+    before = _pd(predict_from_states(load_model_states(spark, io, TABLE), horizon=3))
+
     shifted = series_df.withColumn("value", F.col("value") + F.lit(100.0))
-    save_model_states(tio, fit_model_states(shifted, MODEL_KWARGS), "models")
-    cur = load_model_states(spark, tio, "models")
+    io_shifted = TableIO(str(tmp_path / "shifted"))
+    _fit(spark, shifted, io_shifted)
+    refit = ["conv0", "conv1", "conv2"]
+    io.append(
+        io_shifted.read(spark, TABLE)
+        .filter(F.col("_unit_id").isin(refit))
+        .withColumn("_v", F.lit(io.snapshot_version(TABLE) + 1)),
+        TABLE,
+    )
+    cur = load_model_states(spark, io, TABLE)
     assert cur.count() == series_df.select("conv_id").distinct().count()
-    # newest snapshot wins: intercept-ish level must reflect the +100 shift
     got = _pd(predict_from_states(cur, horizon=3))
     fresh = _pd(
-        predict_from_states(fit_model_states(shifted, MODEL_KWARGS), horizon=3)
+        predict_from_states(load_model_states(spark, io_shifted, TABLE), horizon=3)
     )
-    assert (got["yhat"].to_numpy() == fresh["yhat"].to_numpy()).all()
+    new = got["_unit_id"].isin(refit)
+    # newest snapshot wins: the level reflects the +100 shift
+    assert (got[new]["yhat"].to_numpy() == fresh[new]["yhat"].to_numpy()).all()
+    assert (got[~new]["yhat"].to_numpy() == before[~new]["yhat"].to_numpy()).all()
 
 
 def test_short_series_pruned(spark, tmp_path):
@@ -163,8 +152,7 @@ def test_short_series_pruned(spark, tmp_path):
         [("a", 0, 1.0), ("a", 1, 2.0), ("b", 0, 3.0)],
         "conv_id string, turn_idx int, value double",
     )
-    states = fit_model_states(df, MODEL_KWARGS, min_train=8)
-    assert states.count() == 0
-    tio = TableIO(str(tmp_path / "wh"))
-    save_model_states(tio, states, "models")
-    assert load_model_states(spark, tio, "models").count() == 0
+    io = TableIO(str(tmp_path / "wh"))
+    res = _fit(spark, df, io, min_train=8)
+    assert sum(s["output_rows"] for s in res.stages) == 0
+    assert load_model_states(spark, io, TABLE).count() == 0

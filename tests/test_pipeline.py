@@ -692,49 +692,49 @@ def test_kernel_stage_split_with_bucket_start_default(spark, transcripts, tmp_pa
     assert got.sort_index().equals(want.sort_index().astype(got.dtype))
 
 
-def test_pipeline_default_forecast_stage_coefficients_in_lineage(
-    spark, transcripts, tmp_path
-):
-    """The pipeline's default forecast stage is the REAL model
-    (TrendSeasonalOLS via ols_forecast_stage, not a surrogate): running it as
-    a kernel stage records every fitted series' coefficients in the versioned
-    stage table, and read_forecast_models exposes one coefficient row per
-    fitted series that matches a local refit bitwise."""
+def test_manager_fit_over_tier_stores_coefficients(spark, transcripts, tmp_path):
+    """The REAL model (TrendSeasonalOLS through run_manager's fit kernel)
+    over the pipeline's stored 1m tier: the versioned state table holds one
+    row per fitted series, its coefficients
+    (``model_from_state(row).coefficients()``) match a local refit bitwise,
+    and predict-mode forecasts from it equal the refit's."""
     import numpy as np
 
     from mpnsm_spark.functions.model import TrendSeasonalOLS
-    from mpnsm_spark.plans.pipeline import ols_forecast_stage, read_forecast_models
+    from mpnsm_spark.functions.model_store import load_model_states, model_from_state
+    from mpnsm_spark.plans.manager import run_manager
 
     io = TableIO(str(tmp_path / "whf"))
-    stage = ols_forecast_stage(
-        horizon=5, min_train=5, model_kwargs={"n_changepoints": 2}
-    )
-    summary = run_pipeline(spark, transcripts, io, _cfg(kernel_stages=(stage,)))
-    assert summary["kernel_stages"]["forecast"]["buckets_error"] == {}
+    run_pipeline(spark, transcripts, io, _cfg())
+    config = [{"unit": {}, "horizon": 5, "targets": [
+        {"target_col": "value_avg", "model": {"n_changepoints": 2}}]}]
+    kw = dict(group_columns=["conv_id"], order_col="bucket_start", min_train=5,
+              cfg=PipelineConfig(num_buckets=4))
+    tier_df = read_tier(spark, io, "1m")
+    fit = run_manager(spark, tier_df, io, config, run_mode="fit", **kw)
+    assert all(not s["buckets_error"] for s in fit.stages)
 
-    tier = read_tier(spark, io, "1m").toPandas().sort_values(
-        ["conv_id", "bucket_start"]
-    )
+    tier = tier_df.toPandas().sort_values(["conv_id", "bucket_start"])
     sizes = tier.groupby("conv_id").size()
     fitted_expected = set(sizes[sizes >= 5].index)
 
-    models = read_forecast_models(spark, io).toPandas().set_index("conv_id")
-    # every fitted series has a coefficient row in the persisted model lineage
+    models = load_model_states(spark, io, "mgr_models_value_avg").toPandas()
+    models = models.set_index("_unit_id")
+    # every fitted series has a state row in the versioned model table
     assert set(models.index) == fitted_expected
-    assert (models["coef_names"].str.len() > 0).all()
 
-    fc = io.read(spark, "forecast").toPandas()
+    pred = run_manager(spark, tier_df, io, config, run_mode="predict", **kw)
+    fc = pred.forecasts(spark, io).toPandas()
     for conv, g in tier.groupby("conv_id"):
         if conv not in fitted_expected:
             continue
         m = TrendSeasonalOLS(n_changepoints=2).fit(
             g["value_avg"].to_numpy(np.float64)
         )
-        row = models.loc[conv]
-        coefs = m.coefficients()
-        assert list(row["coef_names"]) == list(coefs)
+        coefs = model_from_state(models.loc[conv].to_dict()).coefficients()
+        assert list(coefs) == list(m.coefficients())
         assert (
-            np.asarray(row["coef_values"]) == np.array(list(coefs.values()))
+            np.array(list(coefs.values())) == np.array(list(m.coefficients().values()))
         ).all()
-        got = fc[fc["conv_id"] == conv].sort_values("step")["yhat"].to_numpy()
+        got = fc[fc["_unit_id"] == conv].sort_values("step")["yhat"].to_numpy()
         assert (got == m.predict(5)).all()

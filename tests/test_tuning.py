@@ -51,38 +51,38 @@ def _pandas_tune(pdf, grid, n_folds=3, horizon=10, jump=5, min_train=5):
 
 
 def test_tune_matches_pandas_oracle(spark, series_df):
-    got = tune_per_series(series_df, param_grid=[1, 2, 4, 8]).toPandas()
+    got = tune_per_series(series_df, [1, 2, 4, 8]).toPandas()
     want = _pandas_tune(series_df.toPandas(), [1, 2, 4, 8])
     assert len(got) == len(want)
+    assert set(got["param"]) == {"param"}  # bare candidates: one row per series
     for r in got.itertuples(index=False):
         w_chosen, w_folds = want[r.conv_id]
-        assert (r.chosen_param, r.folds_used) == (w_chosen, w_folds), r.conv_id
+        assert (r.value, r.folds_used) == (w_chosen, w_folds), r.conv_id
     # the search is non-degenerate: different series choose different params
-    assert got["chosen_param"].nunique() > 1
+    assert got["value"].nunique() > 1
 
 
 def test_tune_mode_chooser(spark, series_df):
-    got = tune_per_series(
-        series_df, param_grid=[1, 2, 4, 8], chooser="mode"
-    ).toPandas()
-    assert set(got["chosen_param"]).issubset({1.0, 2.0, 4.0, 8.0})
+    got = tune_per_series(series_df, [1, 2, 4, 8], chooser="mode").toPandas()
+    assert set(got["value"]).issubset({1.0, 2.0, 4.0, 8.0})
+    # an unknown chooser fails on the driver, before any series runs
+    with pytest.raises(ValueError, match="chooser"):
+        tune_per_series(series_df, [1, 2], chooser="mean")
 
 
 def test_ladder_early_stop_prefix_property(spark, series_df):
     """Early-stop evaluates a prefix of the grid: with patience >= grid size
     it equals the exhaustive search."""
-    a = tune_per_series(
-        series_df, param_grid=[1, 2, 4, 8], ladder_early_stop=True, patience=8
-    ).toPandas().sort_values("conv_id").reset_index(drop=True)
-    b = tune_per_series(series_df, param_grid=[1, 2, 4, 8]).toPandas().sort_values(
+    a = tune_per_series(series_df, [1, 2, 4, 8], patience=8).toPandas().sort_values(
+        "conv_id"
+    ).reset_index(drop=True)
+    b = tune_per_series(series_df, [1, 2, 4, 8]).toPandas().sort_values(
         "conv_id"
     ).reset_index(drop=True)
     assert a.equals(b)
     # with patience=1 the search still returns a valid grid member per series
-    c = tune_per_series(
-        series_df, param_grid=[1, 2, 4, 8], ladder_early_stop=True, patience=1
-    ).toPandas()
-    assert set(c["chosen_param"]).issubset({1.0, 1.5, 2.0, 3.0, 4.0, 6.0, 8.0})
+    c = tune_per_series(series_df, [1, 2, 4, 8], patience=1).toPandas()
+    assert set(c["value"]).issubset({1.0, 1.5, 2.0, 3.0, 4.0, 6.0, 8.0})
 
 
 def test_cv_fit_predict_fold_replay(spark, series_df):
@@ -315,18 +315,18 @@ def test_tolerance_ladder_matches_pandas_replay(spark, series_df):
                         min_better=0.002, name="wmape")]
     for mode in ("penultimate", "best"):
         got = tune_per_series(
-            series_df, param_grid=grid, metric_specs=specs, fold_choice=mode
+            series_df, grid, metric=specs, fold_choice=mode
         ).toPandas()
         want = _pandas_tolerance_tune(
             series_df.toPandas(), grid, specs, fold_choice=mode
         )
         assert len(got) == len(want)
         for r in got.itertuples(index=False):
-            assert r.chosen_param == want[r.conv_id], (mode, r.conv_id)
+            assert r.value == want[r.conv_id], (mode, r.conv_id)
     # the tolerance rule actually binds: some series stop before the last rung
-    got_exhaustive = tune_per_series(series_df, param_grid=grid).toPandas()
+    got_exhaustive = tune_per_series(series_df, grid).toPandas()
     merged = got.merge(got_exhaustive, on="conv_id", suffixes=("_tol", "_full"))
-    assert (merged["chosen_param_tol"] != merged["chosen_param_full"]).any()
+    assert (merged["value_tol"] != merged["value_full"]).any()
 
 
 # -------------------------------------------- coefficient/debug enrichment ---
@@ -473,12 +473,8 @@ def _pandas_grid_tune(pdf, grid, chooser, n_folds=3, horizon=10, jump=5, min_tra
 
 @pytest.mark.parametrize("chooser", ["global_min", "median"])
 def test_tune_grid_matches_pandas_replay(spark, series_df, chooser):
-    from mpnsm_spark.functions.tuning import tune_grid_per_series
-
     grid = {"w": [1, 2, 4, 8], "scale": [0.95, 1.0, 1.05]}
-    got = tune_grid_per_series(
-        series_df, grid, _wscale, chooser=chooser
-    ).toPandas()
+    got = tune_per_series(series_df, grid, _wscale, chooser=chooser).toPandas()
     want = _pandas_grid_tune(series_df.toPandas(), grid, chooser)
     assert set(got["conv_id"]) == set(want)
     for (conv, param), grp in got.groupby(["conv_id", "param"]):
@@ -494,12 +490,7 @@ def test_tune_grid_matches_pandas_replay(spark, series_df, chooser):
 def test_tune_ladder_coordinate_descent_matches_replay(spark, series_df):
     """Sequential per-param ladders with the others fixed (reference
     heuristic tuner): independent pandas replay of the full walk."""
-    from mpnsm_spark.functions.tuning import (
-        MetricSpec,
-        ladder_converged,
-        make_ladder,
-        tune_ladder_per_series,
-    )
+    from mpnsm_spark.functions.tuning import MetricSpec, ladder_converged, make_ladder
 
     specs = [MetricSpec(wmape, max_worse=0.02, min_better=0.002, name="wmape")]
     ladder_specs = [
@@ -507,8 +498,14 @@ def test_tune_ladder_coordinate_descent_matches_replay(spark, series_df):
         {"name": "scale", "initial": 0.9, "final": 1.2, "step": 0.1},
     ]
     base = {"w": 1, "scale": 1.0}
-    got = tune_ladder_per_series(
-        series_df, ladder_specs, _wscale, base_params=base, metric_specs=specs
+    ladders = {
+        sp["name"]: make_ladder(sp["initial"], sp["final"], sp["step"],
+                                sp.get("mode", "additive"))
+        for sp in ladder_specs
+    }
+    got = tune_per_series(
+        series_df, ladders, _wscale, start=base, metric=specs,
+        fold_choice="penultimate",
     ).toPandas()
 
     pdf = series_df.toPandas()
@@ -544,10 +541,9 @@ def test_tune_ladder_coordinate_descent_matches_replay(spark, series_df):
 def test_tune_grid_with_real_model(spark, series_df):
     """The OLS model's dict params ride the multi-param grid end-to-end."""
     from mpnsm_spark.functions.model import ols_forecaster
-    from mpnsm_spark.functions.tuning import tune_grid_per_series
 
     small = series_df.filter(F.col("conv_id") < "s006")
-    got = tune_grid_per_series(
+    got = tune_per_series(
         small,
         {"n_changepoints": [0, 2], "fit_smooth": [0, 1]},
         lambda tr, h, p: ols_forecaster(
