@@ -1836,6 +1836,7 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from mpnsm_spark.plans.pipeline import parquet_footer_stats
     from mpnsm_spark.session import local_frame
 
     cols = ["user_id", "ts", "event_id", "event_type", "value"]
@@ -1874,20 +1875,8 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation job (same micros value the agg would return). Linking
     # above is complete for ALL files before this scan, so a stats-less
     # file only costs the Spark fallback, never a missing source file.
-    mx = None
-    for f in files:
-        md = pq.read_metadata(f)
-        ci = md.schema.names.index("ts")
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None or not st.has_min_max:
-                mx = None
-                break
-            mx = st.max if mx is None or st.max > mx else mx
-        else:
-            continue
-        mx = None
-        break
+    highs = [s["ts_max"] for s in parquet_footer_stats(files) if s["rows"]]
+    mx = None if None in highs else max(highs, default=None)
     if mx is None:  # stats-less files: fall back to the Spark aggregation
         mx = ev_ntz.agg(F.max("ts")).collect()[0][0]
     if mx is None:  # no events: no window to close, nothing to emit

@@ -49,12 +49,3 @@ def expanding_folds(
         .drop("_rn", "_n")
     )
 
-
-def fold_metrics(
-    labeled: DataFrame,
-    metric_cols: list,
-    key: str = "conv_id",
-) -> DataFrame:
-    """Aggregate metrics per (series, fold, role) — the reference's per-fold
-    scoring table (forecast.py:707-758 union with a fold column)."""
-    return labeled.groupBy(key, "fold", "role_cv").agg(*metric_cols)

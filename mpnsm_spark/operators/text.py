@@ -70,14 +70,6 @@ def token_count(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-flavored proxy: word pieces + punctuation marks each count once
-    (regex split on word boundaries), ~chars/4 floor for CJK-ish text."""
-    words = token_count(text)
-    punct = F.length(text) - F.length(F.translate(text, PUNCT_CHARS, ""))
-    return (words + punct).cast("int")
-
-
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length/punct/stopword quality features + composite score in [0,1].
 

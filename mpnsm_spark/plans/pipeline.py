@@ -17,9 +17,9 @@ at snapshot granularity (manifest renamed last); lineage is appended *after*
 the stage's data. A crash between the two re-runs those buckets on resume,
 which can only produce duplicate identical rows — removed by the read-side
 keep-last dedupe in :func:`read_tier` / :func:`read_chunks` (with real
-Iceberg this becomes MERGE INTO). Retention drops raw turns only after every
-tier/chunk stage is lineage-complete AND the per-turn text-equality invariant
-verifies (BASELINE.json ``input_hint``).
+Iceberg this becomes MERGE INTO). Retention copies the raw turns once the 1m
+tier over them is committed, and is recorded done only once the per-turn
+text-equality invariant verifies (BASELINE.json ``input_hint``).
 
 Execution model (why this scales):
 
@@ -38,18 +38,22 @@ Execution model (why this scales):
   its cached output is handed directly to dependent stages — no storage
   read-back, no dedupe window. Storage reads (with keep-last dedupe) happen
   only on resume, where prior snapshots exist.
-- **Stage DAG, parallel**: the independent 1h/1d branches, chunks,
-  retention and every lineage stats collect run from a pool of driver
+- **Stage DAG as data, run in parallel**: :func:`_stage_records` declares
+  every stage once (name, table, parent, operator, lineage stats), and one
+  wave runner serves them all: filter to the wave, apply the operator,
+  re-salt, version, cache when the stage has children, write, account. A
+  stage's children start when its data commits, from a pool of driver
   threads, so the next stage's tasks back-fill executors freed by the
-  current stage's tail (guide §2.6). Gated A/B at bench scale: parallel 6.1s
-  vs serial 14.0s. TableIO commits are lock-serialized.
+  current stage's tail (guide §2.6). Gated A/B at bench scale: parallel
+  6.1s vs serial 14.0s. TableIO commits are lock-serialized.
 - **Bookkeeping on the driver**: lineage rows (one per stage × bucket) are
   built as a ``pyarrow.Table`` and committed by ``TableIO.append`` through
   the same manifest rename as data, and read back with
-  ``TableIO.read_arrow`` — neither submits a Spark job. A tier or leaf wave
-  pays one stats collect; file-level retention, kernel stages and the
-  stream sink already hold their counts. A re-run whose lineage already
-  covers every stage returns before the vocabulary scan: no Spark job.
+  ``TableIO.read_arrow`` — neither submits a Spark job. Each wave's commit
+  is recorded in one place, which hands its stats collect and lineage
+  commit to the pool, off the critical path; file-level retention already
+  holds its counts. A re-run whose lineage already covers every stage
+  returns before the vocabulary scan: no Spark job.
 - **Reads planned from manifests**: each snapshot's manifest records its
   Spark schema, so reading the engine's own tables submits no
   schema-inference job, and keep-last per bucket is skipped when the
@@ -66,16 +70,16 @@ import threading
 import time
 import uuid
 from collections import defaultdict
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from functools import partial, wraps
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from mpnsm_spark import TIERS
 from mpnsm_spark.generator import with_value
 from mpnsm_spark.operators.gapfill import gapfill_anchored
 from mpnsm_spark.operators.gorilla import encode_tier_chunks
@@ -142,18 +146,17 @@ def dedupe_encoded(pre: DataFrame, strict_ties: bool = False) -> DataFrame:
 
 @dataclass
 class KernelStage:
-    """A per-series pandas-kernel pipeline stage with error isolation.
+    """A per-series pandas-kernel stage with per-bucket error lineage, run
+    by :func:`run_kernel_stage` over the frame its caller passes (the
+    manager passes its per-unit rows).
 
-    ``fn`` runs once per conversation (rows sorted by ``order_col``) and must
+    ``fn`` runs once per series (rows sorted by ``order_col``) and must
     return a frame matching ``output_schema`` (key column carried through).
-    ``source`` picks the stage input: ``"norm"`` (deduped encoded turns) or a
-    tier name (``"1m"``/``"1h"``/``"1d"``).
     """
 
     name: str
     fn: object  # Callable[[pd.DataFrame], pd.DataFrame]
     output_schema: str
-    source: str = "1m"
     order_col: str = "bucket_start"
     # Sub-split conversations above this many rows into bounded ranges so a
     # hot conversation cannot stall one executor slot (skew.py contract:
@@ -164,16 +167,16 @@ class KernelStage:
 
 @dataclass
 class PipelineConfig:
+    """Settings of one :func:`run_pipeline` or :func:`run_kernel_stage`
+    run: the salt buckets and their commit waves, the chunk size, which
+    tiers are gap-filled, the retention cutoff, whether kernel stages keep
+    any state, and the run id written into lineage."""
+
     num_buckets: int = 16
     wave_size: int | None = None  # buckets per commit wave; None = all at once
     points_per_chunk: int = 4096
     gapfill_tiers: tuple[str, ...] = ("1h", "1d")
     retention_cutoff: str | None = None  # drop raw turns with ts < cutoff
-    # Per-series kernel stages run after the tier DAG with per-bucket error
-    # lineage: a poisoned series yields a status="error" lineage row (stage,
-    # bucket_id, error class) instead of failing the run, and only errored
-    # buckets reprocess on resume.
-    kernel_stages: tuple = ()
     # Ephemeral kernel-stage runs: skip snapshot versioning, lineage and the
     # write/read-back round-trip entirely and hand the stage's output frame
     # straight to the caller. For an unnamed one-shot run (e.g. an ad-hoc
@@ -671,45 +674,223 @@ class StageFailure(RuntimeError):
     pass
 
 
+@dataclass(frozen=True)
+class DagStage:
+    """One stage of the tier DAG, as data: everything :func:`run_pipeline`'s
+    wave runner needs to run, store and account for it.
+
+    ``op`` maps one wave of the stage's input rows (``bucket_id`` dropped)
+    to its output rows; its second argument says whether those rows arrive
+    hash-partitioned by ``conv_id`` (a parent's fresh cache). ``input_rows``
+    and ``stats`` aggregate each bucket's output rows into its lineage
+    row: ``input_rows`` is what the stage consumed (raw turns under a tier
+    row, non-gap anchors, encoded points, retained turns)."""
+
+    name: str
+    table: str
+    parent: str | None  # the stage whose committed rows it reads; None = norm
+    op: Callable[[DataFrame, bool], DataFrame]
+    input_rows: Column
+    stats: tuple[Column, ...] = ()
+    # A copy of the raw turns (retention): its input is the salted raw rows,
+    # text included, and ``parent`` only orders it. It writes at full
+    # parallelism (its rows are the corpus), adopts whole files when the
+    # input is a bare parquet scan, and is checked turn by turn against its
+    # input before it counts as done.
+    raw: bool = False
+
+
+def _stage_records(
+    cfg: PipelineConfig, role_vocab: list[str], tool_vocab: list[str]
+) -> list[DagStage]:
+    """The tier DAG under ``cfg``, each parent before its children: the 1m
+    tier over the deduped turns; the 1h and 1d tiers cascaded from it
+    (1d-from-1m equals 1d-from-1h on associative columns and keeps the
+    critical path two stages deep); each tier's Gorilla chunks and, for
+    ``cfg.gapfill_tiers``, its gap-fill; retention once the 1m tier over
+    the raw turns is committed."""
+    turns = F.sum("turn_count")
+
+    def tier(t: str, parent: str | None, op) -> DagStage:
+        return DagStage(f"tier_{t}", f"tier_{t}", parent, op, turns)
+
+    def gapfill(t: str) -> DagStage:
+        # anchored fast path: tier value_avg is never null (turn_count>=1)
+        return DagStage(
+            f"gapfill_{t}",
+            f"gapfill_{t}",
+            f"tier_{t}",
+            lambda df, _: gapfill_anchored(df, t),
+            F.sum(F.when(~F.col("is_gap"), 1).otherwise(0)),
+        )
+
+    def chunks(t: str) -> DagStage:
+        return DagStage(
+            f"chunks_{t}",
+            f"chunks_{t}",
+            f"tier_{t}",
+            # fresh tier caches are hash-partitioned by conv_id already —
+            # the encode's repartition would be a redundant full exchange
+            lambda df, clustered: encode_tier_chunks(
+                df, t, points_per_chunk=cfg.points_per_chunk, assume_clustered=clustered
+            ),
+            F.sum("n_points"),
+            (F.sum(F.length("ts_blob") + F.length("value_blob")).alias("encode_bytes"),),
+        )
+
+    def retained(df: DataFrame, _) -> DataFrame:
+        # Map-only: filter + write, no shuffle of text. Input duplicates (if
+        # any) are retained as-arrived; consumers dedupe on read.
+        cutoff = cfg.retention_cutoff
+        return df.filter(F.col("ts") >= F.lit(cutoff)) if cutoff else df
+
+    stages = [
+        tier(
+            "1m",
+            None,
+            lambda df, _: rollup_encoded(df, "1m", role_vocab, tool_vocab, decode_tools=False),
+        ),
+        chunks("1m"),
+    ]
+    for t in ("1h", "1d"):
+        stages.append(tier(t, "tier_1m", lambda df, _, t=t: cascade(df, t, tool_vocab)))
+        if t in cfg.gapfill_tiers:
+            stages.append(gapfill(t))
+        stages.append(chunks(t))
+    stages.append(
+        DagStage("retention", "raw_retained", "tier_1m", retained, F.count(F.lit(1)), raw=True)
+    )
+    return stages
+
+
 def _dag_stages(cfg: PipelineConfig) -> list[str]:
     """Every stage the tier DAG runs under ``cfg``."""
-    stages = ["tier_1m", "chunks_1m"]
-    for tier in ("1h", "1d"):
-        stages.append(f"tier_{tier}")
-        if tier in cfg.gapfill_tiers:
-            stages.append(f"gapfill_{tier}")
-        stages.append(f"chunks_{tier}")
-    return stages + ["retention"]
+    return [st.name for st in _stage_records(cfg, [], [])]
 
 
-def _stage_done(done_map: dict[str, set[int]], stage: str, buckets: set[int]) -> bool:
-    """Whether committed lineage covers ``stage`` over ``buckets``;
-    file-level retention commits one stage-level row, bucket -1."""
-    done = done_map.get(stage, set())
-    return done >= buckets or (stage == "retention" and -1 in done)
+def _remaining(done: set[int], num_buckets: int) -> list[int]:
+    """A stage's buckets that its committed lineage does not cover; a
+    stage-level row (bucket -1, file-level retention) covers them all."""
+    return [] if -1 in done else sorted(set(range(num_buckets)) - done)
 
 
 def _lineage_covers(done_map: dict[str, set[int]], cfg: PipelineConfig) -> bool:
-    """Whether committed lineage covers every DAG stage and kernel stage, so
-    a run has nothing to do (ephemeral kernel stages always run)."""
-    if cfg.ephemeral and cfg.kernel_stages:
-        return False
-    buckets = set(range(cfg.num_buckets))
-    stages = _dag_stages(cfg) + [ks.name for ks in cfg.kernel_stages]
-    return all(_stage_done(done_map, s, buckets) for s in stages)
+    """Whether committed lineage covers every DAG stage, so a run has
+    nothing to do."""
+    return not any(
+        _remaining(done_map.get(s, set()), cfg.num_buckets) for s in _dag_stages(cfg)
+    )
+
+
+def _retain_files(
+    spark: SparkSession,
+    io: TableIO,
+    raw_df: DataFrame,
+    raw_aug: DataFrame,
+    cfg: PipelineConfig,
+    table: str,
+) -> tuple[dict, int] | None:
+    """Iceberg DELETE-WHERE-shaped retention: whole files below the cutoff
+    are dropped by footer stats, untouched files are ADOPTED by reference
+    (metadata-only, zero copy), and only cutoff-straddling files are
+    rewritten + integrity-verified. At 10^12 turns this is the difference
+    between a metadata commit and rewriting the corpus.
+
+    Returns the stage-level lineage stats (bucket -1) and the last snapshot
+    version, or None (the caller falls back to the row-level rewrite) when
+    the input is not PROVABLY a bare file scan: no input files; the
+    optimized logical plan carries any node beyond the leaf relation (a
+    Project / Filter — even row-count-preserving ones like a text rewrite —
+    means adopted file bytes would silently diverge from raw_df's rows); the
+    footer row total disagrees with count(); or the session timezone is not
+    UTC (footer stats are normalized to naive UTC — classifying against a
+    cutoff interpreted in another session zone would misclassify files near
+    the boundary). Raises :class:`StageFailure` when the rewrite does not
+    verify.
+    """
+    import datetime as _dt
+
+    # Zero-I/O bare-scan proof: after optimization a pure parquet scan is
+    # a single leaf LogicalRelation (select("*") folds away; ANY
+    # transformation leaves a Project/Filter node). Only then are the
+    # file bytes and raw_df's rows the same thing, which is what adoption
+    # assumes. The row-count cross-check below stays as belt-and-braces.
+    plan = raw_df._jdf.queryExecution().optimizedPlan()
+    if plan.children().size() != 0 or "Relation" not in plan.nodeName():
+        return None
+    if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
+        return None
+    files = [_strip_uri(f) for f in raw_df.inputFiles()]
+    if not files or not all(f.endswith(".parquet") for f in files):
+        return None
+    stats = parquet_footer_stats(files)
+    total_rows = sum(s["rows"] for s in stats)
+    if raw_df.count() != total_rows:  # metadata-only count for bare scans
+        return None
+    cutoff = None
+    if cfg.retention_cutoff:
+        cutoff = _dt.datetime.fromisoformat(cfg.retention_cutoff)
+        for s in stats:  # normalize tz-aware footer stats to naive UTC
+            for k in ("ts_min", "ts_max"):
+                v = s[k]
+                if v is not None and v.tzinfo is not None:
+                    s[k] = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    dropped, adopted, straddling = classify_files_for_retention(stats, cutoff)
+    assert all(
+        s["ts_max"] is not None and s["ts_max"] < cutoff for s in dropped
+    ), "retention would drop a file not entirely below the cutoff"
+    rewritten_rows = 0
+    version = 0
+    if straddling:
+        # raw_df is a bare scan of these files: its schema is theirs.
+        src = spark.read.schema(raw_df.schema).parquet(*[s["path"] for s in straddling])
+        sub = with_salt(with_value(src), cfg.num_buckets).filter(
+            F.col("ts") >= F.lit(cfg.retention_cutoff)
+        )
+        version = io.append(
+            sub.withColumn("_v", F.lit(io.snapshot_version(table) + 1)),
+            table,
+            meta={"stage": "retention", "rewrote": len(straddling)},
+        )
+        int_df, _ = io.read_parts(spark, table)
+        # Full text-equality verify on the rewritten subset only — the
+        # adopted files are the SAME bytes by construction and the dropped
+        # files are proven below-cutoff by their footers. The same pass
+        # counts the rewritten rows.
+        ok, rewritten_rows = checksums_match(sub, _keep_last(io, table, int_df))
+        if not ok:
+            raise StageFailure(
+                "rewritten-file text integrity check failed — raw NOT droppable"
+            )
+    if adopted:
+        # The scan's schema rides in the manifest, so reads of the adopted
+        # files plan without a schema-inference job.
+        meta = {"stage": "retention", "dropped": len(dropped), "schema": raw_df.schema.json()}
+        version = max(version, io.adopt([s["path"] for s in adopted], table, meta=meta))
+    elif not straddling:
+        # Everything dropped: commit an empty snapshot so the table reads.
+        version = io.append(
+            raw_aug.filter(F.lit(False)).withColumn("_v", F.lit(1)),
+            table,
+            meta={"stage": "retention", "dropped": len(dropped)},
+        )
+    row = {
+        "bucket_id": -1,
+        "output_rows": sum(s["rows"] for s in adopted) + rewritten_rows,
+        "input_rows": total_rows,
+    }
+    return row, version
 
 
 def _summary(
     io: TableIO,
     cfg: PipelineConfig,
     t_start: float,
-    stages_run: dict[str, int],
-    stage_seconds: dict[str, float],
+    results: dict[str, tuple[int, float, bool]],
     phase_seconds: dict[str, float],
-    integrity_ok: bool,
-    kernel_summaries: dict[str, dict],
 ) -> dict:
-    """``run_pipeline``'s summary. ``input_turns`` (deduped) comes from each
+    """``run_pipeline``'s summary from each stage's ``(buckets_run,
+    seconds, integrity_ok)``. ``input_turns`` (deduped) comes from each
     bucket's latest ok tier_1m lineage row, read on the driver — no count
     barrier over norm, no Spark job."""
     latest: dict[int, tuple[int, int]] = {}
@@ -724,11 +905,10 @@ def _summary(
         "input_turns": input_turns,
         "wall_seconds": wall,
         "turns_per_sec": input_turns / wall if wall > 0 else 0.0,
-        "stages": stages_run,
-        "stage_seconds": stage_seconds,
+        "stages": {s: r[0] for s, r in results.items()},
+        "stage_seconds": {s: r[1] for s, r in results.items()},
         "phase_seconds": phase_seconds,
-        "integrity_ok": integrity_ok,
-        "kernel_stages": kernel_summaries,
+        "integrity_ok": all(r[2] for r in results.values()),
     }
 
 
@@ -744,13 +924,18 @@ def run_pipeline(
 
     Returns a summary dict (per-stage remaining-bucket counts and wall times,
     throughput). ``fail_after_stage`` injects a crash after that stage's first
-    wave commits — used by the kill/resume idempotence tests.
+    wave commits — used by the kill/resume idempotence tests; a name that is
+    not a stage of this run raises ``ValueError`` before any Spark job.
     """
     cfg = cfg or PipelineConfig()
+    if fail_after_stage is not None and fail_after_stage not in _dag_stages(cfg):
+        raise ValueError(
+            f"fail_after_stage={fail_after_stage!r} names no stage of this run: "
+            f"{_dag_stages(cfg)}"
+        )
     t_start = time.time()
     spark.sparkContext.setJobDescription("mpnsm:plan")
     done_map = load_lineage_map(io)
-    all_buckets = set(range(cfg.num_buckets))
     if _lineage_covers(done_map, cfg):
         # A no-op re-run: nothing to plan, so no vocabulary scan. The stored
         # dictionaries are still checked (on the driver).
@@ -759,16 +944,8 @@ def run_pipeline(
             io,
             cfg,
             t_start,
-            stages_run={s: 0 for s in _dag_stages(cfg)},
-            stage_seconds={},
-            phase_seconds={
-                "plan_vocab": round(time.time() - t_start, 3),
-                "stage_dag": 0.0,
-            },
-            integrity_ok=True,
-            kernel_summaries={
-                ks.name: _kernel_result(ks.name, 0) for ks in cfg.kernel_stages
-            },
+            {s: (0, 0.0, True) for s in _dag_stages(cfg)},
+            {"plan_vocab": round(time.time() - t_start, 3), "stage_dag": 0.0},
         )
     # Scale-critical split: the wide text column NEVER crosses a shuffle.
     # - raw_aug: salted raw rows incl. text — consumed only by map-only
@@ -795,124 +972,37 @@ def run_pipeline(
         norm = norm.cache()
     t_norm_done = time.time()
 
+    stages = _stage_records(cfg, role_vocab, tool_vocab)
+    tables = {st.name: st.table for st in stages}
+    children: dict[str | None, list[DagStage]] = defaultdict(list)
+    for st in stages:
+        children[st.parent].append(st)
+    # Small stage outputs coalesce to limit file count; raw copies keep full
+    # write parallelism — capping them serializes the biggest I/O in the job.
+    write_width = max(spark.sparkContext.defaultParallelism, 16)
     lock = threading.Lock()
-    stages_run: dict[str, int] = {}
-    stage_seconds: dict[str, float] = {}
+    results: dict[str, tuple[int, float, bool]] = {}
     fresh_outputs: dict[str, DataFrame] = {}
     cached: list[DataFrame] = [norm] if multi_wave else []
     errors: list[BaseException] = []
     futs: list = []
-    integrity_ok: list[bool] = [False]
 
-    def stage_table(stage: str) -> str:
-        return stage if stage != "retention" else "raw_retained"
-
-    def stage_input_rows(stage: str):
-        """Meaningful per-bucket input_rows for lineage: raw turns covered by
-        tier rows; non-gap anchors for gap-fill; encoded points for chunks;
-        retained rows for retention (its input IS what it writes)."""
-        if stage.startswith("tier_"):
-            return F.sum("turn_count")
-        if stage.startswith("gapfill_"):
-            return F.sum(F.when(~F.col("is_gap"), 1).otherwise(0))
-        if stage.startswith("chunks_"):
-            return F.sum("n_points")
-        return F.count(F.lit(1))
-
-    def run_stage(stage: str, produce) -> None:
-        # Label every job this stage submits (Spark UI / event-log / REST
-        # attribution on real clusters; local properties are per-thread).
-        spark.sparkContext.setJobDescription(f"mpnsm:{stage}")
-        done = done_map.get(stage, set())
-        remaining = sorted(all_buckets - done)
+    def source(st: DagStage) -> tuple[DataFrame, bool]:
+        """(rows, clustered) of ``st``'s input, salted: the parent's cached
+        fresh output when this run produced all its buckets (hash-partitioned
+        by conv_id end-to-end — the single exchange), else its storage read
+        with keep-last dedupe (resume path, NOT clustered), always in the
+        STORED (mask-only) schema so every snapshot of a table is uniform."""
+        if st.raw:
+            return raw_aug, False
+        if st.parent is None:
+            return norm, True
         with lock:
-            stages_run[stage] = len(remaining)
-        t0 = time.time()
-        fresh: list[DataFrame] = []
-        size = cfg.wave_size or max(len(remaining), 1)
-        for i in range(0, len(remaining), size):
-            wave = remaining[i : i + size]
-            out = produce(wave).withColumn(
-                "_v", F.lit(io.snapshot_version(stage_table(stage)) + 1)
-            )
-            # Cache ONLY tier outputs: cascades/gap-fill/chunks re-read them.
-            # Leaf outputs (chunks_*, gapfill_*) are read by nothing but the
-            # post-write stats aggregation — caching them costs a columnar
-            # build of millions of rows (plus heap pressure) for one scan;
-            # stats read the just-written snapshot back instead (pruned).
-            # Retention output is the full raw text table — never cache.
-            is_tier = stage.startswith("tier_")
-            if is_tier:
-                out = out.cache()
-                with lock:
-                    cached.append(out)
-            # Small stage outputs coalesce to limit file count; the retention
-            # stage rewrites the (large) raw table and must keep full write
-            # parallelism — capping it serializes the biggest I/O in the job.
-            write_width = max(spark.sparkContext.defaultParallelism, 16)
-            to_write = out if stage == "retention" else out.coalesce(write_width)
-            version = io.append(
-                to_write,
-                stage_table(stage),
-                meta={"stage": stage, "buckets": wave, "tool_vocab": tool_vocab},
-            )
-            # Per-bucket lineage from ONE collect: stats over the cached
-            # output (tiers) or a pruned read-back of the snapshot just
-            # written (leaves); the rows are built and committed on the
-            # driver, and wave buckets with no rows get zeros.
-            if is_tier or stage == "retention":
-                stats_src = out
-            else:
-                try:
-                    stats_src = io.read_snapshot(
-                        spark, stage_table(stage), version
-                    )
-                except FileNotFoundError:  # empty snapshot (no part files)
-                    stats_src = out
-            stats = stats_src.groupBy("bucket_id").agg(
-                F.count(F.lit(1)).alias("output_rows"),
-                stage_input_rows(stage).alias("input_rows"),
-                *(
-                    [
-                        F.sum(
-                            F.length("ts_blob") + F.length("value_blob")
-                        ).alias("encode_bytes")
-                    ]
-                    if stage.startswith("chunks_")
-                    else []
-                ),
-            )
-            # Lineage commits AFTER the data (crash between them only re-runs
-            # the bucket) but OFF the critical path: dependents need the data,
-            # not the lineage row.
-            wall = time.time() - t0
-            submit(partial(commit_wave_lineage, stage, stats, wave, version, wall))
-            fresh.append(out)
-            if fail_after_stage == stage:
-                raise StageFailure(f"injected failure after stage {stage}")
-        if not done and fresh:
-            full = fresh[0]
-            for f in fresh[1:]:
-                full = full.unionByName(f)
-            with lock:
-                fresh_outputs[stage] = full
-        with lock:
-            stage_seconds[stage] = round(time.time() - t0, 3)
-
-    def tier_source(tier: str) -> tuple[DataFrame, bool]:
-        """(df, clustered): cached fresh output when this run produced all
-        buckets (hash-partitioned by conv_id end-to-end — the single
-        exchange), else storage read with keep-last dedupe (resume path,
-        NOT clustered). Always the STORED (mask-only) schema so every
-        snapshot of a tier table is uniform."""
-        with lock:
-            df = fresh_outputs.get(f"tier_{tier}")
+            df = fresh_outputs.get(st.parent)
         if df is not None:
             return df.drop("_v"), True
-        table = f"tier_{tier}"
-        stored = _keep_last(io, table, io.read(spark, table)).drop(
-            "tools", "distinct_tools"
-        )
+        table = tables[st.parent]
+        stored = _keep_last(io, table, io.read(spark, table)).drop("tools", "distinct_tools")
         return with_salt(stored, cfg.num_buckets), False
 
     def in_wave(wave):
@@ -920,187 +1010,104 @@ def run_pipeline(
             return F.lit(True)
         return F.col("bucket_id").isin([int(b) for b in wave])
 
-    def produce_1m(wave):
-        sub = norm.filter(in_wave(wave)).drop("bucket_id")
-        return with_salt(
-            rollup_encoded(sub, "1m", role_vocab, tool_vocab, decode_tools=False),
-            cfg.num_buckets,
-        )
-
-    def make_cascade(tier: str, parent: str):
-        def produce(wave):
-            src, _ = tier_source(parent)
-            src = src.filter(in_wave(wave)).drop("bucket_id")
-            return with_salt(cascade(src, tier, tool_vocab), cfg.num_buckets)
-
-        return produce
-
-    def make_gapfill(tier: str):
-        def produce(wave):
-            # anchored fast path: tier value_avg is never null (turn_count>=1)
-            src, _ = tier_source(tier)
-            src = src.filter(in_wave(wave)).drop("bucket_id")
-            return with_salt(gapfill_anchored(src, tier), cfg.num_buckets)
-
-        return produce
-
-    def make_chunks(tier: str):
-        def produce(wave):
-            src, clustered = tier_source(tier)
-            src = src.filter(in_wave(wave)).drop("bucket_id")
-            out = encode_tier_chunks(
-                src,
-                tier,
-                points_per_chunk=cfg.points_per_chunk,
-                # fresh tier caches are hash-partitioned by conv_id already —
-                # the encode's repartition would be a redundant full exchange
-                assume_clustered=clustered,
-            )
-            return with_salt(out, cfg.num_buckets)
-
-        return produce
-
-    def produce_retention(wave):
-        # Map-only: filter + write, no shuffle of text. Input duplicates (if
-        # any) are retained as-arrived; consumers dedupe on read.
-        sub = raw_aug.filter(in_wave(wave))
-        if cfg.retention_cutoff:
-            sub = sub.filter(F.col("ts") >= F.lit(cfg.retention_cutoff))
-        return sub
-
-    def run_retention_file_level() -> bool:
-        """Iceberg DELETE-WHERE-shaped retention: whole files below the
-        cutoff are dropped by footer stats, untouched files are ADOPTED by
-        reference (metadata-only, zero copy), and only cutoff-straddling
-        files are rewritten + integrity-verified. At 10^12 turns this is the
-        difference between a metadata commit and rewriting the corpus.
-
-        Returns False (caller falls back to the row-level rewrite) when the
-        input is not PROVABLY a bare file scan: no input files; the optimized
-        logical plan carries any node beyond the leaf relation (a Project /
-        Filter — even row-count-preserving ones like a text rewrite — means
-        adopted file bytes would silently diverge from raw_df's rows); the
-        footer row total disagrees with count(); or the session timezone is
-        not UTC (footer stats are normalized to naive UTC — classifying
-        against a cutoff interpreted in another session zone would
-        misclassify files near the boundary).
-        """
-        import datetime as _dt
-
-        spark.sparkContext.setJobDescription("mpnsm:retention")
-        if _stage_done(done_map, "retention", all_buckets):
-            with lock:
-                stages_run["retention"] = 0
-                integrity_ok[0] = True
-            return True
-        if done_map.get("retention"):
-            # partial ROW-level retention from a crashed prior run: adopting
-            # files now would duplicate the already-written buckets — finish
-            # at row level instead.
-            return False
-        # Zero-I/O bare-scan proof: after optimization a pure parquet scan is
-        # a single leaf LogicalRelation (select("*") folds away; ANY
-        # transformation leaves a Project/Filter node). Only then are the
-        # file bytes and raw_df's rows the same thing, which is what adoption
-        # assumes. The row-count cross-check below stays as belt-and-braces.
-        plan = raw_df._jdf.queryExecution().optimizedPlan()
-        if plan.children().size() != 0 or "Relation" not in plan.nodeName():
-            return False
-        if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
-            return False
-        files = [_strip_uri(f) for f in raw_df.inputFiles()]
-        if not files or not all(f.endswith(".parquet") for f in files):
-            return False
-        t0 = time.time()
-        stats = parquet_footer_stats(files)
-        total_rows = sum(s["rows"] for s in stats)
-        if raw_df.count() != total_rows:  # metadata-only count for bare scans
-            return False
-        cutoff = None
-        if cfg.retention_cutoff:
-            cutoff = _dt.datetime.fromisoformat(cfg.retention_cutoff)
-            for s in stats:  # normalize tz-aware footer stats to naive UTC
-                for k in ("ts_min", "ts_max"):
-                    v = s[k]
-                    if v is not None and v.tzinfo is not None:
-                        s[k] = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        dropped, adopted, straddling = classify_files_for_retention(stats, cutoff)
-        assert all(
-            s["ts_max"] is not None and s["ts_max"] < cutoff for s in dropped
-        ), "retention would drop a file not entirely below the cutoff"
-        with lock:
-            stages_run["retention"] = 1
-        rewritten_rows = 0
-        version = 0
-        ok = True
-        if straddling:
-            # raw_df is a bare scan of these files: its schema is theirs.
-            src = spark.read.schema(raw_df.schema).parquet(
-                *[s["path"] for s in straddling]
-            )
-            sub = with_salt(with_value(src), cfg.num_buckets).filter(
-                F.col("ts") >= F.lit(cfg.retention_cutoff)
-            )
-            out = sub.withColumn(
-                "_v", F.lit(io.snapshot_version("raw_retained") + 1)
-            )
-            version = io.append(
-                out,
-                "raw_retained",
-                meta={"stage": "retention", "rewrote": len(straddling)},
-            )
-            int_df, _ = io.read_parts(spark, "raw_retained")
-            # Full text-equality verify on the rewritten subset only — the
-            # adopted files are the SAME bytes by construction and the
-            # dropped files are proven below-cutoff by their footers. The
-            # same pass counts the rewritten rows.
-            ok, rewritten_rows = checksums_match(
-                sub, _keep_last(io, "raw_retained", int_df)
-            )
-        if adopted:
-            version = max(
-                version,
-                io.adopt(
-                    [s["path"] for s in adopted],
-                    "raw_retained",
-                    meta={"stage": "retention", "dropped": len(dropped)},
-                ),
-            )
-        elif not straddling:
-            # Everything dropped: commit an empty snapshot so the table reads.
-            version = io.append(
-                raw_aug.filter(F.lit(False)).withColumn("_v", F.lit(1)),
-                "raw_retained",
-                meta={"stage": "retention", "dropped": len(dropped)},
-            )
-        with lock:
-            stage_seconds["retention"] = round(time.time() - t0, 3)
-            integrity_ok[0] = ok
-        if not ok:
-            raise StageFailure(
-                "rewritten-file text integrity check failed — raw NOT droppable"
-            )
-        # One stage-level row (bucket -1), committed only once the rewrite
-        # verified: a failed check leaves retention to re-run.
+    def commit_lineage(
+        stage: str, stats, wave: list[int], version: int, wall: float
+    ) -> None:
+        """Collect one commit's per-bucket stats (``stats()``; a wave's only
+        lineage job, labelled apart from its stage's jobs) and commit its
+        lineage rows on the driver; wave buckets with no rows get zeros.
+        The end-of-run wait() drains these before the summary reads the
+        table."""
+        spark.sparkContext.setJobDescription("mpnsm:lineage")
+        got = {r["bucket_id"]: r for r in stats()}
+        rows = [got.get(b, {"bucket_id": b, "output_rows": 0}) for b in wave]
         io.append(
-            _lineage_rows(
-                cfg.run_id,
-                "retention",
-                [
-                    {
-                        "bucket_id": -1,
-                        "output_rows": sum(s["rows"] for s in adopted) + rewritten_rows,
-                        "input_rows": total_rows,
-                    }
-                ],
-                time.time() - t0,
-                version,
-            ),
+            _lineage_rows(cfg.run_id, stage, rows, wall, version, len(wave)),
             LINEAGE_TABLE,
         )
-        if fail_after_stage == "retention":
-            raise StageFailure("injected failure after stage retention")
-        return True
+
+    def committed(st: DagStage, stats, wave: list[int], version: int, t0: float) -> None:
+        """The one place a stage's data commit is recorded. Its lineage
+        commits AFTER the data (a crash between them only re-runs the
+        bucket) but OFF the critical path: dependents need the data, not the
+        lineage row. Then the injected crash, if this is its stage."""
+        submit(partial(commit_lineage, st.name, stats, wave, version, time.time() - t0))
+        if fail_after_stage == st.name:
+            raise StageFailure(f"injected failure after stage {st.name}")
+
+    def run_stage(st: DagStage) -> tuple[int, float, bool]:
+        """Run ``st`` over the buckets its lineage does not cover, one
+        commit per wave: ``(buckets_run, seconds, integrity_ok)``."""
+        # Label every job this stage submits (Spark UI / event-log / REST
+        # attribution on real clusters; local properties are per-thread).
+        spark.sparkContext.setJobDescription(f"mpnsm:{st.name}")
+        t0 = time.time()
+        done = done_map.get(st.name, set())
+        remaining = _remaining(done, cfg.num_buckets)
+        if not remaining:
+            return 0, 0.0, True
+        if st.raw and not done:
+            # A partial row-level copy from a crashed run must be finished
+            # at row level: adopting files now would duplicate its buckets.
+            adopted = _retain_files(spark, io, raw_df, raw_aug, cfg, st.table)
+            if adopted is not None:
+                row, version = adopted
+                committed(st, lambda: [row], [-1], version, t0)
+                return 1, round(time.time() - t0, 3), True
+        rows, clustered = source(st)
+        has_children = bool(children[st.name])
+        fresh: list[DataFrame] = []
+        size = cfg.wave_size or len(remaining)
+        for i in range(0, len(remaining), size):
+            wave = remaining[i : i + size]
+            out = with_salt(
+                st.op(rows.filter(in_wave(wave)).drop("bucket_id"), clustered),
+                cfg.num_buckets,
+            ).withColumn("_v", F.lit(io.snapshot_version(st.table) + 1))
+            # Cache ONLY outputs that children re-read. Leaf outputs are read
+            # by nothing but the post-write stats aggregation — caching them
+            # costs a columnar build of millions of rows (plus heap pressure)
+            # for one scan; stats read the just-written snapshot back
+            # instead (pruned).
+            if has_children:
+                out = out.cache()
+                with lock:
+                    cached.append(out)
+            version = io.append(
+                out if st.raw else out.coalesce(write_width),
+                st.table,
+                meta={"stage": st.name, "buckets": wave, "tool_vocab": tool_vocab},
+            )
+            stats_src = out
+            if not has_children:
+                try:
+                    stats_src = io.read_snapshot(spark, st.table, version)
+                except FileNotFoundError:  # empty snapshot (no part files)
+                    pass
+            stats = stats_src.groupBy("bucket_id").agg(
+                F.count(F.lit(1)).alias("output_rows"),
+                st.input_rows.alias("input_rows"),
+                *st.stats,
+            )
+            committed(st, lambda s=stats: [r.asDict() for r in s.collect()], wave, version, t0)
+            fresh.append(out)
+        if has_children and not done:
+            full = fresh[0]
+            for f in fresh[1:]:
+                full = full.unionByName(f)
+            with lock:
+                fresh_outputs[st.name] = full
+        if st.raw and not verify_turn_integrity(spark, io, st.op(raw_aug, False)):
+            raise StageFailure("per-turn text integrity check failed — raw NOT droppable")
+        return len(remaining), round(time.time() - t0, 3), True
+
+    def start(st: DagStage) -> None:
+        """Run ``st``, then start its children: their input is committed."""
+        result = run_stage(st)
+        with lock:
+            results[st.name] = result
+        for child in children[st.name]:
+            submit(partial(start, child))
 
     def guarded(fn):
         try:
@@ -1113,66 +1120,12 @@ def run_pipeline(
         with lock:
             futs.append(ex.submit(guarded, fn))
 
-    def commit_wave_lineage(
-        stage: str, stats: DataFrame, wave: list[int], version: int, wall: float
-    ) -> None:
-        """Collect one wave's per-bucket stats (the wave's only lineage job,
-        labelled apart from its stage's jobs) and commit its lineage rows on
-        the driver. The end-of-run wait() drains these before the summary
-        reads the table."""
-        spark.sparkContext.setJobDescription("mpnsm:lineage")
-        got = {r.bucket_id: r.asDict() for r in stats.collect()}
-        rows = [got.get(b, {"bucket_id": b, "output_rows": 0}) for b in wave]
-        io.append(
-            _lineage_rows(cfg.run_id, stage, rows, wall, version, len(wave)),
-            LINEAGE_TABLE,
-        )
-
-    # --- stage DAG -----------------------------------------------------------
-    # tier_1m is the root: everything depends on it, run it inline in the main
-    # thread (its raw scan parallelizes across the cluster anyway); dependent
-    # stages + all lineage commits go through the driver-thread pool. The
-    # integrity verify chains off retention so it overlaps the tier branches
-    # instead of serializing after the DAG.
+    # The root (tier_1m) runs inline in the main thread — its raw scan
+    # parallelizes across the cluster anyway; every other stage and every
+    # lineage commit goes through the driver-thread pool.
     with ThreadPoolExecutor(max_workers=12) as ex:
-
-        def chain_tier(tier: str, parent: str):
-            def run():
-                run_stage(f"tier_{tier}", make_cascade(tier, parent))
-                if tier in cfg.gapfill_tiers:
-                    submit(lambda: run_stage(f"gapfill_{tier}", make_gapfill(tier)))
-                submit(lambda: run_stage(f"chunks_{tier}", make_chunks(tier)))
-
-            return run
-
-        def retention_then_verify():
-            if run_retention_file_level():
-                return
-            run_stage("retention", produce_retention)
-            ok = verify_turn_integrity(
-                spark,
-                io,
-                raw_aug.filter(F.col("ts") >= F.lit(cfg.retention_cutoff))
-                if cfg.retention_cutoff
-                else raw_aug,
-            )
-            with lock:
-                integrity_ok[0] = ok
-            if not ok:
-                raise StageFailure(
-                    "per-turn text integrity check failed — raw NOT droppable"
-                )
-
-        guarded(lambda: run_stage("tier_1m", produce_1m))
-        if not errors:
-            submit(lambda: run_stage("chunks_1m", make_chunks("1m")))
-            # Both cascades hang off the cached 1m tier so they parallelize;
-            # 1d-from-1m is exactly consistent with 1d-from-1h (associative
-            # columns) and keeps the critical path two stages deep.
-            submit(chain_tier("1h", "1m"))
-            submit(chain_tier("1d", "1m"))
-            submit(retention_then_verify)
-
+        for root in children[None]:
+            guarded(partial(start, root))
         while True:
             with lock:
                 pending = [f for f in futs if not f.done()]
@@ -1180,33 +1133,17 @@ def run_pipeline(
                 break
             wait(pending)
 
+    for df in cached:
+        df.unpersist()
     if errors:
-        for df in cached:
-            df.unpersist()
         raise errors[0]
-
-    # Per-series kernel stages (error-isolated) run after the tier DAG so
-    # they can consume the cached tier frames; a poisoned series marks its
-    # bucket status="error" in lineage without failing the run.
-    kernel_summaries: dict[str, dict] = {}
-    for ks in cfg.kernel_stages:
-        src = norm if ks.source == "norm" else tier_source(ks.source)[0]
-        kernel_summaries[ks.name] = run_kernel_stage(spark, io, ks, src, cfg)
-
-    t_dag_done = time.time()
-    summary = _summary(
+    return _summary(
         io,
         cfg,
         t_start,
-        stages_run=stages_run,
-        stage_seconds=stage_seconds,
-        phase_seconds={
+        {st.name: results[st.name] for st in stages},
+        {
             "plan_vocab": round(t_norm_done - t_start, 3),
-            "stage_dag": round(t_dag_done - t_norm_done, 3),
+            "stage_dag": round(time.time() - t_norm_done, 3),
         },
-        integrity_ok=integrity_ok[0],
-        kernel_summaries=kernel_summaries,
     )
-    for df in cached:
-        df.unpersist()
-    return summary

@@ -201,20 +201,28 @@ class TableIO:
         ``files`` must be absolute paths. Each adopt supersedes any previous
         adopt on the table (read_parts keeps only the latest external
         snapshot), so a crash-and-retry re-adopt is idempotent.
+
+        ``meta["schema"]``, the files' Spark schema as JSON (the adopting
+        scan's), is recorded as the manifest's schema, so reads of the
+        files plan without a schema-inference job.
         """
         if self.iceberg:
             raise NotImplementedError("use Iceberg add_files procedure")
         bad = [f for f in files if not os.path.isabs(f)]
         if bad:
             raise ValueError(f"adopt requires absolute paths, got: {bad[:3]}")
+        meta = dict(meta or {})
+        schema = meta.pop("schema", None)
         with self._lock:
             version = self.snapshot_version(table) + 1
             manifest = {
                 "version": version,
                 "files": sorted(files),
                 "committed_at": time.time(),
-                "meta": {**(meta or {}), "external": True},
+                "meta": {**meta, "external": True},
             }
+            if schema is not None:
+                manifest["schema"] = schema
             tmp = os.path.join(self._mdir(table), f".tmp_v{version}.json")
             with open(tmp, "w") as fh:
                 json.dump(manifest, fh)
@@ -230,8 +238,8 @@ class TableIO:
         manifests = self._manifests(table)
         int_manifests = [m for m in manifests if not m["meta"].get("external")]
         internal = [f for m in int_manifests for f in m["files"]]
-        ext_manifests = [m for m in manifests if m["meta"].get("external")]
-        external = ext_manifests[-1]["files"] if ext_manifests else []
+        ext_manifests = [m for m in manifests if m["meta"].get("external")][-1:]
+        external = ext_manifests[0]["files"] if ext_manifests else []
         ddir = self._ddir(table)
         int_df = (
             self._reader(spark, int_manifests).parquet(
@@ -240,7 +248,7 @@ class TableIO:
             if internal
             else None
         )
-        ext_df = spark.read.parquet(*external) if external else None
+        ext_df = self._reader(spark, ext_manifests).parquet(*external) if external else None
         if int_df is None and ext_df is None:
             raise FileNotFoundError(f"table {table} has no committed snapshots")
         return int_df, ext_df

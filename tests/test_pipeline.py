@@ -400,7 +400,7 @@ def test_every_lineage_file_has_one_schema(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from mpnsm_spark.generator import generate_transcripts, with_value
-    from mpnsm_spark.plans.pipeline import KernelStage
+    from mpnsm_spark.plans.pipeline import KernelStage, run_kernel_stage
     from mpnsm_spark.schema import TRANSCRIPT_SCHEMA
     from mpnsm_spark.streaming.rollup_stream import stream_to_tableio
 
@@ -414,8 +414,9 @@ def test_every_lineage_file_has_one_schema(spark, tmp_path):
 
     stage = KernelStage(name="totals", fn=kernel, output_schema="conv_id string, n long")
     io = TableIO(str(tmp_path / "wh"))
-    summary = run_pipeline(spark, raw, io, _cfg(kernel_stages=(stage,)))
-    assert summary["kernel_stages"]["totals"]["errored_series"] == 1
+    run_pipeline(spark, raw, io, _cfg())
+    result = run_kernel_stage(spark, io, stage, read_tier(spark, io, "1m"), _cfg())
+    assert result["errored_series"] == 1
 
     src = str(tmp_path / "src")
     pdf = pd.DataFrame(
@@ -457,20 +458,28 @@ def test_every_lineage_file_has_one_schema(spark, tmp_path):
     assert stream_rows.output_rows.sum() == 1 and stream_rows.error_class.isna().all()
 
 
-def test_lineage_values_match_stored_tables(spark, tmp_path):
+def _check_lineage_values(spark, tmp_path, gapfill_tiers):
     """A fresh run over 3 conversations in 8 buckets (most of them empty):
-    every tier, gap-fill and chunk stage has exactly one ok lineage row per
-    bucket, and each value matches the stage's stored table."""
+    the lineage's stages, ``_dag_stages`` and the summary's stages are one
+    set; every tier, gap-fill and chunk stage has exactly one ok lineage row
+    per bucket, and each value matches the stage's stored table."""
     import pandas as pd
 
     from mpnsm_spark.generator import generate_transcripts, with_value
+    from mpnsm_spark.plans.pipeline import _dag_stages
 
     raw = with_value(generate_transcripts(spark, n_convs=3, n_turns=300, seed=11))
     io = TableIO(str(tmp_path / "wh"))
-    run_pipeline(spark, raw, io, _cfg(num_buckets=8))
+    cfg = _cfg(num_buckets=8, gapfill_tiers=gapfill_tiers)
+    summary = run_pipeline(spark, raw, io, cfg)
     lin = io.read(spark, LINEAGE_TABLE).toPandas()
     empty = 0
-    stages = ("tier_1m", "tier_1h", "tier_1d", "gapfill_1d", "chunks_1m", "chunks_1h", "chunks_1d")
+    stages = (
+        "tier_1m", "tier_1h", "tier_1d", *(f"gapfill_{t}" for t in gapfill_tiers),
+        "chunks_1m", "chunks_1h", "chunks_1d",
+    )
+    assert set(lin.stage) == set(_dag_stages(cfg)) == set(summary["stages"])
+    assert set(lin.stage) == {*stages, "retention"}
     for stage in stages:
         stored = io.read(spark, stage).toPandas()
         by_bucket = stored.groupby("bucket_id")
@@ -502,6 +511,14 @@ def test_lineage_values_match_stored_tables(spark, tmp_path):
             assert r.n_errors == 0 and pd.isna(r.error_class), (stage, b)
         empty += int((rows.output_rows == 0).sum())
     assert empty > 0  # empty buckets are covered too
+
+
+def test_lineage_values_match_stored_tables(spark, tmp_path):
+    _check_lineage_values(spark, tmp_path, ("1d",))
+
+
+def test_lineage_values_match_stored_tables_without_gapfill(spark, tmp_path):
+    _check_lineage_values(spark, tmp_path, ())
 
 
 def _jobs_of(spark, fn):
@@ -547,6 +564,22 @@ def test_bookkeeping_submits_no_spark_jobs(spark, tmp_path):
     assert jobs == 0
 
 
+def test_unknown_fail_after_stage_raises_before_any_job(spark, transcripts, tmp_path):
+    """A ``fail_after_stage`` that names no stage of the run (a misspelling,
+    or a gap-fill stage the config does not run) raises before any Spark
+    job, instead of running the whole pipeline without the crash."""
+    io = TableIO(str(tmp_path / "wh"))
+
+    def run(name):
+        with pytest.raises(ValueError, match=name):
+            run_pipeline(spark, transcripts, io, _cfg(), fail_after_stage=name)
+
+    for name in ("tier_1hh", "gapfill_1h"):
+        jobs, _ = _jobs_of(spark, lambda: run(name))
+        assert jobs == 0, name
+    assert not io.exists(LINEAGE_TABLE)
+
+
 def test_run_pipeline_restores_caller_job_description(spark, tmp_path):
     """Stages label the thread they run on; the caller's own job description
     comes back on return, so its later jobs are not booked to a stage."""
@@ -565,7 +598,8 @@ def test_run_pipeline_restores_caller_job_description(spark, tmp_path):
 def test_kernel_stage_error_lineage_and_resume(spark, transcripts, tmp_path):
     """A poisoned series in a kernel stage: the run completes, the poisoned
     bucket gets a status='error' lineage row (stage, bucket_id, error class),
-    the summary reports it, and resume reprocesses ONLY the errored bucket."""
+    the stage's result reports it, and resume reprocesses ONLY the errored
+    bucket."""
     from mpnsm_spark.plans.pipeline import KernelStage, run_kernel_stage
 
     poison_conv = transcripts.select("conv_id").first().conv_id
@@ -585,14 +619,11 @@ def test_kernel_stage_error_lineage_and_resume(spark, transcripts, tmp_path):
             name="per_conv_totals",
             fn=make_kernel(poison),
             output_schema="conv_id string, n long",
-            source="1m",
         )
 
     io = TableIO(str(tmp_path / "whk"))
-    summary = run_pipeline(
-        spark, transcripts, io, _cfg(kernel_stages=(stage(True),))
-    )
-    ks = summary["kernel_stages"]["per_conv_totals"]
+    summary = run_pipeline(spark, transcripts, io, _cfg())
+    ks = run_kernel_stage(spark, io, stage(True), read_tier(spark, io, "1m"), _cfg())
     assert ks["errored_series"] == 1
     assert list(ks["buckets_error"].values()) == ["ValueError"]
     bad_bucket = next(iter(ks["buckets_error"]))
@@ -605,12 +636,10 @@ def test_kernel_stage_error_lineage_and_resume(spark, transcripts, tmp_path):
     assert summary["integrity_ok"]
 
     # resume with a healthy kernel: ONLY the errored bucket reprocesses
-    summary2 = run_pipeline(
-        spark, transcripts, io, _cfg(kernel_stages=(stage(False),))
-    )
-    ks2 = summary2["kernel_stages"]["per_conv_totals"]
+    ks2 = run_kernel_stage(spark, io, stage(False), read_tier(spark, io, "1m"), _cfg())
     assert ks2["buckets_run"] == 1
     assert ks2["buckets_error"] == {}
+    summary2 = run_pipeline(spark, transcripts, io, _cfg())
     assert all(v == 0 for v in summary2["stages"].values())
     # stage table now covers every conversation exactly once (keep-last)
     from mpnsm_spark.plans.pipeline import _latest_snapshot
@@ -634,7 +663,6 @@ def test_kernel_stage_sub_splits_hot_conversations(spark, transcripts, tmp_path)
             name=name,
             fn=kernel,
             output_schema="conv_id string, n long",
-            source="norm",
             order_col="turn_idx",
             split_threshold=thr,
         )
@@ -672,7 +700,6 @@ def test_kernel_stage_split_with_bucket_start_default(spark, transcripts, tmp_pa
         name="tier_counts_split",
         fn=kernel,
         output_schema="conv_id string, n long",
-        source="1m",
         split_threshold=25,  # order_col left at the 'bucket_start' default
     )
     io = TableIO(str(tmp_path / "whts"))

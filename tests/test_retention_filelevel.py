@@ -151,6 +151,25 @@ def test_rowcount_preserving_rewrite_falls_back_to_row_level(spark, bronze, tmp_
     assert stored.count() == raw.count()
 
 
+def test_adopted_files_read_without_schema_job(spark, bronze, tmp_path):
+    """The adopt manifest records the adopting scan's schema, so building a
+    read of the retained raw turns (adopted files and a rewrite) submits no
+    schema-inference job and reads the same schema and rows as inference."""
+    from .test_pipeline import _jobs_of
+
+    io = TableIO(str(tmp_path / "wh"))
+    raw = spark.read.parquet(bronze)
+    run_pipeline(spark, raw, io, _cfg(retention_cutoff=CUTOFF))
+    _, ext_df = io.read_parts(spark, "raw_retained")
+    assert ext_df is not None  # some files were adopted
+    jobs, retained = _jobs_of(spark, lambda: read_raw_retained(spark, io))
+    assert jobs == 0
+    want = with_value(raw).filter(F.col("ts") >= CUTOFF)
+    assert retained.schema == want.schema
+    cols = ["conv_id", "turn_idx", "text", "ts"]
+    assert sorted(retained.select(cols).collect()) == sorted(want.select(cols).collect())
+
+
 class _TamperingIO(TableIO):
     """Corrupts the straddling-file rewrite of ``raw_retained`` as it
     commits; every other table is written untouched."""
