@@ -20,13 +20,17 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mpnsm_spark.sources.parquet_schemas import ParquetSchemas
+
 # --------------------------------------------------------------------- helpers
 
 DEC = "decimal(20,6)"
+_SCHEMAS = ParquetSchemas()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """A table of the SF directory; builds after the first plan with no job."""
+    return _SCHEMAS.read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _dsum(col: str):

@@ -34,7 +34,9 @@ def resolve_config(
     Output: units + one resolved value per config col (finest match wins).
 
     Raises on uncovered units when ``require_full_coverage`` (the reference's
-    coverage assert, ``config.py:71-73``).
+    coverage assert, ``config.py:71-73``). The check is one ``limit(1)``
+    collect of an uncovered unit (its broadcast joins add their own jobs),
+    run at call time; the row it finds is the error's example.
     """
     out = units
     level_names: list[str] = []
@@ -56,12 +58,10 @@ def resolve_config(
         any_null = F.lit(False)
         for c in config_cols:
             any_null = any_null | F.col(c).isNull()
-        missing = out.filter(any_null)
-        n_missing = missing.limit(1).count()
-        if n_missing:
+        example = out.filter(any_null).limit(1).collect()
+        if example:
             raise ValueError(
-                "config does not cover all units "
-                f"(example: {missing.limit(1).collect()[0].asDict()})"
+                f"config does not cover all units (example: {example[0].asDict()})"
             )
     return out
 

@@ -2,7 +2,8 @@
 
 - :func:`iqr_outliers` — per-series IQR fence flags (reference quantile caps,
   ``/root/reference/mpnsm/time_series/model.py:245-277``, ``utils.py:260-271``)
-  as pure SQL: one grouped quantile agg broadcast back via join.
+  as pure SQL: the quartiles are window aggregates over the series, so the
+  fences need no separate aggregate, join or eager job.
 - :func:`tail_trim` — the reference's iterative alternating extreme-trim
   (``utils.py:289-299``) in CLOSED FORM: dropping alternating extremes until
   ≤ max_keep remain is equivalent to dropping ceil(k/2) from the top and
@@ -25,33 +26,27 @@ from pyspark.sql import functions as F
 from mpnsm_spark.operators.skew import apply_per_series
 
 
-def _iqr_fences(df: DataFrame, key: str, value_col: str) -> DataFrame:
-    """Per-series [q1, q3] fence aggregate (one row per series)."""
-    return df.groupBy(key).agg(
-        F.percentile(value_col, 0.25).alias("_q1"),
-        F.percentile(value_col, 0.75).alias("_q3"),
-    )
-
-
 def iqr_outliers(
     df: DataFrame,
     key: str = "conv_id",
     value_col: str = "value",
     k: float = 1.5,
-    fences: DataFrame | None = None,
 ) -> DataFrame:
     """Flag rows outside [q1 - k·IQR, q3 + k·IQR] within their series.
 
-    ``fences``: pre-computed :func:`_iqr_fences` frame (possibly persisted)
-    so multi-pass callers don't re-aggregate the corpus per pass."""
-    if fences is None:
-        fences = _iqr_fences(df, key, value_col)
-    out = df.join(F.broadcast(fences), key)
+    The quartiles are exact ``percentile`` aggregates over
+    ``Window.partitionBy(key)``: the same values a grouped aggregate gives,
+    computed in the one pass that also flags the rows. Every input row is
+    kept; rows with a null key are one series."""
+    w = Window.partitionBy(key)
+    q1 = F.percentile(value_col, 0.25).over(w)
+    q3 = F.percentile(value_col, 0.75).over(w)
     iqr = F.col("_q3") - F.col("_q1")
     lo = F.col("_q1") - k * iqr
     hi = F.col("_q3") + k * iqr
     return (
-        out.withColumn("is_outlier", (F.col(value_col) < lo) | (F.col(value_col) > hi))
+        df.withColumns({"_q1": q1, "_q3": q3})
+        .withColumn("is_outlier", (F.col(value_col) < lo) | (F.col(value_col) > hi))
         .withColumn("fence_lo", lo)
         .withColumn("fence_hi", hi)
         .drop("_q1", "_q3")
@@ -108,20 +103,13 @@ def outlier_dummies(
     driver decision aggregate, bounded by ``max_dummies`` (more distinct
     dates than that raises: a dummy-per-date design is only sane for a
     bounded spike set; use mode='drop'/'flag' otherwise). The dummy columns
-    themselves are one ``F.when`` projection each — no extra shuffle beyond
-    the fence aggregation.
+    themselves are one ``F.when`` projection each over
+    :func:`iqr_outliers`' window fences.
 
-    The fence aggregate is computed ONCE and materialized (one row per
-    series): both the distinct-outlier-dates driver decision below and the
-    caller's eventual execution of the returned frame need it, and without
-    the materialization each pass re-aggregates the whole input.
-    localCheckpoint rather than persist: a persisted frame stays registered
-    with the CacheManager until an explicit unpersist nobody here can
-    schedule (the returned lazy frame still references it), while a
-    checkpointed RDD is released by the ContextCleaner as soon as the
-    caller drops the frame — no per-call cache leak."""
-    fences = _iqr_fences(df, key, value_col).localCheckpoint(eager=True)
-    flagged = iqr_outliers(df, key=key, value_col=value_col, k=k, fences=fences)
+    Building runs one collect, the distinct outlier dates, which is
+    inherent: the output's columns depend on the data. Executing the
+    returned frame computes the fences again in its own single pass."""
+    flagged = iqr_outliers(df, key=key, value_col=value_col, k=k)
     dates = sorted(
         r[0]
         for r in flagged.filter(F.col("is_outlier"))

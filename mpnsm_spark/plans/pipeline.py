@@ -708,7 +708,15 @@ def _stage_records(
     (1d-from-1m equals 1d-from-1h on associative columns and keeps the
     critical path two stages deep); each tier's Gorilla chunks and, for
     ``cfg.gapfill_tiers``, its gap-fill; retention once the 1m tier over
-    the raw turns is committed."""
+    the raw turns is committed. A ``cfg.gapfill_tiers`` entry naming a tier
+    the DAG does not gap-fill raises ``ValueError``."""
+    cascaded = ("1h", "1d")
+    unknown = sorted(set(cfg.gapfill_tiers) - set(cascaded))
+    if unknown:
+        raise ValueError(
+            f"gapfill_tiers={cfg.gapfill_tiers!r}: the DAG gap-fills only the "
+            f"tiers {cascaded}, not {unknown}"
+        )
     turns = F.sum("turn_count")
 
     def tier(t: str, parent: str | None, op) -> DagStage:
@@ -752,7 +760,7 @@ def _stage_records(
         ),
         chunks("1m"),
     ]
-    for t in ("1h", "1d"):
+    for t in cascaded:
         stages.append(tier(t, "tier_1m", lambda df, _, t=t: cascade(df, t, tool_vocab)))
         if t in cfg.gapfill_tiers:
             stages.append(gapfill(t))
@@ -928,10 +936,11 @@ def run_pipeline(
     not a stage of this run raises ``ValueError`` before any Spark job.
     """
     cfg = cfg or PipelineConfig()
-    if fail_after_stage is not None and fail_after_stage not in _dag_stages(cfg):
+    stage_names = _dag_stages(cfg)  # checks cfg.gapfill_tiers before any job
+    if fail_after_stage is not None and fail_after_stage not in stage_names:
         raise ValueError(
             f"fail_after_stage={fail_after_stage!r} names no stage of this run: "
-            f"{_dag_stages(cfg)}"
+            f"{stage_names}"
         )
     t_start = time.time()
     spark.sparkContext.setJobDescription("mpnsm:plan")
@@ -944,7 +953,7 @@ def run_pipeline(
             io,
             cfg,
             t_start,
-            {s: (0, 0.0, True) for s in _dag_stages(cfg)},
+            {s: (0, 0.0, True) for s in stage_names},
             {"plan_vocab": round(time.time() - t_start, 3), "stage_dag": 0.0},
         )
     # Scale-critical split: the wide text column NEVER crosses a shuffle.

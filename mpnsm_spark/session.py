@@ -63,6 +63,16 @@ def get_spark(
         # the default LRU evicts every class before its next use and each
         # run pays Janino plus JIT for ~80 classes again.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # PySpark's Column calls otherwise each capture the Python call site
+        # (several py4j round trips and an `import IPython` attempt): building
+        # 100 `col + lit` expressions took 204 ms with it, 54 ms without
+        # (local[1], 4-core host). Given up: a runtime (ANSI) error no longer
+        # carries its DataFrameQueryContext, the Python file:line of the
+        # failing expression; it keeps its error class and the expression.
+        # PySpark reads this setting once per process, at the first Column
+        # call (false when no session exists yet). It is a static setting:
+        # a caller's `extra_conf` overrides it for a new session only.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Local mode = driver-only JVM: the heap must cover all concurrent
         # task memory + cached tables, or high core counts GC-thrash.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))

@@ -83,3 +83,34 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert "conv_id" in df.columns and "bucket_start" in df.columns
+
+
+# Spark jobs a warm build of each row still submits: decisions its answer
+# depends on (the outlier dates, the config coverage check with its three
+# broadcasts, IVF centroid training, cluster label propagation). Every other
+# row builds without a job once its tables' schemas are cached.
+WARM_BUILD_JOBS = {
+    "ivf_refined_topk": 6,
+    "config_inherit": 4,
+    "outlier_dummies": 3,
+    "embed_near_dup_clusters": 3,
+    "dup_clusters": 2,
+}
+
+
+def test_warm_builds_submit_only_inherent_jobs(spark):
+    """Build each row twice and count the second build's Spark jobs (those
+    outside a job group: a streaming row's micro-batches are not counted)."""
+    from .test_pipeline import _jobs_of
+
+    got = {}
+    for name, fn in entrymod.queries().items():
+        if name == "pipeline_full":
+            continue
+        fn(spark, SF_DIR)
+        got[name] = _jobs_of(spark, lambda fn=fn: fn(spark, SF_DIR))[0]
+    busy = {k: v for k, v in got.items() if v}
+    assert sum(got.values()) <= sum(WARM_BUILD_JOBS.values()), busy
+    assert set(busy) <= set(WARM_BUILD_JOBS), busy
+    for name in ("outlier_dummies", "config_inherit"):
+        assert got[name] == WARM_BUILD_JOBS[name], busy

@@ -66,6 +66,51 @@ def test_iqr_outliers_flags_extremes(spark):
     assert not out.loc[0:5, "is_outlier"].any()
 
 
+def test_outlier_operators_share_the_grouped_quartile_fences(spark):
+    """``iqr_outliers`` and ``outlier_dummies`` flag every row with the same
+    fences, bitwise equal to a grouped ``percentile`` aggregate joined back
+    (the former fence path, kept here as the reference)."""
+    from mpnsm_spark.operators.outliers import outlier_dummies
+
+    rng = np.random.default_rng(11)
+    rows = [
+        (f"c{c}", i, f"2025-01-{1 + i % 9:02d}", float(v))
+        for c in range(5)
+        for i, v in enumerate(rng.normal(0, 1, 40).round(3) * (1 + c))
+    ] + [("c0", 99, "2025-01-02", 40.0), ("c3", 99, "2025-01-07", -60.0)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, day string, value double"
+    ).withColumn("day", F.to_timestamp("day"))
+    cols = ["conv_id", "turn_idx", "is_outlier", "fence_lo", "fence_hi"]
+
+    q = df.groupBy("conv_id").agg(
+        F.percentile("value", 0.25).alias("q1"), F.percentile("value", 0.75).alias("q3")
+    )
+    iqr = F.col("q3") - F.col("q1")
+    lo, hi = F.col("q1") - 1.5 * iqr, F.col("q3") + 1.5 * iqr
+    want = df.join(q, "conv_id").select(
+        "conv_id",
+        "turn_idx",
+        ((F.col("value") < lo) | (F.col("value") > hi)).alias("is_outlier"),
+        lo.alias("fence_lo"),
+        hi.alias("fence_hi"),
+    )
+    flagged = iqr_outliers(df).select(cols)
+    dummies = outlier_dummies(df, date_col="day").select(cols)
+
+    def ordered(frame):
+        return frame.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+    expect = ordered(want)
+    assert expect["is_outlier"].sum() >= 2
+    pd.testing.assert_frame_equal(ordered(flagged), expect, check_exact=True)
+    pd.testing.assert_frame_equal(ordered(dummies), expect, check_exact=True)
+
+    n_dates = iqr_outliers(df).filter("is_outlier").select("day").distinct().count()
+    with pytest.raises(ValueError, match="max_dummies"):
+        outlier_dummies(df, date_col="day", max_dummies=n_dates - 1)
+
+
 def test_tail_trim_matches_iterative_reference(spark):
     rng = np.random.default_rng(3)
     vals = rng.normal(0, 10, 25).round(2)

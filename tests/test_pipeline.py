@@ -580,6 +580,22 @@ def test_unknown_fail_after_stage_raises_before_any_job(spark, transcripts, tmp_
     assert not io.exists(LINEAGE_TABLE)
 
 
+def test_unknown_gapfill_tier_raises_before_any_job(spark, transcripts, tmp_path):
+    """A ``gapfill_tiers`` entry naming a tier the DAG does not gap-fill
+    (1m, a misspelling) raises before any Spark job, instead of running the
+    pipeline without that gap-fill."""
+    io = TableIO(str(tmp_path / "wh"))
+
+    def run(tiers):
+        with pytest.raises(ValueError, match="gapfill_tiers"):
+            run_pipeline(spark, transcripts, io, _cfg(gapfill_tiers=tiers))
+
+    for tiers in (("1m", "1h"), ("1hh",)):
+        jobs, _ = _jobs_of(spark, lambda: run(tiers))
+        assert jobs == 0, tiers
+    assert not io.exists(LINEAGE_TABLE)
+
+
 def test_run_pipeline_restores_caller_job_description(spark, tmp_path):
     """Stages label the thread they run on; the caller's own job description
     comes back on return, so its later jobs are not booked to a stage."""

@@ -1,7 +1,11 @@
-"""``local_frame``: driver-side rows as an Arrow-backed ``LocalRelation``."""
+"""``get_spark`` settings, and ``local_frame``: driver-side rows as an Arrow-backed
+``LocalRelation``."""
 
 import ast
+import os
 import pathlib
+import subprocess
+import sys
 
 import pytest
 
@@ -115,3 +119,23 @@ def test_repeat_run_compiles_no_new_classes(spark, tmp_path):
     before = _compiled_classes(spark)
     flow(1)
     assert _compiled_classes(spark) - before == 0
+
+
+def test_get_spark_turns_off_column_call_site_capture(spark):
+    """``get_spark`` sets PySpark's per-Column call-site capture off by
+    default, and a caller's ``extra_conf`` can turn it back on. The setting
+    is static, so the override needs a session of its own (a subprocess)."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    code = (
+        "from mpnsm_spark.session import get_spark\n"
+        f"s = get_spark('override', cores=1, extra_conf={{{key!r}: 'true'}})\n"
+        f"print('conf=' + s.conf.get({key!r}))\n"
+        "s.stop()\n"
+    )
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "512m"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, env=env, capture_output=True,
+        text=True, timeout=300, check=True,
+    ).stdout
+    assert "conf=true" in out.splitlines(), out
